@@ -194,30 +194,6 @@ def test_cc_lpa_local_mode_via_file_uri(spark, tmp_path, monkeypatch):
     assert list((tmp_path / "cc_uri").glob("*/superstep=*/state/rank-*.f64"))
 
 
-def test_cc_local_mode_kill_resume(spark, tmp_path):
-    """A cc run killed mid-algorithm resumes from the last committed
-    superstep and still reaches the oracle fixpoint."""
-    from tiktok_whisper_spark.operators.edges import turn_adjacency_edges, turn_tool_edges
-    from tiktok_whisper_spark.sources.catalog import CheckpointStore
-
-    t = datagen.transcripts(spark, n_convs=40, seed=9)
-    e = (
-        turn_adjacency_edges(t, include_home=True)
-        .unionByName(turn_tool_edges(t, include_home=True))
-        .localCheckpoint()
-    )
-    store = CheckpointStore(str(tmp_path / "cc_resume"))
-    partial = connected_components(
-        e, scatter_mode="local", store=store, run_id="r", resume=False, max_iter=1
-    )
-    assert not partial.converged and partial.supersteps == 1
-    resumed = connected_components(e, scatter_mode="local", store=store, run_id="r")
-    assert resumed.converged and resumed.resumed_from == 1
-    got = {r["vid"]: r["label"] for r in resumed.state.collect()}
-    rows = [(r["src"], r["dst"], r["weight"]) for r in e.select("src", "dst", "weight").collect()]
-    assert got == cc_oracle(rows)
-
-
 def test_lpa_local_mode_matches_dataframe_and_oracle(spark, tmp_path):
     """scatter_mode='local' LPA must reproduce the DataFrame path's labels
     EXACTLY — synchronous updates, weighted votes, max-then-min tie-break —
@@ -247,32 +223,6 @@ def test_lpa_local_mode_matches_dataframe_and_oracle(spark, tmp_path):
         assert run_l.converged == run_df.converged
     triples = [(r["src"], r["dst"], r["weight"]) for r in e.select("src", "dst", "weight").collect()]
     assert got == lpa_oracle(triples, max_iter=10)
-
-
-def test_lpa_local_mode_kill_resume(spark, tmp_path):
-    from tiktok_whisper_spark.operators.edges import turn_adjacency_edges, turn_tool_edges
-    from tiktok_whisper_spark.sources.catalog import CheckpointStore
-
-    t = datagen.transcripts(spark, n_convs=40, seed=9)
-    e = (
-        turn_adjacency_edges(t, include_home=True)
-        .unionByName(turn_tool_edges(t, include_home=True))
-        .localCheckpoint()
-    )
-    store = CheckpointStore(str(tmp_path / "lpa_resume"))
-    partial = label_propagation(
-        e, scatter_mode="local", store=store, run_id="r", resume=False, max_iter=1
-    )
-    assert partial.supersteps == 1
-    resumed = label_propagation(e, scatter_mode="local", store=store, run_id="r", max_iter=10)
-    assert resumed.resumed_from == 1
-    fresh = label_propagation(
-        e, scatter_mode="local", store=CheckpointStore(str(tmp_path / "lpa_fresh")),
-        resume=False, max_iter=10,
-    )
-    got = {r["vid"]: r["label"] for r in resumed.state.collect()}
-    want = {r["vid"]: r["label"] for r in fresh.state.collect()}
-    assert got == want
 
 
 def test_pagerank_local_mode_matches_csr_and_oracle(spark, tmp_path):
@@ -358,53 +308,105 @@ def test_pagerank_local_mode_via_file_uri(spark, tmp_path, monkeypatch):
     assert len(r_uri.metrics) == last + 1
 
 
-def test_pagerank_local_mode_resume_under_different_partitions_raises(spark, tmp_path):
-    """Rank segments are keyed by partition id: resuming a committed run
-    under a different spark.sql.shuffle.partitions must refuse loudly, not
-    silently return an empty 'converged' state."""
-    from tiktok_whisper_spark import datagen
+def _home_edges(spark, n_convs, seed):
     from tiktok_whisper_spark.operators.edges import turn_adjacency_edges, turn_tool_edges
-    from tiktok_whisper_spark.sources.catalog import CheckpointStore
 
-    t = datagen.transcripts(spark, n_convs=40, seed=13)
-    e = (
+    t = datagen.transcripts(spark, n_convs=n_convs, seed=seed)
+    return (
         turn_adjacency_edges(t, include_home=True)
         .unionByName(turn_tool_edges(t, include_home=True))
         .localCheckpoint()
     )
+
+
+# the three local-mode (file-superstep) kernels behind their public calls;
+# synchronous LPA 2-cycles on transcript graphs, so it runs a fixed count
+LOCAL_KERNELS = {
+    "pagerank": lambda e, **kw: pagerank(e, scatter_mode="local", **kw),
+    "cc": lambda e, **kw: connected_components(e, scatter_mode="local", **kw),
+    "lpa": lambda e, max_iter=8, **kw: label_propagation(
+        e, scatter_mode="local", max_iter=max_iter, **kw),
+}
+
+
+@pytest.mark.parametrize("kernel", list(LOCAL_KERNELS))
+def test_local_mode_kill_resume(spark, tmp_path, kernel):
+    """A run stopped after superstep 2 and resumed commits exactly the
+    lineage of an uninterrupted run at every superstep and ends in the same
+    state, bit for bit."""
+    from tiktok_whisper_spark.sources.catalog import CheckpointStore
+
+    run = LOCAL_KERNELS[kernel]
+    e = _home_edges(spark, 40, 9)
+    store = CheckpointStore(str(tmp_path / "ck"))
+    full = run(e, store=store, run_id="full", resume=False)
+    assert full.converged or kernel == "lpa"
+    part = run(e, store=store, run_id="k", max_iter=2, resume=False)
+    assert not part.converged and part.supersteps == 2
+    res = run(e, store=store, run_id="k", resume=True)
+    assert res.converged == full.converged and res.resumed_from == 2
+    assert res.supersteps == full.supersteps
+    for k in range(full.supersteps + 1):
+        assert store.manifest("k", k)["lineage"] == store.manifest("full", k)["lineage"], k
+    cols = res.state.columns
+    assert sorted(map(tuple, res.state.collect())) == sorted(
+        map(tuple, full.state.select(*cols).collect())
+    )
+    if kernel == "cc":
+        got = {r["vid"]: r["label"] for r in res.state.collect()}
+        rows = [(r["src"], r["dst"], r["weight"]) for r in e.select("src", "dst", "weight").collect()]
+        assert got == cc_oracle(rows)
+
+
+@pytest.mark.parametrize("kernel", list(LOCAL_KERNELS))
+def test_local_mode_resume_under_different_partitions_raises(spark, tmp_path, kernel):
+    """State segments are keyed by partition id: resuming a committed run
+    under a different spark.sql.shuffle.partitions must refuse loudly, not
+    silently return an empty 'converged' state."""
+    from tiktok_whisper_spark.sources.catalog import CheckpointStore
+
+    run = LOCAL_KERNELS[kernel]
+    e = _home_edges(spark, 40, 13)
     store = CheckpointStore(str(tmp_path / "pstore"))
-    part = pagerank(e, scatter_mode="local", store=store, run_id="pr", max_iter=2, resume=False)
+    part = run(e, store=store, run_id="r", max_iter=2, resume=False)
     assert not part.converged
     old = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(int(old) * 2))
     try:
         with pytest.raises(RuntimeError, match="shuffle partitions"):
-            pagerank(e, scatter_mode="local", store=store, run_id="pr", resume=True)
+            run(e, store=store, run_id="r", resume=True)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
-def test_pagerank_local_mode_kill_resume(spark, tmp_path):
-    from tiktok_whisper_spark import datagen
-    from tiktok_whisper_spark.operators.edges import turn_adjacency_edges, turn_tool_edges
-    from tiktok_whisper_spark.sources.catalog import CheckpointStore
+def test_local_slots_parses_master_forms():
+    """Task slots behind local-mode task packing and the session's default
+    shuffle partitions: ``local[N,F]`` (F = task retries) is as valid a
+    master as ``local[N]``; ``*`` takes the caller's core count."""
+    from tiktok_whisper_spark.session import local_slots
 
-    t = datagen.transcripts(spark, n_convs=60, seed=9)
-    e = (
-        turn_adjacency_edges(t, include_home=True)
-        .unionByName(turn_tool_edges(t, include_home=True))
-        .localCheckpoint()
-    )
-    store = CheckpointStore(str(tmp_path / "ck"))
-    full = pagerank(e, scatter_mode="local", store=store, run_id="full", resume=False)
-    part = pagerank(e, scatter_mode="local", store=store, run_id="k", max_iter=3, resume=False)
-    assert not part.converged
-    res = pagerank(e, scatter_mode="local", store=store, run_id="k", resume=True)
-    assert res.converged and res.resumed_from == 3
-    gf = {r["vid"]: r["rank"] for r in full.state.collect()}
-    gr = {r["vid"]: r["rank"] for r in res.state.collect()}
-    for v in gf:
-        assert abs(gf[v] - gr[v]) < 1e-12
+    assert local_slots("local[4]", 7) == 4
+    assert local_slots("local[4,2]", 7) == 4
+    assert local_slots("local[*]", 7) == 7
+    assert local_slots("local[*,3]", 7) == 7
+    assert local_slots("local", 7) is None
+    assert local_slots("spark://host:7077", 7) is None
+
+
+@pytest.mark.parametrize("call,mode", [
+    (pagerank, "salted"), (connected_components, "csr"), (label_propagation, "sql"),
+])
+def test_unknown_scatter_mode_raises_before_any_job(spark, call, mode):
+    sc = spark.sparkContext
+    e = _edges_df(spark, TWO_CLIQUES)
+    sc.setJobGroup("scatter-mode-check", "scatter_mode validation")
+    try:
+        with pytest.raises(ValueError, match="scatter_mode"):
+            call(e, scatter_mode=mode)
+        assert sc.statusTracker().getJobIdsForGroup("scatter-mode-check") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
 
 
 @pytest.mark.parametrize("name", list(GRAPHS))

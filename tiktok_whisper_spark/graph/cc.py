@@ -186,27 +186,28 @@ def connected_components(
     ``(vid:long, label:long, prev_label:long)``; ``label`` is the minimum
     vertex id of the component.
     """
+    if scatter_mode not in ("local", "arrow", "sql"):
+        raise ValueError(
+            f"connected_components: scatter_mode must be 'local', 'arrow' or 'sql', "
+            f"got {scatter_mode!r}"
+        )
     spark: SparkSession = edges.sparkSession
     store = store or CheckpointStore(tempfile.mkdtemp(prefix="twspark_cc_"))
     run_id = run_id or f"cc-{uuid.uuid4().hex[:12]}"
 
     if scatter_mode == "local":
-        # conversation-locality file supersteps (same machinery as PageRank's
-        # local mode; see cc_local.py) — requires home-keyed edges
+        # conversation-locality file supersteps (graph/filesteps.py, kernel
+        # in cc_local.py) — requires home-keyed edges
         if "src_home" not in edges.columns or "dst_home" not in edges.columns:
             raise ValueError(
                 "scatter_mode='local' needs src_home/dst_home locality columns "
                 "(derive edges with include_home=True)"
             )
-        from .cc_local import cc_local_files
+        from .cc_local import CCFiles
+        from .filesteps import run_local
 
-        return cc_local_files(
-            edges,
-            max_iter=max_iter,
-            store=store,
-            run_id=run_id,
-            resume=resume,
-            num_partitions=int(spark.conf.get("spark.sql.shuffle.partitions")),
+        return run_local(
+            edges, CCFiles(), max_iter=max_iter, store=store, run_id=run_id, resume=resume
         )
 
     sym = symmetrize(edges)

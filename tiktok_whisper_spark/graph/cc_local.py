@@ -1,13 +1,10 @@
 """Connected components in conversation-locality (file-superstep) mode.
 
-The same two-job-free superstep shape as local-mode PageRank
-(``pagerank._pagerank_local_files_inner``): vertex labels live in raw int64
-segments hash-partitioned by home, each superstep is ONE analyzed DataFrame
-job over P pid rows whose tasks run the min-label kernel in NumPy against
-mmap-compiled per-edge alignments, and only O(#hubs) label entries cross
-partitions through a driver-merged dict. Durable per-superstep checkpoints
-(label segments + metrics + per-partition lineage) are the superstep output;
-a killed run resumes from the last manifest.
+The min-label kernel of the file-superstep engine (``graph/filesteps.py``):
+vertex labels live in raw int64 segments hash-partitioned by home, each
+superstep's tasks run the min-label kernel in NumPy against mmap-compiled
+per-edge alignments, and only O(#hubs) label entries cross partitions
+through a driver-merged dict.
 
 Undirected semantics WITHOUT a symmetrize/distinct shuffle: the directed
 shards are symmetrized at alignment-compile time (both directions of every
@@ -33,156 +30,16 @@ semilattice), so the final labels match the DataFrame path and the
 union-find oracle exactly even though the hub relay makes intermediate
 supersteps Gauss-Seidel-fresh rather than strictly Jacobi.
 """
-
 from __future__ import annotations
-
-import os
-import zlib
-from collections.abc import Iterator
-from typing import Any
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..sources import fsio
-from ..sources.catalog import CheckpointStore
-from .runner import GraphRun
-from .scatter import _load_shard_split, purge_shard_dir, write_edge_shards_local
-from .pagerank import (
-    _part_path,  # noqa: F401  (shared layout)
-    _read_rank_part,
-    _read_state_part,
-    _state_dir,
-    _static_dir,
-    _write_rank_part,
-    _write_state_part,
-)
+from .filesteps import Kernel, Run, checksum, load_compiled, positions
 
-__all__ = ["cc_local_files"]
-
-_CC_SCHEMA = "pid int, n_rows long, checksum long, changed long, dst long, c long"
-
-_CC_OPT = (
-    "l_from", "l_off", "l_to",
-    "r_gfrom", "r_goff", "r_gdst_vid",
-    "r_s_hubcode", "r_soff", "r_sto", "r_dst_uniq",
-)
-
-_CC_CACHE: dict = {}
-
-
-def _cc_cdir(static_dir: str, pid: int) -> str:
-    if fsio.is_uri(static_dir):
-        import hashlib
-        import tempfile as _tf
-
-        root = os.path.join(
-            os.environ.get("TWSPARK_SHARD_CACHE", _tf.gettempdir()),
-            "twspark_shard_cache",
-            hashlib.md5(static_dir.encode()).hexdigest(),
-        )
-        return os.path.join(root, f"ccalign-{pid:05d}-v1")
-    return os.path.join(static_dir, f"ccalign-{pid:05d}-v1")
-
-
-def _compile_cc_aligned(static_dir: str, sd: str, pid: int, cdir: str) -> bool:
-    """One-time CC alignment compile (atomic dir publish, mmap-shared).
-
-    Produces, per partition: the compile-time-SYMMETRIZED local edge list
-    sorted by destination position (segment offsets for one
-    ``minimum.reduceat`` per superstep), and the remote edge list in both
-    sort orders (by hub for the gather, by local source for the scatter).
-    Misalignment fails loudly — the home-partitioning contract is broken.
-    """
-    import tempfile as _tf
-
-    st = _read_state_part(static_dir, pid, columns=["vid"])
-    if st is None:
-        return False
-    shard = _load_shard_split(sd, pid)
-    vids = st.column("vid").to_numpy()
-    idx = pd.Series(np.arange(len(vids), dtype=np.int64), index=vids)
-    out: dict[str, np.ndarray] = {
-        "vids": vids,
-        "crc": np.array([zlib.crc32(np.ascontiguousarray(vids).tobytes())], dtype=np.int64),
-    }
-    if shard is not None and shard["local"] is not None:
-        src_codes, src_uniq, dst_codes, dst_uniq, _p = shard["local"]
-        spos = idx.reindex(np.asarray(src_uniq)).to_numpy()
-        dpos = idx.reindex(np.asarray(dst_uniq)).to_numpy()
-        if np.isnan(spos).any() or np.isnan(dpos).any():
-            raise RuntimeError(f"cc local misalignment: shard endpoints missing from partition {pid}")
-        e_src = spos.astype(np.int32)[np.asarray(src_codes)]
-        e_dst = dpos.astype(np.int32)[np.asarray(dst_codes)]
-        # symmetrize here, not in Spark: both directions of each local edge
-        e_from = np.concatenate([e_src, e_dst])
-        e_to = np.concatenate([e_dst, e_src])
-        order = np.argsort(e_to, kind="stable")
-        e_from = e_from[order]
-        e_to = e_to[order]
-        to_upos, starts = np.unique(e_to, return_index=True)
-        out["l_from"] = e_from
-        out["l_off"] = starts.astype(np.int64)
-        out["l_to"] = to_upos.astype(np.int32)
-    if shard is not None and shard["remote"] is not None:
-        src_codes, src_uniq, dst_codes, dst_uniq, _p = shard["remote"]
-        spos = idx.reindex(np.asarray(src_uniq)).to_numpy()
-        if np.isnan(spos).any():
-            raise RuntimeError(f"cc remote misalignment: shard srcs missing from partition {pid}")
-        sp_e = spos.astype(np.int32)[np.asarray(src_codes)]
-        dst_codes = np.asarray(dst_codes)
-        dst_uniq = np.asarray(dst_uniq)
-        og = np.argsort(dst_codes, kind="stable")
-        g_dstc, g_off = np.unique(dst_codes[og], return_index=True)
-        out["r_gfrom"] = sp_e[og]
-        out["r_goff"] = g_off.astype(np.int64)
-        out["r_gdst_vid"] = dst_uniq[g_dstc]
-        osrt = np.argsort(sp_e, kind="stable")
-        s_upos, s_off = np.unique(sp_e[osrt], return_index=True)
-        out["r_s_hubcode"] = dst_codes[osrt].astype(np.int32)
-        out["r_soff"] = s_off.astype(np.int64)
-        out["r_sto"] = s_upos.astype(np.int32)
-        out["r_dst_uniq"] = dst_uniq
-    os.makedirs(os.path.dirname(cdir), exist_ok=True)
-    tmp = _tf.mkdtemp(dir=os.path.dirname(cdir), prefix="_ccalign_")
-    for name, arr in out.items():
-        np.save(os.path.join(tmp, f"{name}.npy"), np.ascontiguousarray(arr))
-    open(os.path.join(tmp, "_OK"), "w").close()
-    try:
-        os.replace(tmp, cdir)
-    except OSError:
-        import shutil as _sh
-
-        _sh.rmtree(tmp, ignore_errors=True)
-    return True
-
-
-def _load_cc_aligned(static_dir: str, sd: str, pid: int):
-    from .scatter import compiled_generation
-
-    key = (static_dir, pid)
-    cdir = _cc_cdir(static_dir, pid)
-    cached = _CC_CACHE.get(key)
-    if cached is not None and cached[0] == compiled_generation(cdir):
-        # generation-checked hit: init's rmtree+recompile republishes _OK
-        # with a fresh inode, so a stale mmap is never served
-        return cached[1]
-    for stale in [k for k in _CC_CACHE if k[0] != static_dir]:
-        del _CC_CACHE[stale]
-    if not os.path.exists(os.path.join(cdir, "_OK")):
-        if not _compile_cc_aligned(static_dir, sd, pid, cdir):
-            return None
-    ent = {
-        "vids": np.load(os.path.join(cdir, "vids.npy"), mmap_mode="r"),
-        "crc": int(np.load(os.path.join(cdir, "crc.npy"))[0]),
-    }
-    for name in _CC_OPT:
-        path = os.path.join(cdir, f"{name}.npy")
-        ent[name] = np.load(path, mmap_mode="r") if os.path.exists(path) else None
-    _CC_CACHE[key] = (compiled_generation(cdir), ent)
-    return ent
+__all__ = ["CCFiles"]
 
 
 def _apply_min_kernel(labels: np.ndarray, al: dict, rvids: np.ndarray, rvals: np.ndarray):
@@ -226,331 +83,123 @@ def _apply_min_kernel(labels: np.ndarray, al: dict, rvids: np.ndarray, rvals: np
     return out, changed, reports
 
 
-def cc_local_files(
-    edges: DataFrame,
-    *,
-    max_iter: int,
-    store: CheckpointStore,
-    run_id: str,
-    resume: bool,
-    num_partitions: int,
-) -> GraphRun:
-    """Min-label connected components over home-keyed edges, file supersteps.
+class CCFiles(Kernel):
+    """Min-label connected components over home-keyed edges; state
+    ``(vid, home, label)``.
 
-    ``edges`` must carry ``src_home``/``dst_home`` (see
-    ``operators.edges``); state has ``(vid, home, label)``.
+    Compiled per partition: the compile-time-SYMMETRIZED local edge list
+    sorted by destination position (segment offsets for one
+    ``minimum.reduceat`` per superstep), and the remote edge list in both
+    sort orders (by hub for the gather, by local source for the scatter).
     """
-    spark = edges.sparkSession
-    P = num_partitions
 
-    _aqe_key = "spark.sql.adaptive.enabled"
-    _old_aqe = spark.conf.get(_aqe_key, "true")
-    spark.conf.set(_aqe_key, "false")
-    try:
-        return _cc_local_files_inner(
-            edges, max_iter=max_iter, store=store, run_id=run_id,
-            resume=resume, num_partitions=P,
-        )
-    finally:
-        spark.conf.set(_aqe_key, _old_aqe)
-
-
-def _cc_local_files_inner(
-    edges: DataFrame,
-    *,
-    max_iter: int,
-    store: CheckpointStore,
-    run_id: str,
-    resume: bool,
-    num_partitions: int,
-) -> GraphRun:
-    import time as _time
-
-    spark = edges.sparkSession
-    P = num_partitions
-
-    shard_dir = os.path.join(store.root, run_id, f"_edge_shards_p{P}")
-    static_dir = _static_dir(store, run_id, P)
-    static_meta = os.path.join(static_dir, "_META.json")
-    vertices = None
-    meta = fsio.read_json(static_meta) if fsio.exists(os.path.join(shard_dir, "_DONE")) else None
+    name = "connected_components"
+    tag = "ccalign"
+    version = "v1"
+    dtype = np.int64
+    arrays = (
+        "l_from", "l_off", "l_to",
+        "r_gfrom", "r_goff", "r_gdst_vid",
+        "r_s_hubcode", "r_soff", "r_sto", "r_dst_uniq",
+    )
+    metrics_schema = "n_rows long, checksum long, changed long"
+    exchange_schema = "dst long, c long"
+    state_schema = "vid long, home long, label long"
+    meta = {"weights": "unit"}
     # min-label ignores the shard p slot, so ANY kernel's warm shards are
     # reusable (norm/unit/raw) — the gate only requires the sorted layout
-    if meta is not None and meta.get("sorted"):
-        n, num_edges = int(meta["n"]), int(meta["num_edges"])
-    else:
-        if fsio.exists(os.path.join(shard_dir, "_DONE")):
-            # shards of unknown provenance (meta missing or pre-sorted
-            # layout): purge rather than trust — a stale _DONE must never
-            # gate out the rewrite
-            purge_shard_dir(shard_dir)
-            purge_shard_dir(static_dir)
+    any_weights = True
+
+    def shard_edges(self, edges: DataFrame) -> DataFrame:
         # no groupBy/distinct prep: duplicate directed edges are idempotent
         # under min, so shards are written straight from the edge table
-        e = edges.select(
-            "src", "dst", F.lit(1.0).alias("p"), "src_home", "dst_home"
-        )
-        if not fsio.exists(os.path.join(shard_dir, "_DONE")):
-            write_edge_shards_local(e, shard_dir, P)
-            fsio.touch(os.path.join(shard_dir, "_DONE"))
-        num_edges = e.count()
-        vertices = (
-            edges.select(F.col("src").alias("vid"), F.col("src_home").alias("home"))
-            .unionByName(edges.select(F.col("dst").alias("vid"), F.col("dst_home").alias("home")))
-            .groupBy("vid")
-            .agg(F.min("home").alias("home"))
-        )
-        n = vertices.count()
-    if n == 0:
-        raise ValueError("connected_components: empty edge set")
+        return edges.select("src", "dst", F.lit(1.0).alias("p"), "src_home", "dst_home")
 
-    master = spark.sparkContext.master
-    if master.startswith("local[") and "*" not in master:
-        n_slots = int(master[len("local["):-1])
-    else:
-        n_slots = spark.sparkContext.defaultParallelism
-    n_tasks = min(P, max(1, n_slots))
-    pids = spark.range(P, numPartitions=n_tasks).select(F.col("id").cast("int").alias("pid"))
-    sd = shard_dir
-    history: list[dict[str, Any]] = []
-    carry: dict[str, Any] = {}
-    resumed_from: int | None = None
-    start = 0
+    def params(self, carry: dict, k: int) -> dict:
+        if k == 0:
+            return {}
+        rv = sorted((int(h), int(v)) for h, v in carry["hub"].items())
+        return {"rvids": [h for h, _ in rv], "rvals": [v for _, v in rv]}
 
-    def _split_rows(rows: list) -> tuple[list[dict], dict[int, int]]:
-        metrics_rows, hub = [], {}
-        for r in rows:
-            d_ = r.asDict()
-            if d_["pid"] is not None:
-                metrics_rows.append(d_)
-            else:
-                k_, v = int(d_["dst"]), int(d_["c"])
-                if k_ not in hub or v < hub[k_]:
-                    hub[k_] = v
-        return metrics_rows, hub
-
-    def _combine(rows: list[dict], k: int) -> tuple[dict, list[dict], bool]:
-        if not rows:
-            raise RuntimeError(
-                f"cc superstep {k}: no partition emitted metrics — state files "
-                "missing or partitioning mismatch in the run directory"
-            )
-        covered = sum(r["n_rows"] for r in rows)
-        if covered != n:
-            raise RuntimeError(
-                f"cc superstep {k}: tasks covered {covered} of {n} vertices — "
-                "state/shard partitioning mismatch"
-            )
+    def combine(self, run: Run, rows: list[dict], exchange: list[dict], carry: dict,
+                k: int) -> tuple[dict, dict, bool]:
+        hub: dict[int, int] = {}
+        for r in exchange:
+            h, v = int(r["dst"]), int(r["c"])
+            if h not in hub or v < hub[h]:
+                hub[h] = v
+        if k == 0:
+            # hub's own init label is its vid — fold the identity into the merge
+            hub = {h: min(v, h) for h, v in hub.items()}
         changed = sum(r["changed"] for r in rows)
-        metrics = {
-            "kernel": "connected_components",
-            "changed": changed,
-            "active_vertices": changed,
-            "edges_processed": num_edges,
-            "n_vertices": n,
+        metrics = {"changed": changed, "active_vertices": changed}
+        return metrics, {"hub": {str(h): v for h, v in hub.items()}}, changed == 0
+
+    def compile(self, st, vids, shard, pid: int) -> dict[str, np.ndarray]:
+        out: dict[str, np.ndarray] = {}
+        if shard is not None and shard["local"] is not None:
+            src_codes, src_uniq, dst_codes, dst_uniq, _p = shard["local"]
+            e_src = positions(vids, src_uniq, pid, "cc local")[np.asarray(src_codes)]
+            e_dst = positions(vids, dst_uniq, pid, "cc local")[np.asarray(dst_codes)]
+            # symmetrize here, not in Spark: both directions of each local edge
+            e_from = np.concatenate([e_src, e_dst])
+            e_to = np.concatenate([e_dst, e_src])
+            order = np.argsort(e_to, kind="stable")
+            e_from = e_from[order]
+            e_to = e_to[order]
+            to_upos, starts = np.unique(e_to, return_index=True)
+            out["l_from"] = e_from
+            out["l_off"] = starts.astype(np.int64)
+            out["l_to"] = to_upos.astype(np.int32)
+        if shard is not None and shard["remote"] is not None:
+            src_codes, src_uniq, dst_codes, dst_uniq, _p = shard["remote"]
+            sp_e = positions(vids, src_uniq, pid, "cc remote")[np.asarray(src_codes)]
+            dst_codes = np.asarray(dst_codes)
+            dst_uniq = np.asarray(dst_uniq)
+            og = np.argsort(dst_codes, kind="stable")
+            g_dstc, g_off = np.unique(dst_codes[og], return_index=True)
+            out["r_gfrom"] = sp_e[og]
+            out["r_goff"] = g_off.astype(np.int64)
+            out["r_gdst_vid"] = dst_uniq[g_dstc]
+            osrt = np.argsort(sp_e, kind="stable")
+            s_upos, s_off = np.unique(sp_e[osrt], return_index=True)
+            out["r_s_hubcode"] = dst_codes[osrt].astype(np.int32)
+            out["r_soff"] = s_off.astype(np.int64)
+            out["r_sto"] = s_upos.astype(np.int32)
+            out["r_dst_uniq"] = dst_uniq
+        return out
+
+    def decode(self, prm: dict) -> dict:
+        return {
+            "rvids": np.asarray(prm["rvids"], dtype=np.int64),
+            "rvals": np.asarray(prm["rvals"], dtype=np.int64),
         }
-        lineage = [
-            {"partition_id": r["pid"], "n_rows": r["n_rows"], "checksum": r["checksum"]}
-            for r in rows
-        ]
-        return metrics, lineage, k > 0 and changed == 0
 
-    def _state_df(k: int) -> DataFrame:
-        def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                for pid in pdf["pid"].to_numpy():
-                    st = _read_state_part(static_dir, int(pid))
-                    lb = _read_rank_part(_state_dir(store, run_id, k), int(pid), dtype=np.int64)
-                    if st is None or lb is None:
-                        continue
-                    yield pd.DataFrame(
-                        {
-                            "vid": st.column("vid").to_numpy(),
-                            "home": st.column("home").to_numpy(),
-                            "label": lb,
-                        }
-                    )
+    def init(self, lay, pid, st, prm):
+        al = load_compiled(self, lay, pid)
+        labels = np.array(al["vids"])  # own id
+        row = {"n_rows": len(labels), "checksum": checksum(al["crc"], labels), "changed": 0}
+        exch = None
+        if al["r_gfrom"] is not None:
+            mins = np.minimum.reduceat(labels[al["r_gfrom"]], al["r_goff"])
+            exch = pd.DataFrame({"dst": np.asarray(al["r_gdst_vid"]), "c": mins})
+        return labels, row, exch
 
-        return pids.mapInPandas(build, schema="vid long, home long, label long")
+    def update(self, lay, pid, al, labels, prm, mk):
+        out, changed, reports = _apply_min_kernel(labels, al, prm["rvids"], prm["rvals"])
+        row = {"n_rows": len(out), "checksum": checksum(al["crc"], out), "changed": changed}
+        exch = None
+        if reports:
+            exch = pd.concat([pd.DataFrame({"dst": hv, "c": hl}) for hv, hl in reports],
+                             ignore_index=True)
+        return out, row, exch
 
-    if resume:
-        latest = store.latest(run_id)
-        if latest is not None:
-            man = store.manifest(run_id, latest)
-            carry = man["carry"]
-            man_p = int(carry.get("P", -1))
-            if man_p != P:
-                raise RuntimeError(
-                    f"cannot resume local-mode cc run {run_id!r}: committed under "
-                    f"{man_p} shuffle partitions, session has {P} — restart "
-                    "with the original partition count or a fresh run_id"
-                )
-            history = store.metrics_history(run_id)
-            resumed_from = latest
-            if carry.get("_converged"):
-                return GraphRun(_state_df(latest), run_id, latest, True, history, resumed_from)
-            start = latest + 1
-    if resumed_from is None and not resume:
-        store.clear_run(run_id)
+    def merge(self, parts: list[pd.DataFrame], k: int) -> pd.DataFrame:
+        return pd.concat(parts, ignore_index=True).groupby("dst", as_index=False)["c"].min()
 
-    if start == 0:
-        t0 = _time.monotonic()
-        sdir0 = _state_dir(store, run_id, 0)
-
-        def write_init(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            import pyarrow as pa
-
-            pdfs = [b for b in batches if len(b)]
-            if not pdfs:
-                return
-            pdf = pd.concat(pdfs, ignore_index=True)
-            pid = int(pdf["pid"].iloc[0])
-            vids = np.sort(pdf["vid"].to_numpy())
-            homes = pdf.sort_values("vid")["home"].to_numpy()
-            import shutil as _sh
-
-            _sh.rmtree(_cc_cdir(static_dir, pid), ignore_errors=True)
-            _write_state_part(
-                static_dir,
-                pid,
-                pa.table({"vid": pa.array(vids, pa.int64()),
-                          "home": pa.array(homes, pa.int64())}),
-            )
-            labels = vids.copy()  # own id
-            _write_rank_part(sdir0, pid, labels, None)
-            yield pd.DataFrame([{
-                "pid": pid, "n_rows": int(len(vids)),
-                "checksum": int(zlib.crc32(np.ascontiguousarray(vids).tobytes())
-                                ^ zlib.crc32(np.ascontiguousarray(labels).tobytes())),
-                "changed": 0, "dst": None, "c": None,
-            }])
-            al = _load_cc_aligned(static_dir, sd, pid)
-            if al is not None and al["r_gfrom"] is not None:
-                mins = np.minimum.reduceat(labels[al["r_gfrom"]], al["r_goff"])
-                yield pd.DataFrame({
-                    "dst": np.asarray(al["r_gdst_vid"]), "c": mins,
-                    "pid": None, "n_rows": None, "checksum": None, "changed": None,
-                })[["pid", "n_rows", "checksum", "changed", "dst", "c"]]
-
-        def init_warm(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            macc: list[dict] = []
-            for pdf in batches:
-                for pid in pdf["pid"].to_numpy():
-                    pid = int(pid)
-                    st = _read_state_part(static_dir, pid, columns=["vid"])
-                    if st is None:
-                        continue
-                    vids = st.column("vid").to_numpy()
-                    labels = vids.copy()
-                    _write_rank_part(sdir0, pid, labels, None)
-                    macc.append({
-                        "pid": pid, "n_rows": int(len(vids)),
-                        "checksum": int(zlib.crc32(np.ascontiguousarray(vids).tobytes())
-                                        ^ zlib.crc32(np.ascontiguousarray(labels).tobytes())),
-                        "changed": 0, "dst": None, "c": None,
-                    })
-                    al = _load_cc_aligned(static_dir, sd, pid)
-                    if al is not None and al["r_gfrom"] is not None:
-                        mins = np.minimum.reduceat(labels[al["r_gfrom"]], al["r_goff"])
-                        yield pd.DataFrame({
-                            "dst": np.asarray(al["r_gdst_vid"]), "c": mins,
-                            "pid": None, "n_rows": None, "checksum": None, "changed": None,
-                        })[["pid", "n_rows", "checksum", "changed", "dst", "c"]]
-            if macc:
-                yield pd.DataFrame(macc)
-
-        if vertices is not None:
-            init = vertices.repartition(P, "home")
-            rows = (
-                init.select(F.spark_partition_id().alias("pid"), "vid", "home")
-                .mapInPandas(write_init, schema=_CC_SCHEMA)
-                .collect()
-            )
-            fsio.write_json_atomic(
-                static_meta,
-                {"n": n, "num_edges": num_edges, "P": P, "sorted": True, "weights": "unit"},
-            )
-        else:
-            rows = pids.mapInPandas(init_warm, schema=_CC_SCHEMA).collect()
-        metrics_rows, hub = _split_rows(rows)
-        metrics, lineage, _ = _combine(metrics_rows, 0)
-        # hub's own init label is its vid — fold the identity into the merge
-        hub = {k_: min(v, k_) for k_, v in hub.items()}
-        carry = {"hub": {str(k_): v for k_, v in hub.items()}, "P": P}
-        metrics.update(superstep=0, wall_ms=round(1000 * (_time.monotonic() - t0), 1))
-        store.finalize(run_id, 0, lineage, metrics, carry)
-        history.append(metrics)
-        start = 1
-
-    converged = bool(carry.get("_converged"))
-    last = start - 1
-    params_path = os.path.join(store.root, run_id, "_cc_superstep_params.json")
-
-    def update_pass(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        prm = fsio.read_json(params_path)
-        prev_dir, next_dir = prm["prev_dir"], prm["next_dir"]
-        recycle_dir = prm["recycle_dir"]
-        rvids = np.asarray(prm["rvids"], dtype=np.int64)
-        rvals = np.asarray(prm["rvals"], dtype=np.int64)
-        macc: list[dict] = []
-        racc: list[pd.DataFrame] = []
-        for pdf in batches:
-            for pid in pdf["pid"].to_numpy():
-                pid = int(pid)
-                al = _load_cc_aligned(static_dir, sd, pid)
-                labels = _read_rank_part(prev_dir, pid, dtype=np.int64)
-                if al is None or labels is None:
-                    continue
-                out, changed, reports = _apply_min_kernel(labels, al, rvids, rvals)
-                _write_rank_part(next_dir, pid, out, recycle_dir)
-                macc.append({
-                    "pid": pid, "n_rows": int(len(out)),
-                    "checksum": int(al["crc"] ^ zlib.crc32(memoryview(out).cast("B"))),
-                    "changed": changed, "dst": None, "c": None,
-                })
-                for hv, hl in reports:
-                    racc.append(pd.DataFrame({"dst": hv, "c": hl}))
-        if macc:
-            yield pd.DataFrame(macc)
-        if racc:
-            merged = pd.concat(racc, ignore_index=True).groupby("dst", as_index=False)["c"].min()
-            yield pd.DataFrame({
-                "dst": merged["dst"].to_numpy(), "c": merged["c"].to_numpy(),
-                "pid": None, "n_rows": None, "checksum": None, "changed": None,
-            })[["pid", "n_rows", "checksum", "changed", "dst", "c"]]
-
-    update_df = pids.mapInPandas(update_pass, schema=_CC_SCHEMA)
-
-    for k in range(start, max_iter + 1):
-        t0 = _time.monotonic()
-        hub = {int(k_): int(v) for k_, v in carry.get("hub", {}).items()}
-        rv = sorted(hub.items())
-        fsio.write_json_atomic(
-            params_path,
-            {
-                "superstep": k,
-                "prev_dir": _state_dir(store, run_id, k - 1),
-                "next_dir": _state_dir(store, run_id, k),
-                "recycle_dir": _state_dir(store, run_id, k - 2) if k >= 2 else None,
-                "rvids": [x[0] for x in rv],
-                "rvals": [x[1] for x in rv],
-            },
-        )
-        rows = update_df.collect()
-        metrics_rows, next_hub = _split_rows(rows)
-        metrics, lineage, converged = _combine(metrics_rows, k)
-        carry = {
-            "hub": {str(k_): v for k_, v in next_hub.items()},
-            "_converged": converged,
-            "P": P,
+    def state_frame(self, st, state: np.ndarray) -> dict:
+        return {
+            "vid": st.column("vid").to_numpy(),
+            "home": st.column("home").to_numpy(),
+            "label": state,
         }
-        metrics.update(superstep=k, wall_ms=round(1000 * (_time.monotonic() - t0), 1))
-        store.finalize(run_id, k, lineage, metrics, carry)
-        if k >= 2 and fsio.is_uri(store.root):
-            fsio.rmtree(_state_dir(store, run_id, k - 2))
-        history.append(metrics)
-        last = k
-        if converged:
-            break
-
-    return GraphRun(_state_df(last), run_id, last, converged, history, resumed_from)

@@ -49,6 +49,10 @@ def label_propagation(
     ``(vid:long, label:long, prev_label:long)`` (``vid, home, label`` in
     ``scatter_mode="local"``).
     """
+    if scatter_mode not in ("local", "arrow"):
+        raise ValueError(
+            f"label_propagation: scatter_mode must be 'local' or 'arrow', got {scatter_mode!r}"
+        )
     spark: SparkSession = edges.sparkSession
     store = store or CheckpointStore(tempfile.mkdtemp(prefix="twspark_lpa_"))
     run_id = run_id or f"lpa-{uuid.uuid4().hex[:12]}"
@@ -59,15 +63,11 @@ def label_propagation(
                 "scatter_mode='local' needs src_home/dst_home locality columns "
                 "(derive edges with include_home=True)"
             )
-        from .lpa_local import lpa_local_files
+        from .filesteps import run_local
+        from .lpa_local import LPAFiles
 
-        return lpa_local_files(
-            edges,
-            max_iter=max_iter,
-            store=store,
-            run_id=run_id,
-            resume=resume,
-            num_partitions=int(spark.conf.get("spark.sql.shuffle.partitions")),
+        return run_local(
+            edges, LPAFiles(), max_iter=max_iter, store=store, run_id=run_id, resume=resume
         )
 
     # Symmetrize with weights: vote strength of u on v = total weight of

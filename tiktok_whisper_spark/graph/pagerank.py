@@ -18,7 +18,7 @@ role→tool usage graph (SURVEY.md §1.5); its rank-like surface is the user
 leaderboard (``web/handlers/api.go:377-388``) — PageRank generalizes "who
 matters" from raw counts to link structure.
 
-Three scatter modes, one recurrence:
+Scatter modes, one recurrence:
 
 * ``csr`` (default) — adjacency shards partitioned like the vertex state;
   each superstep ships only (vid, rank) through Arrow, gathers with
@@ -27,16 +27,13 @@ Three scatter modes, one recurrence:
 * ``local`` — **conversation-locality supersteps** for edge tables with
   ``src_home``/``dst_home`` keys: the state is hash-partitioned by home, so
   every turn-adjacency edge (the overwhelming majority) is partition-LOCAL.
-  Each superstep is two tiny DataFrame jobs whose tasks read their state
-  partition as a parquet file (pyarrow — the vectorized columnar path),
-  gather + update in NumPy, write the next state partition, and emit ONE
-  metrics row each; only the tool-hub (remote) contributions — a handful of
-  rows per shard after pre-reduction — cross partitions, via a driver-merged
-  dict. Durable per-superstep checkpoints are *inherent*: the superstep
-  output IS the checkpoint. (Why files instead of streaming the state
-  through mapInPandas: Spark 4.1's JVM→Python Arrow writer walks the vector
-  tree per row to enforce maxBytesPerBatch — ~5µs/row of non-scaling CPU —
-  while pyarrow's parquet reader moves the same columns at memory speed.)
+  Runs on the file-superstep engine (``graph/filesteps.py``): each superstep
+  is ONE small DataFrame job whose tasks gather + update their rank
+  segments in NumPy and emit one metrics row per partition; only the
+  tool-hub (remote) contributions — a handful of rows per shard after
+  pre-reduction — cross partitions, via a driver-merged dict. Durable
+  per-superstep checkpoints are *inherent*: the superstep output IS the
+  checkpoint.
 * ``arrow``/``sql`` — the salted scatter-join path (hub-key splitting via
   broadcast joins), kept for plan comparison on generic graphs.
 """
@@ -45,6 +42,7 @@ from __future__ import annotations
 
 import os
 import tempfile
+import time
 import uuid
 import zlib
 from collections.abc import Iterator, Sequence
@@ -57,15 +55,9 @@ from pyspark.sql import functions as F
 
 from ..sources import fsio
 from ..sources.catalog import CheckpointStore
+from .filesteps import Kernel, Run, positions, read_state_part, run_local
 from .runner import GraphRun, run_supersteps
-from .scatter import (
-    _load_shard_split,
-    csr_gather,
-    prepare_edges,
-    scatter_gather,
-    write_edge_shards,
-    write_edge_shards_local,
-)
+from .scatter import _load_shard_split, csr_gather, prepare_edges, scatter_gather, write_edge_shards
 
 __all__ = ["pagerank"]
 
@@ -101,29 +93,33 @@ def pagerank(
     ``(vid:long, rank:double, prev_rank:double, dangling:boolean)``
     (plus ``home`` in local mode).
     """
+    if scatter_mode not in ("local", "csr", "arrow", "sql"):
+        raise ValueError(
+            f"pagerank: scatter_mode must be 'local', 'csr', 'arrow' or 'sql', got {scatter_mode!r}"
+        )
     spark: SparkSession = edges.sparkSession
     store = store or CheckpointStore(tempfile.mkdtemp(prefix="twspark_pr_"))
     run_id = run_id or f"pagerank-{uuid.uuid4().hex[:12]}"
     num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
-    has_home = "src_home" in edges.columns and "dst_home" in edges.columns
+    seeds: list[int] | None = None
+    seed_crc: int | None = None
+    if teleport_seeds is not None:
+        seeds = sorted(set(int(s) for s in teleport_seeds))
+        if not seeds:
+            raise ValueError("pagerank: teleport_seeds is empty")
+        seed_crc = zlib.crc32(np.asarray(seeds, dtype=np.int64).tobytes())
+
     if scatter_mode == "local":
-        if not has_home:
+        if "src_home" not in edges.columns or "dst_home" not in edges.columns:
             raise ValueError(
                 "scatter_mode='local' needs src_home/dst_home locality columns "
                 "(derive edges with include_home=True); without them every edge "
                 "is remote and the mode degenerates — use 'csr' instead"
             )
-        return _pagerank_local_files(
-            edges,
-            damping=damping,
-            tol=tol,
-            max_iter=max_iter,
-            store=store,
-            run_id=run_id,
-            resume=resume,
-            num_partitions=num_partitions,
-            teleport_seeds=teleport_seeds,
+        return run_local(
+            edges, _PageRankFiles(damping, tol, seeds, seed_crc),
+            max_iter=max_iter, store=store, run_id=run_id, resume=resume,
         )
 
     # -- one-time graph preparation (recomputed cheaply on resume) ----------
@@ -162,13 +158,7 @@ def pagerank(
     if n == 0:
         raise ValueError("pagerank: empty edge set")
 
-    seeds: list[int] | None = None
-    seed_crc: int | None = None
-    if teleport_seeds is not None:
-        seeds = sorted(set(int(s) for s in teleport_seeds))
-        if not seeds:
-            raise ValueError("pagerank: teleport_seeds is empty")
-        seed_crc = zlib.crc32(np.asarray(seeds, dtype=np.int64).tobytes())
+    if seeds is not None:
         n_hit = vertices.where(F.col("vid").isin(seeds)).count()
         if n_hit != len(seeds):
             raise ValueError(
@@ -303,111 +293,8 @@ def pagerank(
 
 
 # =============================================================================
-# Locality (file-superstep) mode
+# Locality (file-superstep) mode: the PageRank kernel of ``graph.filesteps``
 # =============================================================================
-
-_STATE_COLS = ["vid", "home", "rank", "dangling"]
-
-
-def _static_dir(store: CheckpointStore, run_id: str, P: int) -> str:
-    return os.path.join(store.root, run_id, f"_static_p{P}")
-
-
-def _state_dir(store: CheckpointStore, run_id: str, k: int) -> str:
-    return os.path.join(store.root, run_id, f"superstep={k:06d}", "state")
-
-
-def _part_path(state_dir: str, pid: int) -> str:
-    return os.path.join(state_dir, f"part-{pid:05d}.parquet")
-
-
-def _rank_path(state_dir: str, pid: int) -> str:
-    return os.path.join(state_dir, f"rank-{pid:05d}.f64")
-
-
-def _write_rank_part(state_dir: str, pid: int, ranks: np.ndarray, recycle_dir: str | None) -> None:
-    """Write one partition's state vector as raw fixed-width values,
-    recycling pages. Shared by PageRank (float64 ranks) and local-mode
-    connected components (int64 labels — same 8-byte stride, so retired
-    segments recycle across kernels of one run dir too).
-
-    Postgres-WAL-style segment recycling: the retired superstep's file (same
-    byte size — the vertex set is fixed) is renamed into place and
-    overwritten WITHOUT truncation, so tmpfs pages are reused instead of
-    freshly faulted. On this sandbox's hypervisor, fresh anonymous/tmpfs
-    pages zero at ~2.2 GB/s machine-wide while warm pages rewrite at
-    ~15 GB/s — recycling turns the per-superstep durable write from the
-    dominant fixed cost into noise. A torn write is harmless: the manifest
-    (written after the whole job) is the commit point, and a retried task
-    rewrites the full fixed-size segment.
-
-    Object-store roots (any ``://`` URI) take a plain single-PUT write via
-    pyarrow's FileSystem — atomic per object, no recycling (page reuse is a
-    local-FS concept; on s3/gs the bytes dominate and a PUT is the floor).
-    """
-    buf = np.ascontiguousarray(ranks)
-    path = _rank_path(state_dir, pid)
-    if fsio.is_uri(state_dir):
-        fsio.write_bytes(path, memoryview(buf).cast("B").tobytes())
-        return
-    os.makedirs(state_dir, exist_ok=True)
-    if not os.path.exists(path) and recycle_dir is not None:
-        old = _rank_path(recycle_dir, pid)
-        if os.path.exists(old) and os.path.getsize(old) == buf.nbytes:
-            try:
-                os.replace(old, path)
-            except OSError:
-                pass
-    with open(path, "r+b" if os.path.exists(path) else "wb") as f:
-        f.write(memoryview(buf).cast("B"))
-        f.truncate(buf.nbytes)
-
-
-def _read_rank_part(state_dir: str, pid: int, dtype=np.float64) -> np.ndarray | None:
-    path = _rank_path(state_dir, pid)
-    if fsio.is_uri(state_dir):
-        data = fsio.read_bytes(path)
-        return None if data is None else np.frombuffer(data, dtype=dtype)
-    if not os.path.exists(path):
-        return None
-    return np.fromfile(path, dtype=dtype)
-
-
-def _read_state_part(state_dir: str, pid: int, columns: list[str] | None = None):
-    import pyarrow.parquet as pq
-
-    fs, base = fsio.fs_and_path(state_dir)  # one cached client per authority
-    path = _part_path(base, pid)
-    if fs is None:
-        if not os.path.exists(path):
-            return None
-        return pq.read_table(path, columns=columns)
-    from pyarrow import fs as pafs
-
-    if fs.get_file_info(path).type == pafs.FileType.NotFound:
-        return None
-    return pq.read_table(path, columns=columns, filesystem=fs)
-
-
-def _write_state_part(state_dir: str, pid: int, table) -> None:
-    """Atomic per-partition state write (tmp + rename survives task retries).
-
-    On object-store URIs the single-PUT write is already atomic per object;
-    the manifest (written only after the whole job succeeds) remains the
-    all-or-nothing commit point either way.
-    """
-    import pyarrow.parquet as pq
-
-    fs, base = fsio.fs_and_path(state_dir)
-    if fs is not None:
-        fs.create_dir(base, recursive=True)
-        pq.write_table(table, _part_path(base, pid), compression="none", filesystem=fs)
-        return
-    os.makedirs(base, exist_ok=True)
-    tmp = _part_path(base, pid) + f".tmp-{os.getpid()}"
-    pq.write_table(table, tmp, compression="none")
-    os.replace(tmp, _part_path(base, pid))
-
 
 # chunk sized to stay LLC-resident across the fused passes below: all six
 # reductions + the incremental crc touch a chunk while it is still cached,
@@ -450,17 +337,8 @@ def _part_metrics(vids, ranks, prev, dangling, tol, vids_crc: int | None = None)
     }
 
 
-def _remote_frame(dst_uniq, sums) -> pd.DataFrame:
-    """Remote-contribution rows in the fused metrics schema (pid NULL)."""
-    out = pd.DataFrame({"dst": np.asarray(dst_uniq), "c": sums})
-    for col in ("pid", "n_rows", "checksum", "delta_max", "dangling_sum", "total_mass", "active"):
-        out[col] = None
-    return out
-
-
 def _remote_partials(sd: str, pid: int, vids, ranks) -> pd.DataFrame | None:
-    """Pre-reduced contributions along this shard's REMOTE edges, as rows of
-    the fused metrics schema (pid NULL marks them as remote rows)."""
+    """Pre-reduced contributions ``(dst, c)`` along this shard's REMOTE edges."""
     shard = _load_shard_split(sd, pid)
     if shard is None or shard["remote"] is None:
         return None
@@ -469,682 +347,216 @@ def _remote_partials(sd: str, pid: int, vids, ranks) -> pd.DataFrame | None:
     if np.isnan(aligned).any():
         raise RuntimeError(f"remote gather misalignment in partition {pid}")
     sums = np.bincount(dst_codes, weights=p * aligned[src_codes], minlength=len(dst_uniq))
-    return _remote_frame(dst_uniq, sums)
+    return pd.DataFrame({"dst": np.asarray(dst_uniq), "c": sums})
 
 
-# -- compiled per-partition alignment (mmap, machine-shared) ------------------
-#
-# Everything below is SUPERSTEP-INVARIANT: the static vertex arrays of a
-# partition, their checksum, and the PER-EDGE positions of each edge's
-# endpoints within those arrays. A naive in-worker dict cache does NOT work:
-# Spark assigns tasks to workers arbitrarily, so most supersteps miss and
-# rebuild a vertex-sized hash alignment in freshly-faulted pages (measured:
-# the rebuild anti-scales with cores — fresh-page zeroing is a machine-wide
-# ~2 GB/s resource on this VM). Instead the alignment is COMPILED ONCE per
-# (run, pid) into mmap-able ``.npy`` files next to the static state
-# (node-local cache for URI stores, like the shards): any worker's "miss"
-# is then a mmap open (microseconds) against pages every worker on the
-# machine shares. Positions are composed down to edge granularity at
-# compile time (``pos[codes]``), so a superstep's gather is one rank
-# fancy-index + in-place multiply + one bincount straight into the
-# vid-indexed vector — no vertex-sized aligned temp, no scatter pass.
+class _PageRankFiles(Kernel):
+    """Conversation-locality PageRank on the file-superstep engine.
 
-_ALIGNED_CACHE: dict = {}
-_ALIGNED_OPT = ("epos_src_local", "epos_dst_local", "epos_src_remote")
+    Each task loads its shard's LOCAL edges and the previous rank segment,
+    computes the full gather + rank update in NumPy, and reports the
+    contributions along its REMOTE (turn→tool) edges pre-reduced to ≤ #hubs
+    rows; the driver merges them into the dict the next superstep applies.
 
-
-def _aligned_cdir(static_dir: str, pid: int) -> str:
-    if fsio.is_uri(static_dir):
-        import hashlib
-        import tempfile as _tf
-
-        root = os.path.join(
-            os.environ.get("TWSPARK_SHARD_CACHE", _tf.gettempdir()),
-            "twspark_shard_cache",
-            hashlib.md5(static_dir.encode()).hexdigest(),
-        )
-        return os.path.join(root, f"aligned-{pid:05d}-v2")
-    return os.path.join(static_dir, f"aligned-{pid:05d}-v2")
-
-
-def _compile_aligned(static_dir: str, sd: str, pid: int, cdir: str) -> bool:
-    """One-time alignment compile for a partition; atomic dir publish.
-
-    Misalignment (a shard endpoint missing from its home partition) fails
-    loudly — the home-partitioning contract is broken, not a data condition.
+    Compiled per partition: the static dangling flags and the per-edge
+    positions of each edge's endpoints, composed down to edge granularity
+    (``pos[codes]``) — a superstep's gather is one rank fancy-index +
+    in-place multiply + one bincount straight into the vid-indexed vector,
+    with no vertex-sized aligned temp and no scatter pass.
     """
-    import tempfile as _tf
 
-    st = _read_state_part(static_dir, pid, columns=["vid", "dangling"])
-    if st is None:
-        return False
-    shard = _load_shard_split(sd, pid)
-    vids = st.column("vid").to_numpy()
-    idx = pd.Series(np.arange(len(vids), dtype=np.int64), index=vids)
-    out: dict[str, np.ndarray] = {
-        "vids": vids,
-        "dang": st.column("dangling").to_numpy(),
-        "crc": np.array([zlib.crc32(np.ascontiguousarray(vids).tobytes())], dtype=np.int64),
-    }
-    for half in ("local", "remote"):
-        h = None if shard is None else shard[half]
-        if h is None:
-            continue
-        src_codes, src_uniq, dst_codes, dst_uniq, _p = h
-        pos_src = idx.reindex(np.asarray(src_uniq)).to_numpy()
-        if np.isnan(pos_src).any():
-            raise RuntimeError(
-                f"{half} gather misalignment: shard srcs missing from partition {pid}"
-            )
-        out[f"epos_src_{half}"] = pos_src.astype(np.int32)[np.asarray(src_codes)]
-        if half == "local":
-            pos_dst = idx.reindex(np.asarray(dst_uniq)).to_numpy()
-            if np.isnan(pos_dst).any():
-                raise RuntimeError(
-                    f"local gather misalignment: shard dsts missing from partition {pid}"
-                )
-            out["epos_dst_local"] = pos_dst.astype(np.int32)[np.asarray(dst_codes)]
-    os.makedirs(os.path.dirname(cdir), exist_ok=True)
-    tmp = _tf.mkdtemp(dir=os.path.dirname(cdir), prefix="_align_")
-    for name, arr in out.items():
-        np.save(os.path.join(tmp, f"{name}.npy"), np.ascontiguousarray(arr))
-    open(os.path.join(tmp, "_OK"), "w").close()
-    try:
-        os.replace(tmp, cdir)  # concurrent compilers race benignly
-    except OSError:
-        import shutil as _sh
+    name = "pagerank"
+    tag = "aligned"
+    version = "v2"
+    dtype = np.float64
+    arrays = ("dang", "epos_src_local", "epos_dst_local", "epos_src_remote")
+    metrics_schema = (
+        "n_rows long, checksum long, delta_max double, dangling_sum double, "
+        "total_mass double, active long"
+    )
+    exchange_schema = "dst long, c double"
+    state_schema = "vid long, home long, rank double, prev_rank double, dangling boolean"
+    meta = {"weights": "norm"}
 
-        _sh.rmtree(tmp, ignore_errors=True)
-    return True
+    def __init__(self, damping: float, tol: float, seeds: list[int] | None,
+                 seed_crc: int | None) -> None:
+        self.damping, self.tol = damping, tol
+        self.seeds, self.seed_crc = seeds, seed_crc
 
-
-def _load_aligned(static_dir: str, sd: str, pid: int):
-    """mmap-loaded static+alignment arrays for one partition (or None).
-
-    Entries carry the compile dir's publish generation (``_OK`` inode+mtime)
-    and re-validate it on every hit, so a long-lived worker never serves a
-    stale mmap after init's rmtree+recompile under the same static_dir."""
-    from .scatter import compiled_generation
-
-    key = (static_dir, pid)
-    cdir = _aligned_cdir(static_dir, pid)
-    cached = _ALIGNED_CACHE.get(key)
-    if cached is not None and cached[0] == compiled_generation(cdir):
-        return cached[1]
-    for stale in [k for k in _ALIGNED_CACHE if k[0] != static_dir]:
-        del _ALIGNED_CACHE[stale]
-    if not os.path.exists(os.path.join(cdir, "_OK")):
-        if not _compile_aligned(static_dir, sd, pid, cdir):
-            return None
-    ent = {
-        "vids": np.load(os.path.join(cdir, "vids.npy"), mmap_mode="r"),
-        "dang": np.load(os.path.join(cdir, "dang.npy"), mmap_mode="r"),
-        "crc": int(np.load(os.path.join(cdir, "crc.npy"))[0]),
-    }
-    for name in _ALIGNED_OPT:
-        path = os.path.join(cdir, f"{name}.npy")
-        ent[name] = np.load(path, mmap_mode="r") if os.path.exists(path) else None
-    _ALIGNED_CACHE[key] = (compiled_generation(cdir), ent)
-    return ent
-
-
-# one row per partition (metrics + lineage) ∪ remote-partial rows for the
-# NEXT superstep (pid NULL) — a single fused job per superstep
-_METRICS_SCHEMA = (
-    "pid int, n_rows long, checksum long, delta_max double, "
-    "dangling_sum double, total_mass double, active long, dst long, c double"
-)
-
-
-def _pagerank_local_files(
-    edges: DataFrame,
-    *,
-    damping: float,
-    tol: float,
-    max_iter: int,
-    store: CheckpointStore,
-    run_id: str,
-    resume: bool,
-    num_partitions: int,
-    teleport_seeds: Sequence[int] | None = None,
-) -> GraphRun:
-    """Conversation-locality PageRank: per-partition file supersteps.
-
-    Every superstep is two small DataFrame jobs over a P-row frame (one row
-    per partition):
-
-    * **remote pass** — each task loads its shard's REMOTE edges (turn→tool;
-      pre-reduced to ≤ #hubs rows) and the previous state file, emits the
-      remote contributions; the driver merges them into a dict (tiny).
-    * **update pass** — each task loads its shard's LOCAL edges + the state
-      file, computes the full gather + rank update in NumPy, writes the next
-      state file (pyarrow, atomic rename), and emits ONE metrics row
-      (count/checksum lineage + convergence partials).
-
-    The heavy data never crosses the Python⇄JVM socket and never shuffles;
-    durable per-superstep checkpoints are the superstep output itself, and
-    the manifest commit (after the job) keeps the all-or-nothing semantics.
-    """
-    spark = edges.sparkSession
-    P = num_partitions
-    d = damping
-
-    # AQE off for the whole loop: the init write derives each file's pid from
-    # spark_partition_id(), which must equal pmod(hash(home), P) — AQE's
-    # partition coalescing would renumber partitions and misalign the files
-    # against the shards (same invariant as the runner's superstep loop).
-    _aqe_key = "spark.sql.adaptive.enabled"
-    _old_aqe = spark.conf.get(_aqe_key, "true")
-    spark.conf.set(_aqe_key, "false")
-    try:
-        return _pagerank_local_files_inner(
-            edges, damping=damping, tol=tol, max_iter=max_iter, store=store,
-            run_id=run_id, resume=resume, num_partitions=num_partitions,
-            teleport_seeds=teleport_seeds,
-        )
-    finally:
-        spark.conf.set(_aqe_key, _old_aqe)
-
-
-def _pagerank_local_files_inner(
-    edges: DataFrame,
-    *,
-    damping: float,
-    tol: float,
-    max_iter: int,
-    store: CheckpointStore,
-    run_id: str,
-    resume: bool,
-    num_partitions: int,
-    teleport_seeds: Sequence[int] | None = None,
-) -> GraphRun:
-    spark = edges.sparkSession
-    P = num_partitions
-    d = damping
-
-    # -- prep: normalized edges with locality keys, split shards -------------
-    # Shards, static vertex files and graph meta are deterministic
-    # re-derivations of the edge table — a warm run dir (re-bench at another
-    # parallelism level, resume, fresh run under the same run_id) skips the
-    # whole normalize/shard/vertices pipeline.
-    shard_dir = os.path.join(store.root, run_id, f"_edge_shards_p{P}")
-    static_meta = os.path.join(_static_dir(store, run_id, P), "_META.json")
-    vertices = None
-    meta = fsio.read_json(static_meta) if fsio.exists(os.path.join(shard_dir, "_DONE")) else None
-    # meta["sorted"] gates warm reuse: static vid files from before the
-    # sorted-layout change would break the searchsorted hub application.
-    # meta["weights"] gates the p-slot semantics: PageRank needs normalized
-    # probabilities ("norm"); a dir previously warmed by LPA holds raw
-    # summed weights ("raw", legacy marker raw_w) and CC constant 1.0
-    # ("unit") — silently gathering with those would corrupt every rank.
-    # Legacy dirs without either marker predate CC/LPA sharing and are norm.
-    _w = (meta or {}).get("weights", "raw" if (meta or {}).get("raw_w") else "norm")
-    if meta is not None and meta.get("sorted") and _w == "norm":
-        n, num_edges = int(meta["n"]), int(meta["num_edges"])
-    else:
-        if fsio.exists(os.path.join(shard_dir, "_DONE")):
-            from .scatter import purge_shard_dir
-
-            purge_shard_dir(shard_dir)
-            purge_shard_dir(_static_dir(store, run_id, P))
+    def shard_edges(self, edges: DataFrame) -> DataFrame:
         e = edges.groupBy("src", "dst").agg(
             F.sum("weight").alias("w"),
             F.first("src_home").alias("src_home"),
             F.first("dst_home").alias("dst_home"),
         )
         out_w = e.groupBy("src").agg(F.sum("w").alias("out_w"))
-        enorm = e.join(out_w, "src").select(
+        return e.join(out_w, "src").select(
             "src", "dst", (F.col("w") / F.col("out_w")).alias("p"), "src_home", "dst_home"
         )
-        if not fsio.exists(os.path.join(shard_dir, "_DONE")):
-            write_edge_shards_local(enorm, shard_dir, P)
-            fsio.touch(os.path.join(shard_dir, "_DONE"))
-        num_edges = enorm.count()
 
-        vertices = (
-            e.select(F.col("src").alias("vid"), F.col("src_home").alias("home"))
-            .unionByName(e.select(F.col("dst").alias("vid"), F.col("dst_home").alias("home")))
-            .groupBy("vid")
-            .agg(F.min("home").alias("home"))
-            .join(
-                out_w.select(F.col("src").alias("vid"), F.lit(True).alias("has_out")),
-                "vid",
-                "left",
-            )
-            .select("vid", "home", F.coalesce(F.col("has_out"), F.lit(False)).alias("has_out"))
+    def vertices(self, v: DataFrame, e: DataFrame) -> DataFrame:
+        has_out = e.select(F.col("src").alias("vid")).distinct().withColumn("has_out", F.lit(True))
+        return v.join(has_out, "vid", "left").select(
+            "vid", "home", (~F.coalesce(F.col("has_out"), F.lit(False))).alias("dangling")
         )
-        n = vertices.count()
-    if n == 0:
-        raise ValueError("pagerank: empty edge set")
 
-    # pack the P per-partition work items into ~one task per core: every
-    # Python task costs a worker round-trip (~10 ms), so 64 tasks on 8 cores
-    # would pay the fixed job cost twice over for nothing
-    master = spark.sparkContext.master
-    if master.startswith("local[") and "*" not in master:
-        n_slots = int(master[len("local["):-1])
-    else:
-        n_slots = spark.sparkContext.defaultParallelism
-    n_tasks = min(P, max(1, n_slots))
-    pids = spark.range(P, numPartitions=n_tasks).select(F.col("id").cast("int").alias("pid"))
-    sd = shard_dir
-    static_dir = _static_dir(store, run_id, P)
+    def check(self, run: Run, carry: dict | None) -> None:
+        if self.seeds is not None:
+            # the vertex universe lives in the (sorted) static vid files —
+            # one tiny job counts seed membership per partition
+            static_dir, seeds = run.lay.static_dir, self.seeds
 
-    seeds: list[int] | None = None
-    seed_crc: int | None = None
-    if teleport_seeds is not None:
-        seeds = sorted(set(int(x) for x in teleport_seeds))
-        if not seeds:
-            raise ValueError("pagerank: teleport_seeds is empty")
-        seed_crc = zlib.crc32(np.asarray(seeds, dtype=np.int64).tobytes())
-        if vertices is not None:
-            n_hit = vertices.where(F.col("vid").isin(seeds)).count()
-        else:
-            # warm run dir: the vertex universe lives in the (sorted) static
-            # vid files — one tiny job counts seed membership per partition
-            _seed_arr = seeds
-
-            def _seed_hits(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            def seed_hits(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
                 tot = 0
-                ss = np.asarray(_seed_arr, dtype=np.int64)
+                ss = np.asarray(seeds, dtype=np.int64)
                 for pdf in batches:
                     for pid in pdf["pid"].to_numpy():
-                        st = _read_state_part(static_dir, int(pid))
+                        st = read_state_part(static_dir, int(pid), columns=["vid"])
                         if st is None:
                             continue
                         v = st.column("vid").to_numpy()
-                        if len(v):
-                            pos = np.minimum(np.searchsorted(v, ss), len(v) - 1)
-                            tot += int(np.count_nonzero(v[pos] == ss))
+                        pos = np.minimum(np.searchsorted(v, ss), len(v) - 1)
+                        tot += int(np.count_nonzero(v[pos] == ss))
                 yield pd.DataFrame([{"hits": tot}])
 
-            n_hit = sum(
-                r["hits"]
-                for r in pids.mapInPandas(_seed_hits, schema="hits long").collect()
-            )
-        if n_hit != len(seeds):
-            raise ValueError(
-                f"pagerank: {len(seeds) - n_hit} teleport seed(s) not in the "
-                "graph — rank mass would silently leak"
-            )
-
-    history: list[dict[str, Any]] = []
-    carry: dict[str, Any] = {}
-    resumed_from: int | None = None
-    start = 0
-    import time as _time
-
-    def _split_rows(rows: list) -> tuple[list[dict], dict[int, float]]:
-        metrics_rows, remote = [], {}
-        for r in rows:
-            d_ = r.asDict()
-            if d_["pid"] is not None:
-                metrics_rows.append(d_)
-            else:
-                remote[int(d_["dst"])] = remote.get(int(d_["dst"]), 0.0) + float(d_["c"])
-        return metrics_rows, remote
-
-    def _combine(rows: list[dict], k: int) -> tuple[dict, list[dict], bool]:
-        # an empty metrics set is NEVER convergence — it means every task
-        # skipped (missing state/static files, e.g. a foreign run dir), and
-        # treating it as delta 0 would silently commit an empty "converged"
-        # run; partial coverage likewise means partition misalignment.
-        if not rows:
+            n_hit = sum(r["hits"] for r in run.pids.mapInPandas(seed_hits, "hits long").collect())
+            if n_hit != len(seeds):
+                raise ValueError(
+                    f"pagerank: {len(seeds) - n_hit} teleport seed(s) not in the "
+                    "graph — rank mass would silently leak"
+                )
+        if carry is not None and carry.get("ppr_crc") != self.seed_crc:
             raise RuntimeError(
-                f"superstep {k}: no partition emitted metrics — state files "
-                "missing or partitioning mismatch in the run directory"
+                f"cannot resume local-mode run {os.path.basename(run.lay.run_dir)!r}: committed with a "
+                "different teleport-seed set — resuming would silently blend "
+                "two different recurrences; use a fresh run_id"
             )
-        covered = sum(r["n_rows"] for r in rows)
-        if covered != n:
-            raise RuntimeError(
-                f"superstep {k}: tasks covered {covered} of {n} vertices — "
-                "state/shard partitioning mismatch"
-            )
+
+    def params(self, carry: dict, k: int) -> dict:
+        if k == 0:
+            return {}
+        rv = sorted((int(h), float(c)) for h, c in carry["remote"].items())
+        return {
+            "dangling_sum": carry["dangling_sum"],
+            "rvids": [h for h, _ in rv],
+            "rvals": [c for _, c in rv],
+        }
+
+    def combine(self, run: Run, rows: list[dict], exchange: list[dict], carry: dict,
+                k: int) -> tuple[dict, dict, bool]:
+        remote: dict[int, float] = {}
+        for r in exchange:
+            remote[int(r["dst"])] = remote.get(int(r["dst"]), 0.0) + float(r["c"])
         delta_max = max(r["delta_max"] for r in rows)
         metrics = {
-            "kernel": "pagerank",
             "delta_max": delta_max,
             "total_mass": sum(r["total_mass"] for r in rows),
             "active_vertices": sum(r["active"] for r in rows),
-            "edges_processed": num_edges,
-            "n_vertices": n,
         }
-        lineage = [
-            {"partition_id": r["pid"], "n_rows": r["n_rows"], "checksum": r["checksum"]}
-            for r in rows
-        ]
-        converged = k > 0 and delta_max < tol
-        return metrics, lineage, converged
+        carry = {
+            "dangling_sum": sum(r["dangling_sum"] for r in rows),
+            "remote": {str(h): c for h, c in remote.items()},
+            "ppr_crc": self.seed_crc,
+        }
+        return metrics, carry, delta_max < self.tol
 
-    def _state_df(k: int) -> DataFrame:
-        """Full state DataFrame reconstructed from static + rank-k files."""
+    def compile(self, st, vids, shard, pid: int) -> dict[str, np.ndarray]:
+        out = {"dang": st.column("dangling").to_numpy()}
+        for half in ("local", "remote"):
+            h = None if shard is None else shard[half]
+            if h is None:
+                continue
+            src_codes, src_uniq, dst_codes, dst_uniq, _p = h
+            epos = positions(vids, src_uniq, pid, f"{half} gather")
+            out[f"epos_src_{half}"] = epos[np.asarray(src_codes)]
+            if half == "local":
+                epos = positions(vids, dst_uniq, pid, "local gather")
+                out["epos_dst_local"] = epos[np.asarray(dst_codes)]
+        return out
 
-        def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                for pid in pdf["pid"].to_numpy():
-                    st = _read_state_part(static_dir, int(pid))
-                    rk = _read_rank_part(_state_dir(store, run_id, k), int(pid))
-                    if st is None or rk is None:
-                        continue
-                    yield pd.DataFrame(
-                        {
-                            "vid": st.column("vid").to_numpy(),
-                            "home": st.column("home").to_numpy(),
-                            "rank": rk,
-                            "prev_rank": rk,
-                            "dangling": st.column("dangling").to_numpy(),
-                        }
-                    )
+    def decode(self, prm: dict) -> dict:
+        n, d, dsum = prm["n"], self.damping, float(prm["dangling_sum"])
+        return {
+            "base": (1.0 - d) / n,
+            "dpv": dsum / n,
+            # personalized: teleport + dangling mass land ONLY on the seed
+            # vertices — seed_add pre-folds (1-d)+d·D over |S|
+            "seeds": None if self.seeds is None else np.asarray(self.seeds, dtype=np.int64),
+            "seed_add": ((1.0 - d) + d * dsum) / len(self.seeds) if self.seeds else 0.0,
+            # hub contributions as sorted parallel arrays: applied per
+            # partition with ONE np.searchsorted against the (sorted) static
+            # vids — no per-hub Python loop, no vertex-sized hash reindex
+            "rvids": np.asarray(prm["rvids"], dtype=np.int64),
+            "rvals": np.asarray(prm["rvals"], dtype=np.float64),
+        }
 
-        return pids.mapInPandas(
-            build, schema="vid long, home long, rank double, prev_rank double, dangling boolean"
-        )
+    def init(self, lay, pid, st, prm):
+        vids = st.column("vid").to_numpy()
+        ranks = np.full(len(vids), 1.0 / prm["n"])
+        m = _part_metrics(vids, ranks, ranks, st.column("dangling").to_numpy(), self.tol)
+        m["delta_max"] = 0.0
+        m["active"] = 0
+        return ranks, m, _remote_partials(lay.shard_dir, pid, vids, ranks)
 
-    if resume:
-        latest = store.latest(run_id)
-        if latest is not None:
-            man = store.manifest(run_id, latest)
-            carry = man["carry"]
-            # rank segments and static vid files are keyed by partition id:
-            # resuming under a different spark.sql.shuffle.partitions would
-            # read misaligned (or missing) segments. The csr path re-shards
-            # on mismatch; files of a committed run are not re-derivable
-            # state, so local mode refuses instead.
-            man_p = int(carry.get("P", -1))
-            if man_p != P:
-                raise RuntimeError(
-                    f"cannot resume local-mode run {run_id!r}: committed under "
-                    f"{man_p} shuffle partitions, session has {P} — restart "
-                    "with the original partition count or a fresh run_id"
-                )
-            if carry.get("ppr_crc") != seed_crc:
-                raise RuntimeError(
-                    f"cannot resume local-mode run {run_id!r}: committed with a "
-                    "different teleport-seed set — resuming would silently blend "
-                    "two different recurrences; use a fresh run_id"
-                )
-            history = store.metrics_history(run_id)
-            resumed_from = latest
-            if carry.get("_converged"):
-                return GraphRun(_state_df(latest), run_id, latest, True, history, resumed_from)
-            start = latest + 1
-    if resumed_from is None and not resume:
-        store.clear_run(run_id)
-
-    _tol = tol
-    base = (1.0 - d) / n
-
-    if start == 0:
-        # superstep 0: write the static columns ONCE (vid/home/dangling) and
-        # the initial rank vector; emit metrics + the remote partials for
-        # superstep 1 — per-superstep durable bytes from here on are the
-        # rank vector only (the north rule's "checkpoints rank vectors").
-        t0 = _time.monotonic()
-        sdir0 = _state_dir(store, run_id, 0)
-        inv_n = 1.0 / n
-
-        def write_init(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            import pyarrow as pa
-
-            pdfs = [b for b in batches if len(b)]
-            if not pdfs:
-                return
-            pdf = pd.concat(pdfs, ignore_index=True)
-            pid = int(pdf["pid"].iloc[0])
-            vids = pdf["vid"].to_numpy()
-            # static vids are written SORTED so every later superstep can
-            # apply hub (remote) contributions with one np.searchsorted
-            # instead of per-hub position scans
-            order = np.argsort(vids, kind="stable")
-            vids = vids[order]
-            ranks = pdf["rank"].to_numpy()[order]
-            dang = pdf["dangling"].to_numpy(dtype=bool)[order]
-            # rewriting static invalidates any compiled alignment of a
-            # previous derivation under this (store, run, P)
-            import shutil as _sh
-
-            _sh.rmtree(_aligned_cdir(static_dir, pid), ignore_errors=True)
-            _write_state_part(
-                static_dir,
-                pid,
-                pa.table(
-                    {
-                        "vid": pa.array(vids, pa.int64()),
-                        "home": pa.array(pdf["home"].to_numpy()[order], pa.int64()),
-                        "dangling": pa.array(dang, pa.bool_()),
-                    }
-                ),
-            )
-            _write_rank_part(sdir0, pid, ranks, None)
-            m = _part_metrics(vids, ranks, ranks, dang, _tol)
-            m["delta_max"] = 0.0
-            m["active"] = 0
-            yield pd.DataFrame([{"pid": pid, **m, "dst": None, "c": None}])
-            rp = _remote_partials(sd, pid, vids, ranks)
-            if rp is not None:
-                yield rp
-
-        def init_warm(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            # static files already on disk (warm run dir): only the constant
-            # 1/n rank vector needs writing. One metrics frame per task
-            # (same Arrow-batch batching as update_pass).
-            macc: list[dict] = []
-            for pdf in batches:
-                for pid in pdf["pid"].to_numpy():
-                    pid = int(pid)
-                    st = _read_state_part(static_dir, pid)
-                    if st is None:
-                        continue
-                    vids = st.column("vid").to_numpy()
-                    dang = st.column("dangling").to_numpy()
-                    ranks = np.full(len(vids), inv_n)
-                    _write_rank_part(sdir0, pid, ranks, None)
-                    m = _part_metrics(vids, ranks, ranks, dang, _tol)
-                    m["delta_max"] = 0.0
-                    m["active"] = 0
-                    macc.append({"pid": pid, **m, "dst": None, "c": None})
-                    rp = _remote_partials(sd, pid, vids, ranks)
-                    if rp is not None:
-                        yield rp
-            if macc:
-                yield pd.DataFrame(macc)
-
-        if vertices is not None:
-            init = vertices.select(
-                "vid", "home", F.lit(inv_n).alias("rank"), (~F.col("has_out")).alias("dangling")
-            ).repartition(P, "home")
-            rows = (
-                init.select(F.spark_partition_id().alias("pid"), *_STATE_COLS)
-                .mapInPandas(write_init, schema=_METRICS_SCHEMA)
-                .collect()
-            )
-            fsio.write_json_atomic(
-                static_meta,
-                {"n": n, "num_edges": num_edges, "P": P, "sorted": True, "weights": "norm"},
-            )
+    def update(self, lay, pid, al, ranks, prm, mk):
+        d, vids = self.damping, al["vids"]
+        t0 = time.perf_counter()
+        shard = _load_shard_split(lay.shard_dir, pid)
+        mk("shard", t0)
+        t0 = time.perf_counter()
+        if al["epos_src_local"] is not None:
+            p = shard["local"][4]
+            g = ranks[al["epos_src_local"]]
+            np.multiply(g, p, out=g)
+            local_c = np.bincount(al["epos_dst_local"], weights=g, minlength=len(vids))
         else:
-            rows = pids.mapInPandas(init_warm, schema=_METRICS_SCHEMA).collect()
-        metrics_rows, remote = _split_rows(rows)
-        metrics, lineage, _ = _combine(metrics_rows, 0)
-        carry = {
-            "dangling_sum": sum(r["dangling_sum"] for r in metrics_rows),
-            "remote": {str(k_): v for k_, v in remote.items()},
-            "P": P,
-            "ppr_crc": seed_crc,
+            local_c = np.zeros(len(vids))
+        mk("local", t0)
+        t0 = time.perf_counter()
+        if self.seeds is None:
+            new_rank = prm["base"] + d * (local_c + prm["dpv"])
+        else:
+            new_rank = d * local_c
+            seeds_np = prm["seeds"]
+            pos = np.minimum(np.searchsorted(vids, seeds_np), len(vids) - 1)
+            hit = np.asarray(vids[pos] == seeds_np)
+            if hit.any():
+                new_rank[pos[hit]] += prm["seed_add"]
+        rvids, rvals = prm["rvids"], prm["rvals"]
+        if len(rvids):
+            pos = np.minimum(np.searchsorted(vids, rvids), len(vids) - 1)
+            hit = np.asarray(vids[pos] == rvids)
+            if hit.any():
+                new_rank[pos[hit]] += d * rvals[hit]
+        mk("remote_align", t0)
+        t0 = time.perf_counter()
+        m = _part_metrics(vids, new_rank, ranks, al["dang"], self.tol, vids_crc=al["crc"])
+        mk("metrics", t0)
+        t0 = time.perf_counter()
+        exch = None
+        if al["epos_src_remote"] is not None:
+            dst_codes, dst_uniq = shard["remote"][2], shard["remote"][3]
+            g = new_rank[al["epos_src_remote"]]
+            np.multiply(g, shard["remote"][4], out=g)
+            sums = np.bincount(dst_codes, weights=g, minlength=len(dst_uniq))
+            exch = pd.DataFrame({"dst": np.asarray(dst_uniq), "c": sums})
+        mk("rpartials", t0)
+        return new_rank, m, exch
+
+    def merge(self, parts: list[pd.DataFrame], k: int) -> pd.DataFrame:
+        out = pd.concat(parts, ignore_index=True)
+        if k == 0:
+            # superstep 0 keeps one row per (partition, hub), so the driver
+            # adds the initial hub sums in pid order whatever the task
+            # packing — the float order the lineage checksums pin
+            return out
+        return out.groupby("dst", as_index=False)["c"].sum()
+
+    def state_frame(self, st, state: np.ndarray) -> dict:
+        return {
+            "vid": st.column("vid").to_numpy(),
+            "home": st.column("home").to_numpy(),
+            "rank": state,
+            "prev_rank": state,
+            "dangling": st.column("dangling").to_numpy(),
         }
-        metrics.update(superstep=0, wall_ms=round(1000 * (_time.monotonic() - t0), 1))
-        store.finalize(run_id, 0, lineage, metrics, carry)
-        history.append(metrics)
-        start = 1
-
-    converged = bool(carry.get("_converged"))
-    last = start - 1
-
-    # Per-superstep parameters travel through a tiny params file instead of
-    # the task closure: the update DataFrame below is then built + analyzed
-    # ONCE per run and re-collected every superstep (a fresh mapInPandas
-    # plan per superstep costs ~50 ms of analysis — pure driver-side fixed
-    # overhead that the N→4N scaling pair pays asymmetrically).
-    params_path = os.path.join(store.root, run_id, "_superstep_params.json")
-
-    def update_pass(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import time as _t
-
-        prm = fsio.read_json(params_path)
-        prev_dir, next_dir = prm["prev_dir"], prm["next_dir"]
-        recycle_dir = prm["recycle_dir"]
-        dpv = float(prm["dpv"])
-        seeds_prm = prm.get("seeds")
-        seeds_np = np.asarray(seeds_prm, dtype=np.int64) if seeds_prm is not None else None
-        seed_add = float(prm["seed_add"]) if seeds_prm is not None else 0.0
-        # hub contributions as sorted parallel arrays: applied per partition
-        # with ONE np.searchsorted against the (sorted) static vids — no
-        # per-hub Python loop, no vertex-sized hash reindex
-        rvids_g = np.asarray(prm["rvids"], dtype=np.int64)
-        rvals_g = np.asarray(prm["rvals"], dtype=np.float64)
-
-        instr = os.environ.get("TWSPARK_INSTR")
-        marks: list = []
-        # metrics AND remote contributions accumulate across ALL pids of
-        # this task and flush as ONE frame each: every yielded frame is a
-        # separate Arrow batch over the worker socket, and 64 one-row
-        # batches measured ~100 ms/superstep of pure serialization overhead
-        macc: list[dict] = []
-        racc: list[pd.DataFrame] = []
-
-        def mk(name, t0):
-            if instr:
-                marks.append((name, _t.perf_counter() - t0))
-
-        for pdf in batches:
-            for pid in pdf["pid"].to_numpy():
-                pid = int(pid)
-                t0 = _t.perf_counter()
-                al = _load_aligned(static_dir, sd, pid)
-                ranks = _read_rank_part(prev_dir, pid)
-                mk("read", t0)
-                if al is None or ranks is None:
-                    continue
-                vids, dang = al["vids"], al["dang"]
-                t0 = _t.perf_counter()
-                shard = _load_shard_split(sd, pid)
-                mk("shard", t0)
-                t0 = _t.perf_counter()
-                # local gather through the compiled per-edge position maps:
-                # one rank fancy-index + in-place multiply + one bincount
-                # straight into the vid-indexed vector
-                if al["epos_src_local"] is not None:
-                    p = shard["local"][4]
-                    g = ranks[al["epos_src_local"]]
-                    np.multiply(g, p, out=g)
-                    local_c = np.bincount(
-                        al["epos_dst_local"], weights=g, minlength=len(vids)
-                    )
-                else:
-                    local_c = np.zeros(len(vids))
-                mk("local", t0)
-                t0 = _t.perf_counter()
-                if seeds_prm is None:
-                    new_rank = base + d * (local_c + dpv)
-                else:
-                    # personalized: teleport + dangling mass land ONLY on the
-                    # seed vertices (seed_add pre-folds (1-d)+d·D over |S|)
-                    new_rank = d * local_c
-                    if len(vids):
-                        pos = np.minimum(np.searchsorted(vids, seeds_np), len(vids) - 1)
-                        hit = np.asarray(vids[pos] == seeds_np)
-                        if hit.any():
-                            new_rank[pos[hit]] += seed_add
-                if len(rvids_g):
-                    pos = np.searchsorted(vids, rvids_g)
-                    pos_c = np.minimum(pos, len(vids) - 1)
-                    hit = np.asarray(vids[pos_c] == rvids_g)
-                    if hit.any():
-                        new_rank[pos_c[hit]] += d * rvals_g[hit]
-                mk("remote_align", t0)
-                t0 = _t.perf_counter()
-                _write_rank_part(next_dir, pid, new_rank, recycle_dir)
-                mk("write", t0)
-                t0 = _t.perf_counter()
-                m = _part_metrics(vids, new_rank, ranks, dang, _tol, vids_crc=al["crc"])
-                mk("metrics", t0)
-                macc.append({"pid": pid, **m, "dst": None, "c": None})
-                t0 = _t.perf_counter()
-                if al["epos_src_remote"] is not None:
-                    dst_codes, dst_uniq = shard["remote"][2], shard["remote"][3]
-                    g = new_rank[al["epos_src_remote"]]
-                    np.multiply(g, shard["remote"][4], out=g)
-                    sums = np.bincount(dst_codes, weights=g, minlength=len(dst_uniq))
-                    racc.append(pd.DataFrame({"dst": np.asarray(dst_uniq), "c": sums}))
-                mk("rpartials", t0)
-        if macc:
-            yield pd.DataFrame(macc)
-        if racc:
-            merged = pd.concat(racc, ignore_index=True).groupby("dst", as_index=False)["c"].sum()
-            yield _remote_frame(merged["dst"].to_numpy(), merged["c"].to_numpy())
-        if instr and marks:
-            with open(f"{instr}/{os.getpid()}.log", "a") as f:
-                for name, dt in marks:
-                    f.write(f"{name} {dt:.4f}\n")
-
-    update_df = pids.mapInPandas(update_pass, schema=_METRICS_SCHEMA)
-    _instr = os.environ.get("TWSPARK_INSTR")
-
-    for k in range(start, max_iter + 1):
-        t0 = _time.monotonic()
-        dpv = carry["dangling_sum"] / n
-        remote = {int(k_): float(v) for k_, v in carry.get("remote", {}).items()}
-        rv = sorted(remote.items())
-        fsio.write_json_atomic(
-            params_path,
-            {
-                "superstep": k,
-                "prev_dir": _state_dir(store, run_id, k - 1),
-                "next_dir": _state_dir(store, run_id, k),
-                # retention window 2: writing superstep k recycles k-2's
-                # segments — k and k-1 stay durable, exactly what resume needs
-                "recycle_dir": _state_dir(store, run_id, k - 2) if k >= 2 else None,
-                "dpv": dpv,
-                "seeds": seeds,
-                "seed_add": (
-                    ((1.0 - d) + d * carry["dangling_sum"]) / len(seeds)
-                    if seeds is not None
-                    else 0.0
-                ),
-                "rvids": [x[0] for x in rv],
-                "rvals": [x[1] for x in rv],
-            },
-        )
-        t_params = _time.monotonic()
-        rows = update_df.collect()
-        t_collect = _time.monotonic()
-        metrics_rows, next_remote = _split_rows(rows)
-        metrics, lineage, converged = _combine(metrics_rows, k)
-        carry = {
-            "dangling_sum": sum(r["dangling_sum"] for r in metrics_rows),
-            "remote": {str(k_): v for k_, v in next_remote.items()},
-            "_converged": converged,
-            "P": P,
-            "ppr_crc": seed_crc,
-        }
-        metrics.update(superstep=k, wall_ms=round(1000 * (_time.monotonic() - t0), 1))
-        if _instr:
-            with open(f"{_instr}/driver.log", "a") as f:
-                f.write(
-                    f"{k} params {t_params - t0:.4f} collect {t_collect - t_params:.4f} "
-                    f"post {_time.monotonic() - t_collect:.4f}\n"
-                )
-        store.finalize(run_id, k, lineage, metrics, carry)
-        if k >= 2 and fsio.is_uri(store.root):
-            # local roots enforce the retention window implicitly (the k-2
-            # segment is renamed into k's slot by the recycle path); URI
-            # stores skip recycling, so delete k-2 explicitly or an
-            # object-store run accumulates one full rank vector per
-            # partition per superstep (retention window stays: k, k-1)
-            fsio.rmtree(_state_dir(store, run_id, k - 2))
-        history.append(metrics)
-        last = k
-        if converged:
-            break
-
-    return GraphRun(_state_df(last), run_id, last, converged, history, resumed_from)

@@ -40,28 +40,11 @@ __all__ = [
     "prepare_edges",
     "scatter_gather",
     "csr_gather",
-    "csr_remote_gather",
-    "local_gather_sums",
     "write_edge_shards",
     "write_edge_shards_local",
     "purge_shard_dir",
     "shard_pid",
 ]
-
-
-def compiled_generation(cdir: str):
-    """Identity token of one compiled-cache publish: the ``_OK`` marker's
-    (inode, mtime). ``os.replace`` of a fresh tmp dir gives every publish a
-    new inode, so worker-process caches keyed on the compile dir can detect
-    a re-publish (init's rmtree+recompile under the same path) instead of
-    serving a stale mmap alignment. ``None`` = not compiled."""
-    import os
-
-    try:
-        st = os.stat(os.path.join(cdir, "_OK"))
-        return (st.st_ino, st.st_mtime_ns)
-    except OSError:
-        return None
 
 
 @dataclass
@@ -320,12 +303,11 @@ def csr_gather(state: DataFrame, shard_dir: str) -> DataFrame:
 # edge's src and dst land in the same partition BY CONSTRUCTION — so its
 # contribution can be gathered AND applied entirely inside one Python worker,
 # never crossing an exchange. Only the remote edges (turn → tool hubs, a few
-# distinct dsts after per-shard pre-reduction) shuffle, and their aggregate
-# is small enough to broadcast back. This is the PowerGraph-style placement
-# insight expressed in DataFrame terms: per superstep the engine moves the
-# vertex frame through Arrow twice and shuffles ~|tools| rows — instead of
-# shuffling and hash-aggregating an edge-sized (75M-row at bench scale)
-# partial table.
+# distinct dsts after per-shard pre-reduction) cross partitions. This is the
+# PowerGraph-style placement insight: the file-superstep engine
+# (``graph/filesteps.py``) relays ~|tools| hub entries per superstep through
+# the driver instead of shuffling and hash-aggregating an edge-sized
+# (75M-row at bench scale) partial table.
 
 def write_edge_shards_local(enorm: DataFrame, shard_dir: str, num_partitions: int) -> None:
     """One-time shard write for locality mode.
@@ -349,29 +331,24 @@ def write_edge_shards_local(enorm: DataFrame, shard_dir: str, num_partitions: in
 
 
 def purge_shard_dir(shard_dir: str) -> None:
-    """Delete a shard dir so it can be rewritten with different weight
-    semantics (the three locality kernels share one ``_edge_shards_p{P}``
-    layout but put different values in the ``p`` slot — PageRank normalized
-    probabilities, CC constant 1.0, LPA raw summed weights). Also drops the
-    node-local compiled cache when the dir is an object-store URI; on a
-    multi-node cluster, rewriting a URI shard dir in place would still leave
-    OTHER nodes' caches stale — share run dirs across kernels only when the
-    weight semantics match, or use a fresh run_id."""
-    import hashlib
-    import os
+    """Delete a shard (or static) dir so it can be rewritten. The three
+    file-superstep kernels (``graph/filesteps.py``) share one
+    ``_edge_shards_p{P}`` layout but put different values in the ``p`` slot
+    — PageRank normalized probabilities, CC constant 1.0, LPA raw summed
+    weights — so the engine's cold prep purges a dir whose ``_META.json``
+    does not match the kernel before it re-shards. Also drops the node-local
+    compiled cache when the dir is an object-store URI; on a multi-node
+    cluster, rewriting a URI dir in place would still leave OTHER nodes'
+    caches stale — share run dirs across kernels only when the weight
+    semantics match, or use a fresh run_id."""
     import shutil
-    import tempfile
 
     from ..sources import fsio
+    from .filesteps import node_cache_root
 
     fsio.rmtree(shard_dir)
     if "://" in shard_dir:
-        root = os.path.join(
-            os.environ.get("TWSPARK_SHARD_CACHE", tempfile.gettempdir()),
-            "twspark_shard_cache",
-            hashlib.md5(shard_dir.encode()).hexdigest(),
-        )
-        shutil.rmtree(root, ignore_errors=True)
+        shutil.rmtree(node_cache_root(shard_dir), ignore_errors=True)
 
 
 _SPLIT_ARRAYS = ("src_codes", "src_uniq", "dst_codes", "dst_uniq", "p")
@@ -397,9 +374,9 @@ def _load_shard_split(shard_dir: str, pid: int):
     key = (shard_dir, pid, "split")
     for stale in [k for k in _SHARD_CACHE if k[0] != shard_dir]:
         del _SHARD_CACHE[stale]
-    import hashlib
     import os
-    import tempfile
+
+    from .filesteps import compiled_generation, node_cache_root
 
     if "://" in shard_dir:
         from pyarrow import fs as pafs
@@ -409,12 +386,7 @@ def _load_shard_split(shard_dir: str, pid: int):
         if filesystem.get_file_info(remote_path).type == pafs.FileType.NotFound:
             _SHARD_CACHE[key] = None
             return None
-        cache_root = os.path.join(
-            os.environ.get("TWSPARK_SHARD_CACHE", tempfile.gettempdir()),
-            "twspark_shard_cache",
-            hashlib.md5(shard_dir.encode()).hexdigest(),
-        )
-        cdir = os.path.join(cache_root, f"pid={pid}", "_compiled_v2")
+        cdir = os.path.join(node_cache_root(shard_dir), f"pid={pid}", "_compiled_v2")
         read_path, read_fs = remote_path, filesystem
     else:
         path = os.path.join(shard_dir, f"pid={pid}")
@@ -453,92 +425,24 @@ def _compile_shard_split(path: str, cdir: str, filesystem=None) -> None:
     ``filesystem`` (pyarrow FileSystem) reads the parquet from a remote
     store; the compiled output is always a LOCAL directory (mmap needs it).
     """
-    import os
-    import tempfile
-
     import pyarrow.parquet as pq
+
+    from .filesteps import publish
 
     tbl = pq.read_table(path, columns=["src", "dst", "p", "is_local"], filesystem=filesystem)
     mask = tbl.column("is_local").to_numpy()
-    os.makedirs(os.path.dirname(cdir), exist_ok=True)
-    tmp = tempfile.mkdtemp(dir=os.path.dirname(cdir), prefix="_compile_")
+    arrays = {}
     for half, sub in (("local", tbl.filter(mask)), ("remote", tbl.filter(~mask))):
         if sub.num_rows == 0:
             continue
-        arrs = _factorize_shard(sub)
-        for name, arr in zip(_SPLIT_ARRAYS, arrs):
+        for name, arr in zip(_SPLIT_ARRAYS, _factorize_shard(sub)):
             if name.endswith("_codes"):
                 # per-shard code space is far below 2^31 — int32 codes cut
                 # the per-superstep shard-scan bytes (the DRAM-bandwidth
                 # floor of the gather) by a third
                 arr = arr.astype(np.int32)
-            np.save(os.path.join(tmp, f"{half}_{name}.npy"), np.ascontiguousarray(arr))
-    open(os.path.join(tmp, "_OK"), "w").close()
-    try:
-        os.replace(tmp, cdir)  # atomic publish; concurrent compilers race benignly
-    except OSError:
-        import shutil as _sh
-
-        _sh.rmtree(tmp, ignore_errors=True)
-
-
-def csr_remote_gather(state: DataFrame, shard_dir: str) -> DataFrame:
-    """Pass A of the locality superstep: contributions along REMOTE edges
-    only — ``(dst, c)``, pre-reduced per shard. On a transcript graph this is
-    a few rows per shard (the tool hubs), so the downstream groupBy+broadcast
-    is negligible."""
-
-    def gather(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pdfs = [pdf for pdf in batches if len(pdf)]
-        if not pdfs:
-            return
-        pid = int(pdfs[0]["pid"].iloc[0])
-        shard = _load_shard_split(shard_dir, pid)
-        if shard is None or shard["remote"] is None:
-            return
-        src_codes, src_uniq, dst_codes, dst_uniq, p = shard["remote"]
-        ranks = pd.concat(pdfs, ignore_index=True)
-        aligned = (
-            pd.Series(ranks["rank"].to_numpy(), index=ranks["vid"].to_numpy())
-            .reindex(src_uniq)
-            .to_numpy()
-        )
-        if np.isnan(aligned).any():
-            missing = int(np.isnan(aligned).sum())
-            raise RuntimeError(
-                f"csr_remote_gather misalignment: {missing} shard srcs missing "
-                f"from state partition {pid} — state is not partitioned by the "
-                "home key the shards were written with"
-            )
-        contrib = p * aligned[src_codes]
-        sums = np.bincount(dst_codes, weights=contrib, minlength=len(dst_uniq))
-        yield pd.DataFrame({"dst": dst_uniq, "c": sums})
-
-    with_pid = state.select(F.spark_partition_id().alias("pid"), "vid", "rank")
-    partials = with_pid.mapInPandas(gather, schema="dst long, c double")
-    return partials.groupBy("dst").agg(F.sum("c").alias("c"))
-
-
-def local_gather_sums(pdf_vids: np.ndarray, pdf_ranks: np.ndarray, shard, pid: int) -> np.ndarray:
-    """Pass-B kernel: local-edge contributions per vid of this partition.
-
-    Pure NumPy; raises loudly on misalignment (a local edge endpoint missing
-    from the partition means the home-partitioning contract is broken).
-    """
-    if shard is None or shard["local"] is None:
-        return np.zeros(len(pdf_vids))
-    src_codes, src_uniq, dst_codes, dst_uniq, p = shard["local"]
-    idx = pd.Series(pdf_ranks, index=pdf_vids)
-    aligned_src = idx.reindex(src_uniq).to_numpy()
-    if np.isnan(aligned_src).any():
-        raise RuntimeError(f"local_gather: srcs missing from partition {pid}")
-    per_dst = np.bincount(dst_codes, weights=p * aligned_src[src_codes], minlength=len(dst_uniq))
-    pos = pd.Series(np.arange(len(pdf_vids)), index=pdf_vids).reindex(dst_uniq).to_numpy()
-    if np.isnan(pos).any():
-        raise RuntimeError(f"local_gather: dsts missing from partition {pid}")
-    out = np.zeros(len(pdf_vids))
-    np.add.at(out, pos.astype(np.int64), per_dst)
-    return out
+            arrays[f"{half}_{name}"] = arr
+    publish(cdir, arrays)
 
 
 def scatter_gather(

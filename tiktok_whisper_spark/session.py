@@ -19,12 +19,23 @@ written so that only ``master`` changes between local tests and a
 from __future__ import annotations
 
 import os
+import re
 import tempfile
 import zipfile
 
 from pyspark.sql import SparkSession
 
-__all__ = ["get_spark", "stop_spark", "ship_package", "build_pkg_zip"]
+__all__ = ["get_spark", "stop_spark", "ship_package", "build_pkg_zip", "local_slots"]
+
+
+def local_slots(master: str, star: int) -> int | None:
+    """Task slots of a ``local[N]``, ``local[N,F]``, ``local[*]`` or
+    ``local[*,F]`` master (``F`` is the task-failure retry count); ``star``
+    stands in for ``*``. ``None`` for any other master."""
+    m = re.fullmatch(r"local\[(\d+|\*)(?:,\d+)?\]", master.strip())
+    if m is None:
+        return None
+    return star if m.group(1) == "*" else int(m.group(1))
 
 
 def build_pkg_zip(zpath: str) -> str:
@@ -101,11 +112,8 @@ def get_spark(
         # local[N] → N threads; one shuffle partition per core keeps every
         # task busy without tiny-partition overhead at test scale. On a real
         # cluster this is overridden to ~2-3x total executor cores.
-        if master.startswith("local["):
-            spec = master[len("local[") : -1]
-            shuffle_partitions = cores if spec == "*" else int(spec)
-        else:
-            shuffle_partitions = 2 * cores
+        slots = local_slots(master, cores)
+        shuffle_partitions = 2 * cores if slots is None else slots
 
     # Iterative jobs allocate heavily and churn cached state; G1 with a
     # bounded pause target avoids multi-second stop-the-world stalls that
