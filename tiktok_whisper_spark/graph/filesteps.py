@@ -270,8 +270,8 @@ def load_compiled(kernel: Kernel, lay: Layout, pid: int) -> dict | None:
     purge+recompile under the same static_dir."""
     static_dir = lay.static_dir
     name = f"{kernel.tag}-{pid:05d}-{kernel.version}"
-    cdir = os.path.join(node_cache_root(static_dir), name) if fsio.is_uri(static_dir) \
-        else os.path.join(static_dir, name)
+    root = node_cache_root(static_dir) if fsio.is_uri(static_dir) else static_dir
+    cdir = os.path.join(root, name)
     key = (kernel.tag, static_dir, pid)
     cached = _COMPILED.get(key)
     if cached is not None and cached[0] == compiled_generation(cdir):

@@ -343,9 +343,7 @@ def _remote_partials(sd: str, pid: int, vids, ranks) -> pd.DataFrame | None:
     if shard is None or shard["remote"] is None:
         return None
     src_codes, src_uniq, dst_codes, dst_uniq, p = shard["remote"]
-    aligned = pd.Series(ranks, index=vids).reindex(src_uniq).to_numpy()
-    if np.isnan(aligned).any():
-        raise RuntimeError(f"remote gather misalignment in partition {pid}")
+    aligned = ranks[positions(vids, src_uniq, pid, "remote gather")]
     sums = np.bincount(dst_codes, weights=p * aligned[src_codes], minlength=len(dst_uniq))
     return pd.DataFrame({"dst": np.asarray(dst_uniq), "c": sums})
 
