@@ -30,6 +30,7 @@ semilattice), so the final labels match the DataFrame path and the
 union-find oracle exactly even though the hub relay makes intermediate
 supersteps Gauss-Seidel-fresh rather than strictly Jacobi.
 """
+
 from __future__ import annotations
 
 import numpy as np
