@@ -99,7 +99,7 @@ def write_rank_part(state_dir: str, pid: int, ranks: np.ndarray, recycle_dir: st
     Postgres-WAL-style segment recycling: the retired superstep's file (same
     byte size — the vertex set is fixed) is renamed into place and
     overwritten WITHOUT truncation, so tmpfs pages are reused instead of
-    freshly faulted. On this sandbox's hypervisor, fresh anonymous/tmpfs
+    freshly faulted. On the VM this was measured on, fresh anonymous/tmpfs
     pages zero at ~2.2 GB/s machine-wide while warm pages rewrite at
     ~15 GB/s — recycling turns the per-superstep durable write from the
     dominant fixed cost into noise. A torn write is harmless: the manifest
@@ -201,7 +201,7 @@ def positions(vids: np.ndarray, values, pid: int, what: str) -> np.ndarray:
 # work: Spark assigns tasks to workers arbitrarily, so most supersteps miss
 # and rebuild a vertex-sized alignment in freshly-faulted pages (measured:
 # the rebuild anti-scales with cores — fresh-page zeroing is a machine-wide
-# ~2 GB/s resource on this VM). Instead the arrays are COMPILED ONCE per
+# ~2 GB/s resource on the measured VM). Instead the arrays are COMPILED ONCE per
 # (run, kernel, pid) into mmap-able ``.npy`` files next to the static state
 # (a node-local cache for URI stores, like the shards): any worker's "miss"
 # is then a mmap open (microseconds) against pages every worker on the
@@ -237,8 +237,8 @@ def publish(cdir: str, arrays: dict[str, np.ndarray]) -> None:
 
     Superseded versions of the same dir (``<stem>-v*``) are dropped first: a
     version bump would otherwise leave the old arrays resident in the store
-    forever (6.7 GB of orphaned v1 dirs contributed to a tmpfs OOM in
-    round 5)."""
+    forever (6.7 GB of orphaned v1 dirs once contributed to a tmpfs
+    OOM)."""
     parent = os.path.dirname(cdir)
     os.makedirs(parent, exist_ok=True)
     stem = os.path.basename(cdir).rsplit("-", 1)[0]
