@@ -104,43 +104,15 @@ def test_fresh_run_clears_stale_supersteps(spark, tmp_path):
     edges = _edges_df(spark)
     full = pagerank(edges, store=store, run_id="r")  # to convergence
     assert full.converged and store.latest("r") == full.supersteps > 2
+    # the state is file-backed: read it before the rerun clears its files
+    want = {r["vid"]: r["rank"] for r in full.state.collect()}
     pagerank(edges, store=store, run_id="r", max_iter=2, resume=False)
     assert store.latest("r") == 2  # all later supersteps are gone
     resumed = pagerank(edges, store=store, run_id="r", resume=True)
     assert resumed.resumed_from == 2 and resumed.converged
     got = {r["vid"]: r["rank"] for r in resumed.state.collect()}
-    want = {r["vid"]: r["rank"] for r in full.state.collect()}
     for v in want:
         assert abs(got[v] - want[v]) < 1e-9
-
-
-def test_csr_shards_readable_via_filesystem_uri(spark, tmp_path):
-    """Workers read shards through pyarrow's FileSystem API — a file:// URI
-    exercises the object-store code path (s3://, gs:// on a real cluster)."""
-    from pyspark.sql import functions as F
-
-    from tiktok_whisper_spark.graph.scatter import csr_gather, write_edge_shards
-
-    P = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    enorm = spark.createDataFrame(
-        [(s, d, 1.0 / 2) for s, d, _ in EDGES for _ in (0,)][:0]
-        + [(1, 2, 0.5), (1, 5, 0.5), (2, 3, 1.0), (3, 4, 1.0), (4, 1, 1.0), (5, 2, 1.0)],
-        "src long, dst long, p double",
-    )
-    shard_dir = str(tmp_path / "shards")
-    write_edge_shards(enorm, shard_dir, P)
-    state = (
-        enorm.select(F.col("src").alias("vid"))
-        .unionByName(enorm.select(F.col("dst").alias("vid")))
-        .distinct()
-        .select("vid", F.lit(0.2).alias("rank"))
-        .repartition(P, "vid")
-        .localCheckpoint(eager=True)
-    )
-    local = {r["dst"]: r["c"] for r in csr_gather(state, shard_dir).collect()}
-    via_uri = {r["dst"]: r["c"] for r in csr_gather(state, f"file://{shard_dir}").collect()}
-    assert via_uri == local and len(local) == 5
-    state.unpersist()
 
 
 def test_iceberg_backend_selectable(spark, tmp_path):
@@ -164,7 +136,8 @@ def test_iceberg_backend_selectable(spark, tmp_path):
             "and spark.sql.catalog.lake[.type/.warehouse] at submit time"
         )
     store = IcebergCheckpointStore(spark, catalog="lake")
-    run = pagerank(_edges_df(spark), store=store, run_id="iceberg-e2e")
+    # the Iceberg store holds graph.runner state; csr/local runs keep files
+    run = pagerank(_edges_df(spark), store=store, run_id="iceberg-e2e", scatter_mode="arrow")
     assert run.converged
     assert store.latest("iceberg-e2e") == run.supersteps
 
@@ -196,7 +169,8 @@ def test_superstep_retry_recovers_transient_failure(spark, tmp_path, monkeypatch
     """T2 (reference batch.go:130-135 retry policy): a job-level transient on
     a superstep's materialization is retried and the run completes with the
     SAME result and a normal commit history — the retry path actually
-    executes (failure injected on the first in-run localCheckpoint)."""
+    executes (failure injected on the first in-run localCheckpoint). Runs on
+    ``scatter_mode="arrow"``, a kernel that still drives ``graph.runner``."""
     # patch the CONCRETE class (pyspark.sql.DataFrame is the abstract parent
     # in Spark 4; instances dispatch to the classic subclass's method)
     from pyspark.sql.classic.dataframe import DataFrame
@@ -204,7 +178,8 @@ def test_superstep_retry_recovers_transient_failure(spark, tmp_path, monkeypatch
     from tiktok_whisper_spark.graph import runner as runner_mod
 
     store = CheckpointStore(str(tmp_path / "retry"))
-    clean = pagerank(_edges_df(spark), store=store, run_id="clean", tol=1e-3)
+    clean = pagerank(_edges_df(spark), store=store, run_id="clean", tol=1e-3,
+                     scatter_mode="arrow")
     assert clean.converged
 
     monkeypatch.setattr(runner_mod.time, "sleep", lambda s: None)  # skip backoff
@@ -219,7 +194,8 @@ def test_superstep_retry_recovers_transient_failure(spark, tmp_path, monkeypatch
         return orig(self, eager)
 
     monkeypatch.setattr(DataFrame, "localCheckpoint", flaky)
-    run = pagerank(_edges_df(spark), store=store, run_id="flaky", tol=1e-3)
+    run = pagerank(_edges_df(spark), store=store, run_id="flaky", tol=1e-3,
+                   scatter_mode="arrow")
     monkeypatch.setattr(DataFrame, "localCheckpoint", orig)
 
     assert state["failures"] == 1  # the injected failure really happened
@@ -231,33 +207,52 @@ def test_superstep_retry_recovers_transient_failure(spark, tmp_path, monkeypatch
 
 
 def test_ppr_resume_rebuilds_teleport_and_guards_seed_mismatch(spark, tmp_path):
-    """Distributed-mode PPR resume: the 't' teleport column is not persisted
-    (pure function of the seed set) and must be rebuilt by restore_fn; a
-    resume under a different teleport config must refuse, both mid-run and
-    after convergence (the converged short-circuit returns stored state)."""
+    """PPR resume on both superstep loops: the default csr mode (file
+    supersteps, seed set in the params file) and arrow (``graph.runner``,
+    where the 't' teleport column is not persisted — a pure function of the
+    seed set — and must be rebuilt by restore_fn). A resume under a
+    different teleport config must refuse, both mid-run and after
+    convergence (the converged short-circuit returns stored state)."""
     store = CheckpointStore(str(tmp_path / "ckpt"))
     edges = _edges_df(spark)
     seeds = [1, 3]
 
-    full = pagerank(edges, store=store, run_id="pprfull", teleport_seeds=seeds)
-    assert full.converged
+    for mode in ("csr", "arrow"):
+        def ppr(run_id, **kw):
+            return pagerank(edges, store=store, run_id=f"{run_id}-{mode}", scatter_mode=mode, **kw)
 
-    partial = pagerank(edges, store=store, run_id="ppr", teleport_seeds=seeds, max_iter=2)
-    assert not partial.converged
-    resumed = pagerank(edges, store=store, run_id="ppr", teleport_seeds=seeds, resume=True)
-    assert resumed.resumed_from == 2 and resumed.converged
-    got_full = {r["vid"]: r["rank"] for r in full.state.collect()}
-    got_res = {r["vid"]: r["rank"] for r in resumed.state.collect()}
-    np.testing.assert_allclose(
-        [got_res[v] for v in sorted(got_res)],
-        [got_full[v] for v in sorted(got_full)],
-        rtol=0, atol=1e-12,
-    )
-    # mid-run resume with a different seed set → refuse
-    partial2 = pagerank(edges, store=store, run_id="ppr2", teleport_seeds=seeds, max_iter=2)
-    assert not partial2.converged
-    with pytest.raises(RuntimeError, match="teleport-seed"):
-        pagerank(edges, store=store, run_id="ppr2", teleport_seeds=[2], resume=True)
-    # converged run_id resumed under GLOBAL teleport → refuse, not stale ranks
-    with pytest.raises(RuntimeError, match="teleport-seed"):
-        pagerank(edges, store=store, run_id="ppr", resume=True)
+        full = ppr("pprfull", teleport_seeds=seeds)
+        assert full.converged
+
+        partial = ppr("ppr", teleport_seeds=seeds, max_iter=2)
+        assert not partial.converged
+        resumed = ppr("ppr", teleport_seeds=seeds, resume=True)
+        assert resumed.resumed_from == 2 and resumed.converged
+        got_full = {r["vid"]: r["rank"] for r in full.state.collect()}
+        got_res = {r["vid"]: r["rank"] for r in resumed.state.collect()}
+        np.testing.assert_allclose(
+            [got_res[v] for v in sorted(got_res)],
+            [got_full[v] for v in sorted(got_full)],
+            rtol=0, atol=1e-12,
+        )
+        # mid-run resume with a different seed set → refuse
+        partial2 = ppr("ppr2", teleport_seeds=seeds, max_iter=2)
+        assert not partial2.converged
+        with pytest.raises(RuntimeError, match="teleport-seed"):
+            ppr("ppr2", teleport_seeds=[2], resume=True)
+        # converged run_id resumed under GLOBAL teleport → refuse, not stale ranks
+        with pytest.raises(RuntimeError, match="teleport-seed"):
+            ppr("ppr", resume=True)
+
+
+def test_file_backed_state_raises_after_store_deleted(spark, tmp_path):
+    """csr/local state is read from the run's files when evaluated: once the
+    store is gone, reading it must raise, not return an empty frame."""
+    import shutil
+
+    store = CheckpointStore(str(tmp_path / "gone"))
+    run = pagerank(_edges_df(spark), store=store, run_id="r", max_iter=3)
+    assert run.state.count() == 5
+    shutil.rmtree(store.root)
+    with pytest.raises(Exception, match="_META.json"):
+        run.state.collect()

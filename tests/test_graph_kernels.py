@@ -261,12 +261,14 @@ def test_pagerank_local_mode_matches_csr_and_oracle(spark, tmp_path):
     )
 
 
-def test_pagerank_local_mode_via_file_uri(spark, tmp_path, monkeypatch):
-    """A ``file://`` URI store root drives the ENTIRE local-mode durable
+@pytest.mark.parametrize("mode", ["local", "csr"])
+def test_pagerank_local_mode_via_file_uri(spark, tmp_path, monkeypatch, mode):
+    """A ``file://`` URI store root drives the ENTIRE file-superstep durable
     surface through pyarrow's FileSystem API — rank segments, static files,
     shard markers, manifests, and the node-local compiled-shard cache — the
     same code path an object-store (s3://, gs://) root takes on a cluster.
-    Ranks must match a plain local-path run exactly."""
+    Ranks must match a plain local-path run exactly, under conversation
+    homes (local) and hash homes (csr) alike."""
     from tiktok_whisper_spark import datagen
     from tiktok_whisper_spark.operators.edges import turn_adjacency_edges, turn_tool_edges
     from tiktok_whisper_spark.sources.catalog import CheckpointStore
@@ -279,11 +281,11 @@ def test_pagerank_local_mode_via_file_uri(spark, tmp_path, monkeypatch):
         .localCheckpoint()
     )
     r_uri = pagerank(
-        e, scatter_mode="local",
+        e, scatter_mode=mode,
         store=CheckpointStore(f"file://{tmp_path}/uri_store"), resume=False,
     )
     r_path = pagerank(
-        e, scatter_mode="local",
+        e, scatter_mode=mode,
         store=CheckpointStore(str(tmp_path / "path_store")), resume=False,
     )
     assert r_uri.converged and r_path.converged
@@ -319,10 +321,12 @@ def _home_edges(spark, n_convs, seed):
     )
 
 
-# the three local-mode (file-superstep) kernels behind their public calls;
-# synchronous LPA 2-cycles on transcript graphs, so it runs a fixed count
+# the file-superstep kernels behind their public calls (csr: PageRank with
+# hash homes); synchronous LPA 2-cycles on transcript graphs, so it runs a
+# fixed count
 LOCAL_KERNELS = {
     "pagerank": lambda e, **kw: pagerank(e, scatter_mode="local", **kw),
+    "csr": lambda e, **kw: pagerank(e, scatter_mode="csr", **kw),
     "cc": lambda e, **kw: connected_components(e, scatter_mode="local", **kw),
     "lpa": lambda e, max_iter=8, **kw: label_propagation(
         e, scatter_mode="local", max_iter=max_iter, **kw),
@@ -356,6 +360,34 @@ def test_local_mode_kill_resume(spark, tmp_path, kernel):
         got = {r["vid"]: r["label"] for r in res.state.collect()}
         rows = [(r["src"], r["dst"], r["weight"]) for r in e.select("src", "dst", "weight").collect()]
         assert got == cc_oracle(rows)
+
+
+@pytest.mark.parametrize("kernel", list(LOCAL_KERNELS))
+def test_load_state_matches_stopped_run(spark, tmp_path, kernel):
+    """``CheckpointStore.load_state(k)`` of a file-superstep run returns the
+    state a run stopped at superstep k returns, with the same columns; a
+    superstep whose segments were recycled raises instead of reading back
+    empty."""
+    from tiktok_whisper_spark.sources.catalog import CheckpointStore
+
+    run = LOCAL_KERNELS[kernel]
+    e = _home_edges(spark, 40, 9)
+    store = CheckpointStore(str(tmp_path / "ck"))
+    full = run(e, store=store, run_id="full", resume=False)
+    k = full.supersteps - 1
+    stopped = run(e, store=store, run_id="stop", max_iter=k, resume=False)
+    assert stopped.supersteps == k
+
+    def rows(df):
+        return sorted(map(tuple, df.collect()))
+
+    loaded = store.load_state(spark, "full", k)
+    assert loaded.columns == stopped.state.columns
+    assert rows(loaded) == rows(stopped.state)
+    assert rows(store.load_state(spark, "full", full.supersteps)) == rows(full.state)
+    # retention window 2: superstep k-1's segments were recycled into k+1
+    with pytest.raises(Exception, match="no superstep-"):
+        store.load_state(spark, "full", k - 1).collect()
 
 
 @pytest.mark.parametrize("kernel", list(LOCAL_KERNELS))
@@ -509,7 +541,8 @@ def test_local_mode_shard_weight_semantics_gate(spark, tmp_path):
     p slot carries the wrong weight semantics (round-4 advisory, MEDIUM):
     PageRank writes normalized probabilities, CC constant 1.0, LPA raw
     summed weights. The meta gate purges and rewrites on mismatch; CC (which
-    ignores weights) may warm any layout."""
+    ignores weights) may warm any layout. csr's hash homes (home = vid) are
+    gated the same way against conversation homes."""
     from tiktok_whisper_spark.sources.catalog import CheckpointStore
 
     t = datagen.transcripts(spark, n_convs=30, seed=11)
@@ -548,6 +581,10 @@ def test_local_mode_shard_weight_semantics_gate(spark, tmp_path):
     r2 = {r["vid"]: r["rank"] for r in pr2.state.collect()}
     rf = {r["vid"]: r["rank"] for r in pr_fresh.state.collect()}
     assert r2 == rf
+    # 4) csr on the conversation-homed dir: re-sharded on hash homes
+    csr = pagerank(e, tol=1e-8, max_iter=30, store=store, run_id="shared",
+                   resume=False, scatter_mode="csr")
+    assert all(r["home"] == r["vid"] for r in csr.state.collect())
 
 
 def test_triangles_hub_split_matches_plain(spark):

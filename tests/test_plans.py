@@ -34,9 +34,15 @@ def test_small_dim_broadcasts(spark, sf_dir):
 
 def test_superstep_pays_single_exchange(spark):
     """The iterative hot loop: edges persisted by src, state localCheckpoint-ed
-    by vid → the only paid shuffle is the gather groupBy(dst)."""
+    by vid → the only paid shuffle is the gather groupBy(dst). With AQE off
+    (as the runner sets it) localCheckpoint must preserve
+    hashpartitioning(vid, P) — under AQE the checkpointed plan reports
+    UnknownPartitioning and every superstep re-shuffles the WHOLE vertex
+    state (the round-1 scaling killer)."""
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    old_aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
         edges = spark.createDataFrame(
             [(i, (i * 7) % 500, 1.0) for i in range(2000)], "src long, dst long, weight double"
@@ -51,6 +57,8 @@ def test_superstep_pays_single_exchange(spark):
             .repartition(8, "vid")
             .localCheckpoint(eager=True)
         )
+        part = state._jdf.queryExecution().executedPlan().outputPartitioning().toString()
+        assert "hashpartitioning" in part, part
         sums = scatter_gather(pe, state, F.col("p") * F.col("rank"), mode="arrow")
         new = state.join(sums, state["vid"] == sums["dst"], "left_outer").select(
             state["vid"], F.coalesce(sums["c"], F.lit(0.0)).alias("rank")
@@ -60,53 +68,7 @@ def test_superstep_pays_single_exchange(spark):
         state.unpersist()
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-
-
-def test_csr_superstep_single_exchange_and_preserved_partitioning(spark):
-    """The CSR hot loop with AQE off (as the runner sets it): localCheckpoint
-    must preserve hashpartitioning(vid, P) so the update join is
-    exchange-free — under AQE the checkpointed plan reports
-    UnknownPartitioning and every superstep re-shuffles the WHOLE vertex
-    state (the round-1 scaling killer)."""
-    import re
-    import tempfile
-
-    from tiktok_whisper_spark.graph.scatter import csr_gather, write_edge_shards
-
-    old = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        P = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        enorm = spark.createDataFrame(
-            [(1, 2, 0.5), (1, 5, 0.5), (2, 3, 1.0), (3, 4, 1.0), (4, 1, 1.0), (5, 2, 1.0)],
-            "src long, dst long, p double",
-        )
-        sd = tempfile.mkdtemp() + "/shards"
-        write_edge_shards(enorm, sd, P)
-        state = (
-            enorm.select(F.col("src").alias("vid"))
-            .unionByName(enorm.select(F.col("dst").alias("vid")))
-            .distinct()
-            .select("vid", F.lit(0.2).alias("rank"), F.lit(False).alias("dangling"))
-            .repartition(P, "vid")
-            .localCheckpoint(eager=True)
-        )
-        part = state._jdf.queryExecution().executedPlan().outputPartitioning().toString()
-        assert "hashpartitioning" in part, part
-        sums = csr_gather(state.select("vid", "rank"), sd)
-        new = state.join(
-            sums.hint("shuffle_hash"), state["vid"] == sums["dst"], "left_outer"
-        ).select(
-            state["vid"],
-            (F.lit(0.1) + F.coalesce(sums["c"], F.lit(0.0))).alias("rank"),
-            state["dangling"],
-        )
-        plan = explain.physical_plan(new)
-        assert len(re.findall(r"Exchange hashpartitioning", plan)) == 1, plan
-        assert "ShuffledHashJoin" in plan
-        state.unpersist()
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", old)
+        spark.conf.set("spark.sql.adaptive.enabled", old_aqe)
 
 
 def test_paginate_never_globally_windows_full_input(spark, sf_dir):

@@ -198,7 +198,8 @@ class CCFiles(Kernel):
     def merge(self, parts: list[pd.DataFrame], k: int) -> pd.DataFrame:
         return pd.concat(parts, ignore_index=True).groupby("dst", as_index=False)["c"].min()
 
-    def state_frame(self, st, state: np.ndarray) -> dict:
+    @staticmethod
+    def state_frame(st, state: np.ndarray) -> dict:
         return {
             "vid": st.column("vid").to_numpy(),
             "home": st.column("home").to_numpy(),

@@ -1,7 +1,9 @@
-"""File-superstep engine: the local-mode loop of PageRank, CC and LPA.
+"""File-superstep engine: the local-mode loop of PageRank, CC and LPA, and
+PageRank's csr mode.
 
 Edge tables with ``src_home``/``dst_home`` locality keys run as per-partition
-*file supersteps*. The vertex state lives in raw fixed-width segments
+*file supersteps*; PageRank's csr mode supplies hash homes (home = vid) for
+graphs without them. The vertex state lives in raw fixed-width segments
 (``superstep=NNNNNN/state/rank-PPPPP.f64``) hash-partitioned by home, next to
 sorted static vertex files (``_static_p{P}``) and locality-split edge shards
 (``_edge_shards_p{P}``). Every superstep is ONE analyzed DataFrame job over a
@@ -51,7 +53,7 @@ from ..sources.catalog import CheckpointStore
 from .runner import GraphRun
 from .scatter import _load_shard_split, purge_shard_dir, write_edge_shards_local
 
-__all__ = ["Kernel", "Layout", "run_local"]
+__all__ = ["Kernel", "Layout", "committed_state", "run_local"]
 
 
 # =============================================================================
@@ -61,7 +63,7 @@ __all__ = ["Kernel", "Layout", "run_local"]
 
 @dataclass(frozen=True)
 class Layout:
-    """Where one local-mode run keeps its files (all under ``run_dir``)."""
+    """Where one file-superstep run keeps its files (all under ``run_dir``)."""
 
     run_dir: str
     P: int
@@ -374,8 +376,11 @@ class Kernel:
         """Pre-merge one task's exchange frames."""
         return pd.concat(parts, ignore_index=True)
 
-    def state_frame(self, st, state: np.ndarray) -> dict:
-        """Columns of the returned state for one partition."""
+    @staticmethod
+    def state_frame(st, state: np.ndarray) -> dict:
+        """Columns of the returned state for one partition (``st`` its static
+        table); static, so a committed run reads back without its kernel's
+        call arguments."""
         raise NotImplementedError
 
 
@@ -480,7 +485,9 @@ def _prepare(edges: DataFrame, kernel: Kernel, lay: Layout) -> tuple[int, int]:
     # legacy marker raw_w), CC constant 1.0 ("unit") but accepts any —
     # silently gathering or voting with the wrong ones would corrupt every
     # result. Dirs without either marker predate CC/LPA sharing and are norm.
-    if meta is not None and meta.get("sorted"):
+    # meta["homes"] ("vid" for hash homes) gates the partitioning: a dir
+    # sharded on the other kind of home must not be reused either.
+    if meta is not None and meta.get("sorted") and meta.get("homes") == kernel.meta.get("homes"):
         weights = meta.get("weights", "raw" if meta.get("raw_w") else "norm")
         if kernel.any_weights or weights == kernel.meta["weights"]:
             return int(meta["n"]), int(meta["num_edges"])
@@ -536,26 +543,62 @@ def _write_static(vertices: DataFrame, lay: Layout) -> int:
     return sum(r["n"] for r in rows)
 
 
-def _task_slots(spark) -> int:
+def _pids(spark, P: int) -> DataFrame:
+    """One row per partition id, packed into ~one task per core: every
+    Python task costs a worker round-trip (~10 ms), so 64 tasks on 8 cores
+    would pay the fixed job cost twice over for nothing."""
     sc = spark.sparkContext
     slots = local_slots(sc.master, sc.defaultParallelism)
-    return sc.defaultParallelism if slots is None else slots
+    n_tasks = min(P, max(1, sc.defaultParallelism if slots is None else slots))
+    return spark.range(P, numPartitions=n_tasks).select(F.col("id").cast("int").alias("pid"))
 
 
 def _state_df(kernel: Kernel, run: Run, k: int) -> DataFrame:
-    """Full state DataFrame reconstructed from static + superstep-k files."""
-    lay = run.lay
+    """Full state DataFrame reconstructed from static + superstep-k files.
+
+    The files are read when the frame is evaluated. A run dir without
+    ``_META.json`` (deleted, or never prepared), or a partition with a static
+    file but no superstep-k segment (recycled by the retention window, or
+    deleted), raises: an empty or partial frame would pass for a result.
+    Partitions without a static file hold no vertices and yield no rows."""
+    static_dir, state_dir = run.lay.static_dir, run.lay.state_dir(k)
+    meta_path = os.path.join(static_dir, "_META.json")
+    name, dtype, frame = kernel.name, kernel.dtype, kernel.state_frame
 
     def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        if not fsio.exists(meta_path):
+            raise RuntimeError(
+                f"{name}: {meta_path} is missing — the run directory was deleted "
+                "or never prepared"
+            )
         for pdf in batches:
             for pid in pdf["pid"].to_numpy():
-                st = read_state_part(lay.static_dir, int(pid))
-                vec = read_rank_part(lay.state_dir(k), int(pid), dtype=kernel.dtype)
-                if st is None or vec is None:
+                st = read_state_part(static_dir, int(pid))
+                if st is None:
                     continue
-                yield pd.DataFrame(kernel.state_frame(st, vec))
+                vec = read_rank_part(state_dir, int(pid), dtype=dtype)
+                if vec is None:
+                    raise RuntimeError(
+                        f"{name}: partition {pid} has no superstep-{k} segment in "
+                        f"{state_dir} — it was recycled or deleted"
+                    )
+                yield pd.DataFrame(frame(st, vec))
 
     return run.pids.mapInPandas(build, schema=kernel.state_schema)
+
+
+def committed_state(spark, run_dir: str, k: int, manifest: dict) -> DataFrame:
+    """The committed superstep-``k`` state of a file-superstep run, with the
+    columns of its ``GraphRun.state``. ``manifest`` (superstep k's) names the
+    kernel (``metrics.kernel``) and the partition count (``carry.P``)."""
+    from .cc_local import CCFiles
+    from .lpa_local import LPAFiles
+    from .pagerank import _PageRankFiles
+
+    kernels = {c.name: c for c in (_PageRankFiles, CCFiles, LPAFiles)}
+    kernel = kernels[manifest["metrics"]["kernel"]]
+    P = int(manifest["carry"]["P"])
+    return _state_df(kernel, Run(Layout(run_dir, P), _pids(spark, P)), k)
 
 
 def run_local(
@@ -592,12 +635,7 @@ def _run_local(edges, kernel, *, max_iter, store, run_id, resume) -> GraphRun:
     P = int(spark.conf.get("spark.sql.shuffle.partitions"))
     lay = Layout(os.path.join(store.root, run_id), P)
     n, num_edges = _prepare(edges, kernel, lay)
-    # pack the P per-partition work items into ~one task per core: every
-    # Python task costs a worker round-trip (~10 ms), so 64 tasks on 8 cores
-    # would pay the fixed job cost twice over for nothing
-    n_tasks = min(P, max(1, _task_slots(spark)))
-    pids = spark.range(P, numPartitions=n_tasks).select(F.col("id").cast("int").alias("pid"))
-    run = Run(lay, pids)
+    run = Run(lay, _pids(spark, P))
 
     history: list[dict[str, Any]] = []
     carry: dict[str, Any] = {}
@@ -608,13 +646,12 @@ def _run_local(edges, kernel, *, max_iter, store, run_id, resume) -> GraphRun:
         carry = store.manifest(run_id, latest)["carry"]
         # state segments and static files are keyed by partition id:
         # resuming under a different spark.sql.shuffle.partitions would read
-        # misaligned (or missing) segments. The csr path re-shards on
-        # mismatch; files of a committed run are not re-derivable state, so
-        # local mode refuses instead.
+        # misaligned (or missing) segments, and the files of a committed run
+        # are not re-derivable state — refuse
         man_p = int(carry.get("P", -1))
         if man_p != P:
             raise RuntimeError(
-                f"cannot resume local-mode run {run_id!r}: committed under "
+                f"cannot resume {kernel.name} run {run_id!r}: committed under "
                 f"{man_p} shuffle partitions, session has {P} — restart "
                 "with the original partition count or a fresh run_id"
             )

@@ -798,7 +798,8 @@ class LPAFiles(Kernel):
             # existence is the winner job's completeness proof
             _write_vote_files(_vote_dir(lay), pid, lay.P, prm["superstep"], None, [], [], [])
 
-    def state_frame(self, st, state: np.ndarray) -> dict:
+    @staticmethod
+    def state_frame(st, state: np.ndarray) -> dict:
         return {
             "vid": st.column("vid").to_numpy(),
             "home": st.column("home").to_numpy(),

@@ -20,10 +20,6 @@ matters" from raw counts to link structure.
 
 Scatter modes, one recurrence:
 
-* ``csr`` (default) — adjacency shards partitioned like the vertex state;
-  each superstep ships only (vid, rank) through Arrow, gathers with
-  NumPy ``factorize``/``bincount``, and pays ONE shuffle (the gather
-  ``groupBy(dst)``) plus an exchange-free SHUFFLE_HASH update join.
 * ``local`` — **conversation-locality supersteps** for edge tables with
   ``src_home``/``dst_home`` keys: the state is hash-partitioned by home, so
   every turn-adjacency edge (the overwhelming majority) is partition-LOCAL.
@@ -34,8 +30,14 @@ Scatter modes, one recurrence:
   pre-reduction — cross partitions, via a driver-merged dict. Durable
   per-superstep checkpoints are *inherent*: the superstep output IS the
   checkpoint.
+* ``csr`` (default) — the same engine for graphs with no locality hint
+  (similarity/duplicate graphs): every vertex is its own home, so the
+  state is hash-partitioned by ``vid`` and an edge is local when both
+  endpoints hash to one partition; every other edge's contribution is
+  pre-reduced per destination and relayed through the driver dict.
 * ``arrow``/``sql`` — the salted scatter-join path (hub-key splitting via
-  broadcast joins), kept for plan comparison on generic graphs.
+  broadcast joins) through ``graph.runner``, kept for plan comparison on
+  generic graphs.
 """
 
 from __future__ import annotations
@@ -53,11 +55,10 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources import fsio
 from ..sources.catalog import CheckpointStore
 from .filesteps import Kernel, Run, positions, read_state_part, run_local
 from .runner import GraphRun, run_supersteps
-from .scatter import _load_shard_split, csr_gather, prepare_edges, scatter_gather, write_edge_shards
+from .scatter import _load_shard_split, prepare_edges, scatter_gather
 
 __all__ = ["pagerank"]
 
@@ -86,12 +87,18 @@ def pagerank(
     init-independent; fixed-iteration oracles replay the same trajectory).
     Seeds must exist in the graph (raises otherwise — a silent miss would
     leak rank mass). All scatter modes support it; the seed set rides as a
-    broadcast-sized codegen predicate (csr/salted) or a sorted array in the
-    per-superstep params file (local), never a per-row Python call.
+    sorted array in the per-superstep params file (local/csr) or a
+    broadcast-sized codegen predicate (arrow/sql), never a per-row Python
+    call.
+
+    ``num_salts``, ``hot_threshold`` and ``checkpoint_every`` apply to the
+    arrow/sql modes only: local and csr commit every superstep, because each
+    superstep's output files are its checkpoint.
 
     Returns a :class:`GraphRun` whose ``state`` has
-    ``(vid:long, rank:double, prev_rank:double, dangling:boolean)``
-    (plus ``home`` in local mode).
+    ``(vid:long, rank:double, prev_rank:double, dangling:boolean)``, plus
+    ``home`` in local and csr modes, where it is read back from the run's
+    superstep files (``home`` = ``vid`` under csr).
     """
     if scatter_mode not in ("local", "csr", "arrow", "sql"):
         raise ValueError(
@@ -100,7 +107,6 @@ def pagerank(
     spark: SparkSession = edges.sparkSession
     store = store or CheckpointStore(tempfile.mkdtemp(prefix="twspark_pr_"))
     run_id = run_id or f"pagerank-{uuid.uuid4().hex[:12]}"
-    num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
     seeds: list[int] | None = None
     seed_crc: int | None = None
@@ -110,15 +116,21 @@ def pagerank(
             raise ValueError("pagerank: teleport_seeds is empty")
         seed_crc = zlib.crc32(np.asarray(seeds, dtype=np.int64).tobytes())
 
-    if scatter_mode == "local":
-        if "src_home" not in edges.columns or "dst_home" not in edges.columns:
+    if scatter_mode in ("local", "csr"):
+        if scatter_mode == "csr":
+            # hash homes: every vertex is its own home, so shard and static
+            # pids are pmod(hash(vid), P) and an edge is local exactly when
+            # both endpoints hash to the same partition
+            edges = edges.withColumn("src_home", F.col("src")).withColumn("dst_home", F.col("dst"))
+        elif "src_home" not in edges.columns or "dst_home" not in edges.columns:
             raise ValueError(
                 "scatter_mode='local' needs src_home/dst_home locality columns "
                 "(derive edges with include_home=True); without them every edge "
                 "is remote and the mode degenerates — use 'csr' instead"
             )
         return run_local(
-            edges, _PageRankFiles(damping, tol, seeds, seed_crc),
+            edges,
+            _PageRankFiles(damping, tol, seeds, seed_crc, hash_homes=scatter_mode == "csr"),
             max_iter=max_iter, store=store, run_id=run_id, resume=resume,
         )
 
@@ -126,25 +138,7 @@ def pagerank(
     e = edges.groupBy("src", "dst").agg(F.sum("weight").alias("w"))
     out_w = e.groupBy("src").agg(F.sum("w").alias("out_w"))
     enorm = e.join(out_w, "src").select("src", "dst", (F.col("w") / F.col("out_w")).alias("p"))
-
-    pe = None
-    shard_dir: str | None = None
-    num_edges = 0
-    if scatter_mode == "csr":
-        # adjacency shards aligned with the state's hash partitioning —
-        # written once per run (reused on resume), worker-cached thereafter.
-        # Partition count in the dir name: a resume under a different
-        # spark.sql.shuffle.partitions must re-shard, not silently misalign.
-        shard_dir = os.path.join(store.root, run_id, f"_edge_shards_p{num_partitions}")
-        if not fsio.exists(os.path.join(shard_dir, "_DONE")):
-            write_edge_shards(enorm, shard_dir, num_partitions)
-            fsio.touch(os.path.join(shard_dir, "_DONE"))
-        num_edges = enorm.count()
-    else:
-        pe = prepare_edges(
-            enorm, payload=("p",), num_salts=num_salts, hot_threshold=hot_threshold
-        )
-        num_edges = pe.num_edges
+    pe = prepare_edges(enorm, payload=("p",), num_salts=num_salts, hot_threshold=hot_threshold)
 
     vertices = (
         e.select(F.col("src").alias("vid"))
@@ -185,12 +179,9 @@ def pagerank(
 
     def step_fn(state: DataFrame, carry: dict, k: int) -> DataFrame:
         d = damping
-        if scatter_mode == "csr":
-            sums = csr_gather(state.select("vid", "rank"), shard_dir)
-        else:
-            sums = scatter_gather(
-                pe, state.select("vid", "rank"), F.col("p") * F.col("rank"), mode=scatter_mode
-            )
+        sums = scatter_gather(
+            pe, state.select("vid", "rank"), F.col("p") * F.col("rank"), mode=scatter_mode
+        )
         gathered = F.coalesce(sums["c"], F.lit(0.0))
         if seeds is not None:
             rank = (
@@ -239,7 +230,7 @@ def pagerank(
             "delta_max": delta_max,
             "total_mass": total_mass,
             "active_vertices": active,
-            "edges_processed": num_edges,
+            "edges_processed": pe.num_edges,
             "n_vertices": n,
         }
         return metrics, {"dangling_sum": dangling_sum, "ppr_crc": seed_crc}, converged
@@ -287,8 +278,7 @@ def pagerank(
             resume_check_fn=resume_check_fn,
         )
     finally:
-        if pe is not None:
-            pe.unpersist()
+        pe.unpersist()
         vertices.unpersist()
 
 
@@ -349,12 +339,14 @@ def _remote_partials(sd: str, pid: int, vids, ranks) -> pd.DataFrame | None:
 
 
 class _PageRankFiles(Kernel):
-    """Conversation-locality PageRank on the file-superstep engine.
+    """Home-keyed PageRank on the file-superstep engine (conversation homes
+    in local mode, ``home = vid`` in csr mode).
 
     Each task loads its shard's LOCAL edges and the previous rank segment,
     computes the full gather + rank update in NumPy, and reports the
-    contributions along its REMOTE (turn→tool) edges pre-reduced to ≤ #hubs
-    rows; the driver merges them into the dict the next superstep applies.
+    contributions along its REMOTE edges (turn→tool under conversation
+    homes) pre-reduced to one row per destination; the driver merges them
+    into the dict the next superstep applies.
 
     Compiled per partition: the static dangling flags and the per-edge
     positions of each edge's endpoints, composed down to edge granularity
@@ -377,9 +369,13 @@ class _PageRankFiles(Kernel):
     meta = {"weights": "norm"}
 
     def __init__(self, damping: float, tol: float, seeds: list[int] | None,
-                 seed_crc: int | None) -> None:
+                 seed_crc: int | None, hash_homes: bool = False) -> None:
         self.damping, self.tol = damping, tol
         self.seeds, self.seed_crc = seeds, seed_crc
+        if hash_homes:
+            # warm-gate marker: shards laid out by hash homes never serve a
+            # locality-keyed run of the same run_id, nor the reverse
+            self.meta = {**self.meta, "homes": "vid"}
 
     def shard_edges(self, edges: DataFrame) -> DataFrame:
         e = edges.groupBy("src", "dst").agg(
@@ -425,7 +421,7 @@ class _PageRankFiles(Kernel):
                 )
         if carry is not None and carry.get("ppr_crc") != self.seed_crc:
             raise RuntimeError(
-                f"cannot resume local-mode run {os.path.basename(run.lay.run_dir)!r}: committed with a "
+                f"cannot resume run {os.path.basename(run.lay.run_dir)!r}: committed with a "
                 "different teleport-seed set — resuming would silently blend "
                 "two different recurrences; use a fresh run_id"
             )
@@ -550,7 +546,8 @@ class _PageRankFiles(Kernel):
             return out
         return out.groupby("dst", as_index=False)["c"].sum()
 
-    def state_frame(self, st, state: np.ndarray) -> dict:
+    @staticmethod
+    def state_frame(st, state: np.ndarray) -> dict:
         return {
             "vid": st.column("vid").to_numpy(),
             "home": st.column("home").to_numpy(),

@@ -196,7 +196,7 @@ def run_supersteps(
     """
     num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
     # The iterative loop depends on a FIXED hash partitioning (state by vid
-    # aligned with edge shards / persisted edges). AQE must be OFF inside the
+    # aligned with the persisted edges). AQE must be OFF inside the
     # loop — not just partition coalescing: under AQE, Dataset.localCheckpoint
     # snapshots the AdaptiveSparkPlan's outputPartitioning as Unknown, so the
     # NEXT superstep's update join re-shuffles the ENTIRE vertex state every

@@ -1,6 +1,7 @@
 """Skew-aware scatter join + Arrow-vectorized partial aggregation.
 
-Every superstep of every kernel has the same hot loop:
+Every superstep of the salted (``arrow``/``sql``) kernels has the same hot
+loop:
 
     edges ⋈ vertex_state on (edges.src == state.vid)   -- "scatter"
     groupBy(edges.dst).agg(...)                        -- "gather"
@@ -39,8 +40,6 @@ __all__ = [
     "PartitionedEdges",
     "prepare_edges",
     "scatter_gather",
-    "csr_gather",
-    "write_edge_shards",
     "write_edge_shards_local",
     "purge_shard_dir",
     "shard_pid",
@@ -161,138 +160,6 @@ def _arrow_partial(agg: str):
 
 
 # -----------------------------------------------------------------------------
-# CSR-shard gather: worker-cached adjacency, rank-only Arrow traffic
-# -----------------------------------------------------------------------------
-#
-# The join-based scatter ships edge-sized data through the plan every
-# superstep. The CSR-shard path instead writes the normalized adjacency ONCE
-# as parquet shards partitioned by pid = pmod(hash(src), P) — the exact
-# function Spark's HashPartitioning uses — so a vertex-state frame that is
-# hash-partitioned by vid is ALREADY aligned with the shards: physical
-# partition i holds exactly the vids of shard i. Each superstep then:
-#
-#   state (partitioned by vid) ──mapInPandas──▶ per-shard partial (dst, c)
-#                                     │  loads+factorizes its shard once,
-#                                     │  caches it in the (reused) Python
-#                                     │  worker; per superstep: align ranks
-#                                     │  to the shard's unique srcs (one
-#                                     │  pandas reindex) + one bincount
-#   partials ──groupBy(dst).sum──▶ gather result      (the ONLY shuffle)
-#
-# Python traffic is vertex-sized (vid, rank) in and ≤ unique-dst-per-shard
-# out; the edge bytes cross into Python exactly once per run per worker.
-
-_SHARD_CACHE: dict = {}
-
-
-def shard_pid(col: F.Column, num_partitions: int) -> F.Column:
-    """Spark's HashPartitioning function: pmod(murmur3(col), n) — F.hash IS
-    murmur3_32(seed=42), the same hash HashPartitioning evaluates."""
-    return F.pmod(F.hash(col), F.lit(num_partitions))
-
-
-def write_edge_shards(enorm: DataFrame, shard_dir: str, num_partitions: int) -> None:
-    """One-time materialization of adjacency shards (src, dst, p) by pid."""
-    (
-        enorm.withColumn("pid", shard_pid(F.col("src"), num_partitions))
-        .repartition("pid")
-        .write.mode("overwrite")
-        .partitionBy("pid")
-        .parquet(shard_dir)
-    )
-
-
-def _load_shard(shard_dir: str, pid: int):
-    key = (shard_dir, pid)
-    if key in _SHARD_CACHE:
-        return _SHARD_CACHE[key]
-    # single-run working set: long-lived reused Python workers would otherwise
-    # accumulate the adjacency of every run ever executed in the session
-    for stale in [k for k in _SHARD_CACHE if k[0] != shard_dir]:
-        del _SHARD_CACHE[stale]
-    import os
-
-    import pyarrow.parquet as pq
-
-    # Workers read shards through pyarrow's FileSystem API, so shard_dir may
-    # be any URI pyarrow supports (file://, s3://, gs://, hdfs://) — on a
-    # multi-executor cluster the shards live in the object store, not on a
-    # local path that silently assumes a shared filesystem.
-    if "://" in shard_dir:
-        from pyarrow import fs as pafs
-
-        filesystem, base = pafs.FileSystem.from_uri(shard_dir)
-        path = f"{base}/pid={pid}"
-        if filesystem.get_file_info(path).type == pafs.FileType.NotFound:
-            _SHARD_CACHE[key] = None
-            return None
-        tbl = pq.read_table(path, columns=["src", "dst", "p"], filesystem=filesystem)
-        entry = _factorize_shard(tbl)
-        _SHARD_CACHE[key] = entry
-        return entry
-
-    path = os.path.join(shard_dir, f"pid={pid}")
-    if not os.path.isdir(path):
-        entry = None  # shard has no edges
-    else:
-        tbl = pq.read_table(path, columns=["src", "dst", "p"])
-        entry = _factorize_shard(tbl)
-    _SHARD_CACHE[key] = entry
-    return entry
-
-
-def _factorize_shard(tbl):
-    """Arrow table → factorized CSR-ish arrays (src/dst codes + uniques)."""
-    src = tbl.column("src").to_numpy()
-    dst = tbl.column("dst").to_numpy()
-    p = tbl.column("p").to_numpy().astype(np.float64)
-    src_codes, src_uniq = pd.factorize(src, sort=False)
-    dst_codes, dst_uniq = pd.factorize(dst, sort=False)
-    return (src_codes, src_uniq, dst_codes, dst_uniq, p)
-
-
-def csr_gather(state: DataFrame, shard_dir: str) -> DataFrame:
-    """Per-shard sparse gather: ``(dst, c)`` partials, one row per distinct
-    dst per shard. ``state`` must be hash-partitioned by ``vid`` with the
-    same partition count the shards were written with."""
-
-    def gather(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pdfs = [pdf for pdf in batches if len(pdf)]
-        if not pdfs:
-            return
-        pid = int(pdfs[0]["pid"].iloc[0])
-        shard = _load_shard(shard_dir, pid)
-        if shard is None:
-            return
-        src_codes, src_uniq, dst_codes, dst_uniq, p = shard
-        ranks = pd.concat(pdfs, ignore_index=True)
-        aligned = (
-            pd.Series(ranks["rank"].to_numpy(), index=ranks["vid"].to_numpy())
-            .reindex(src_uniq)
-            .to_numpy()
-        )
-        if np.isnan(aligned).any():
-            # every shard src must be a vertex routed to this partition —
-            # a NaN means state/shard partitionings diverged; fail loudly
-            # rather than silently dropping rank mass.
-            missing = int(np.isnan(aligned).sum())
-            raise RuntimeError(
-                f"csr_gather misalignment: {missing} shard srcs missing from "
-                f"state partition {pid} — state is not hash-partitioned by vid "
-                "with the shard partition count"
-            )
-        contrib = p * aligned[src_codes]
-        sums = np.bincount(dst_codes, weights=contrib, minlength=len(dst_uniq))
-        yield pd.DataFrame({"dst": dst_uniq, "c": sums})
-
-    with_pid = state.select(
-        F.spark_partition_id().alias("pid"), F.col("vid"), F.col("rank")
-    )
-    partials = with_pid.mapInPandas(gather, schema="dst long, c double")
-    return partials.groupBy("dst").agg(F.sum("c").alias("c"))
-
-
-# -----------------------------------------------------------------------------
 # Locality-split CSR shards: conversation-local edges never shuffle
 # -----------------------------------------------------------------------------
 #
@@ -307,10 +174,28 @@ def csr_gather(state: DataFrame, shard_dir: str) -> DataFrame:
 # PowerGraph-style placement insight: the file-superstep engine
 # (``graph/filesteps.py``) relays ~|tools| hub entries per superstep through
 # the driver instead of shuffling and hash-aggregating an edge-sized
-# (75M-row at bench scale) partial table.
+# (75M-row at bench scale) partial table. Graphs with no locality hint
+# (PageRank's csr mode) shard the same way with home = vid: an edge is then
+# local when both endpoints hash to one partition.
+
+def shard_pid(col: F.Column, num_partitions: int) -> F.Column:
+    """Spark's HashPartitioning function: pmod(murmur3(col), n) — F.hash IS
+    murmur3_32(seed=42), the same hash HashPartitioning evaluates."""
+    return F.pmod(F.hash(col), F.lit(num_partitions))
+
+
+def _factorize_shard(tbl):
+    """Arrow table → factorized CSR-ish arrays (src/dst codes + uniques)."""
+    src = tbl.column("src").to_numpy()
+    dst = tbl.column("dst").to_numpy()
+    p = tbl.column("p").to_numpy().astype(np.float64)
+    src_codes, src_uniq = pd.factorize(src, sort=False)
+    dst_codes, dst_uniq = pd.factorize(dst, sort=False)
+    return (src_codes, src_uniq, dst_codes, dst_uniq, p)
+
 
 def write_edge_shards_local(enorm: DataFrame, shard_dir: str, num_partitions: int) -> None:
-    """One-time shard write for locality mode.
+    """One-time shard write for the file-superstep engine.
 
     ``enorm`` must carry ``(src, dst, p, src_home, dst_home)``; shards are
     keyed by ``pid = pmod(hash(src_home), P)`` with an ``is_local`` flag
@@ -353,6 +238,9 @@ def purge_shard_dir(shard_dir: str) -> None:
 
 _SPLIT_ARRAYS = ("src_codes", "src_uniq", "dst_codes", "dst_uniq", "p")
 
+# (shard_dir, pid, "split") -> (generation, entry); holds one shard_dir at a time
+_SPLIT_CACHE: dict = {}
+
 
 def _load_shard_split(shard_dir: str, pid: int):
     """Factorized (local, remote) halves of one locality shard.
@@ -372,8 +260,8 @@ def _load_shard_split(shard_dir: str, pid: int):
     remote shards a real cluster wants.
     """
     key = (shard_dir, pid, "split")
-    for stale in [k for k in _SHARD_CACHE if k[0] != shard_dir]:
-        del _SHARD_CACHE[stale]
+    for stale in [k for k in _SPLIT_CACHE if k[0] != shard_dir]:
+        del _SPLIT_CACHE[stale]
     import os
 
     from .filesteps import compiled_generation, node_cache_root
@@ -384,19 +272,19 @@ def _load_shard_split(shard_dir: str, pid: int):
         filesystem, base = pafs.FileSystem.from_uri(shard_dir)
         remote_path = f"{base}/pid={pid}"
         if filesystem.get_file_info(remote_path).type == pafs.FileType.NotFound:
-            _SHARD_CACHE[key] = None
+            _SPLIT_CACHE[key] = None
             return None
         cdir = os.path.join(node_cache_root(shard_dir), f"pid={pid}", "_compiled_v2")
         read_path, read_fs = remote_path, filesystem
     else:
         path = os.path.join(shard_dir, f"pid={pid}")
         if not os.path.isdir(path):
-            _SHARD_CACHE[key] = None
+            _SPLIT_CACHE[key] = None
             return None
         cdir = os.path.join(path, "_compiled_v2")
         read_path, read_fs = path, None
 
-    cached = _SHARD_CACHE.get(key)
+    cached = _SPLIT_CACHE.get(key)
     if cached is not None and cached[0] == compiled_generation(cdir):
         # generation-checked hit: a rmtree+recompile under the same path
         # (shard rewrite for different weight semantics) republishes _OK
@@ -415,7 +303,7 @@ def _load_shard_split(shard_dir: str, pid: int):
             for name in _SPLIT_ARRAYS
         )
         entry[half] = arrs
-    _SHARD_CACHE[key] = (compiled_generation(cdir), entry)
+    _SPLIT_CACHE[key] = (compiled_generation(cdir), entry)
     return entry
 
 

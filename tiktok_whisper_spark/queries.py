@@ -805,6 +805,14 @@ def _pagerank5_sql() -> str:
     return "".join(parts)
 
 
+def _ranks(run, store: CheckpointStore) -> DataFrame:
+    """``(vid, rank)`` of a PageRank run held in executor memory, then its
+    store deleted: file-backed state is read from the store when evaluated."""
+    ranks = run.state.select("vid", "rank").localCheckpoint(eager=True)
+    shutil.rmtree(store.root, ignore_errors=True)
+    return ranks
+
+
 @_register("graph_pagerank_5iter", _pagerank5_sql())
 def graph_pagerank_5iter(spark, sf_dir):
     """PageRank, 5 fixed supersteps, over the event-adjacency graph — the
@@ -829,11 +837,8 @@ def graph_pagerank_5iter(spark, sf_dir):
         tol=1e-18,  # never converges early → exactly 5 supersteps
         store=store,
         resume=False,
-        checkpoint_every=5,
     )
-    # run.state is localCheckpoint-ed in memory — the durable store can go
-    shutil.rmtree(store.root, ignore_errors=True)
-    return run.state.join(names, "vid").select("name", _r6("rank").alias("rank"))
+    return _ranks(run, store).join(names, "vid").select("name", _r6("rank").alias("rank"))
 
 
 def _ppr5_sql() -> str:
@@ -894,11 +899,9 @@ def graph_ppr_5iter(spark, sf_dir):
         tol=1e-18,  # never converges early → exactly 5 supersteps
         store=store,
         resume=False,
-        checkpoint_every=5,
         teleport_seeds=[seed_vid],
     )
-    shutil.rmtree(store.root, ignore_errors=True)
-    return run.state.join(names, "vid").select("name", _r6("rank").alias("rank"))
+    return _ranks(run, store).join(names, "vid").select("name", _r6("rank").alias("rank"))
 
 
 _SP_EDGES_SQL = (
@@ -1651,9 +1654,8 @@ def flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
     run = pagerank(edges, store=store, resume=False)
     if not run.converged:
         raise RuntimeError(f"pagerank did not converge within {run.supersteps} supersteps")
-    shutil.rmtree(store.root, ignore_errors=True)
     return (
-        run.state.join(names, "vid")
+        _ranks(run, store).join(names, "vid")
         .select("name", "rank")
         .orderBy(F.col("rank").desc(), F.col("name"))
     )

@@ -13,7 +13,8 @@ Backend seam
 ``backend="parquet"`` (default, always available): each superstep commits
 
 * ``<root>/<run_id>/superstep=NNNNNN/state/`` — the vertex-state DataFrame
-  as Parquet;
+  as Parquet (``graph.runner`` kernels), or raw per-partition segments
+  (file-superstep runs: PageRank local/csr, CC/LPA local);
 * ``<root>/<run_id>/superstep=NNNNNN/manifest.json`` — written atomically
   (tmp file + ``os.replace``) AFTER the state write succeeds; a superstep
   exists iff its manifest exists, which makes commits all-or-nothing even if
@@ -166,6 +167,15 @@ class CheckpointStore:
         return man
 
     def load_state(self, spark: SparkSession, run_id: str, superstep: int) -> DataFrame:
+        """The committed state of ``superstep``. File-superstep runs (their
+        manifest carries the partition count ``P``) keep raw per-partition
+        segments, not Parquet; they are read back with the columns of the
+        run's ``GraphRun.state``."""
+        man = self.manifest(run_id, superstep)
+        if "P" in man["carry"]:
+            from ..graph.filesteps import committed_state
+
+            return committed_state(spark, os.path.join(self.root, run_id), superstep, man)
         return spark.read.parquet(
             os.path.join(_superstep_dir(self.root, run_id, superstep), "state")
         )
