@@ -110,8 +110,7 @@ edges = spark.read.parquet({edges_path!r})
 store = CheckpointStore({edges_path!r} + "_store")
 t0 = time.monotonic()
 run = pagerank(edges, tol={tol}, max_iter={max_iter}, store=store,
-               run_id="bench", resume=False, scatter_mode="local",
-               checkpoint_every=1)
+               run_id="bench", resume=False, scatter_mode="local")
 total = time.monotonic() - t0
 iters = [m for m in run.metrics if m["superstep"] >= 2]  # skip JIT/shard warmup
 iters = iters or run.metrics[1:] or run.metrics  # converged-at-1 runs still report

@@ -137,7 +137,7 @@ def test_iceberg_backend_selectable(spark, tmp_path):
         )
     store = IcebergCheckpointStore(spark, catalog="lake")
     # the Iceberg store holds graph.runner state; csr/local runs keep files
-    run = pagerank(_edges_df(spark), store=store, run_id="iceberg-e2e", scatter_mode="arrow")
+    run = pagerank(_edges_df(spark), store=store, run_id="iceberg-e2e", scatter_mode="sql")
     assert run.converged
     assert store.latest("iceberg-e2e") == run.supersteps
 
@@ -170,7 +170,7 @@ def test_superstep_retry_recovers_transient_failure(spark, tmp_path, monkeypatch
     a superstep's materialization is retried and the run completes with the
     SAME result and a normal commit history — the retry path actually
     executes (failure injected on the first in-run localCheckpoint). Runs on
-    ``scatter_mode="arrow"``, a kernel that still drives ``graph.runner``."""
+    ``scatter_mode="sql"``, a kernel that still drives ``graph.runner``."""
     # patch the CONCRETE class (pyspark.sql.DataFrame is the abstract parent
     # in Spark 4; instances dispatch to the classic subclass's method)
     from pyspark.sql.classic.dataframe import DataFrame
@@ -179,7 +179,7 @@ def test_superstep_retry_recovers_transient_failure(spark, tmp_path, monkeypatch
 
     store = CheckpointStore(str(tmp_path / "retry"))
     clean = pagerank(_edges_df(spark), store=store, run_id="clean", tol=1e-3,
-                     scatter_mode="arrow")
+                     scatter_mode="sql")
     assert clean.converged
 
     monkeypatch.setattr(runner_mod.time, "sleep", lambda s: None)  # skip backoff
@@ -195,7 +195,7 @@ def test_superstep_retry_recovers_transient_failure(spark, tmp_path, monkeypatch
 
     monkeypatch.setattr(DataFrame, "localCheckpoint", flaky)
     run = pagerank(_edges_df(spark), store=store, run_id="flaky", tol=1e-3,
-                   scatter_mode="arrow")
+                   scatter_mode="sql")
     monkeypatch.setattr(DataFrame, "localCheckpoint", orig)
 
     assert state["failures"] == 1  # the injected failure really happened
@@ -208,7 +208,7 @@ def test_superstep_retry_recovers_transient_failure(spark, tmp_path, monkeypatch
 
 def test_ppr_resume_rebuilds_teleport_and_guards_seed_mismatch(spark, tmp_path):
     """PPR resume on both superstep loops: the default csr mode (file
-    supersteps, seed set in the params file) and arrow (``graph.runner``,
+    supersteps, seed set in the params file) and sql (``graph.runner``,
     where the 't' teleport column is not persisted — a pure function of the
     seed set — and must be rebuilt by restore_fn). A resume under a
     different teleport config must refuse, both mid-run and after
@@ -217,7 +217,7 @@ def test_ppr_resume_rebuilds_teleport_and_guards_seed_mismatch(spark, tmp_path):
     edges = _edges_df(spark)
     seeds = [1, 3]
 
-    for mode in ("csr", "arrow"):
+    for mode in ("csr", "sql"):
         def ppr(run_id, **kw):
             return pagerank(edges, store=store, run_id=f"{run_id}-{mode}", scatter_mode=mode, **kw)
 

@@ -38,8 +38,15 @@ TWO_CLIQUES = [
     (10, 11, 1.0), (10, 12, 1.0), (10, 13, 1.0),
     (11, 12, 1.0), (11, 13, 1.0), (12, 13, 1.0),
 ]
-# bipartite star: many roles → one hub tool (salting path) + side edge
+# bipartite star: many roles → one hub tool + side edge (every out-degree ≤ 2)
 HUB_STAR = [(i, 1000, 1.0) for i in range(1, 200)] + [(1000, 1, 2.0), (7, 8, 1.0)]
+# bidirectional hub: out-degree 199 against the derived hub cutoff of 64, so
+# the salted DataFrame path really splits the hub's edges
+BIDIR_HUB = (
+    [(i, 1000, 1.0) for i in range(1, 200)]
+    + [(1000, i, 1.0) for i in range(1, 200)]
+    + [(7, 8, 1.0)]
+)
 # weighted asymmetric graph
 WEIGHTED = [(1, 2, 3.0), (1, 3, 1.0), (2, 3, 2.0), (3, 1, 1.0), (4, 1, 5.0), (2, 4, 1.0)]
 
@@ -48,6 +55,7 @@ GRAPHS = {
     "two_cliques": TWO_CLIQUES,
     "hub_star": HUB_STAR,
     "weighted": WEIGHTED,
+    "bidir_hub": BIDIR_HUB,
 }
 
 
@@ -62,19 +70,20 @@ def transcript_edges(spark):
 
 @pytest.mark.parametrize(
     "name,mode",
-    [(n, "csr") for n in GRAPHS] + [("hub_star", "arrow"), ("weighted", "arrow"), ("hub_star", "sql"), ("weighted", "sql")],
+    [(n, "csr") for n in GRAPHS] + [(n, "sql") for n in ("hub_star", "weighted", "bidir_hub")],
 )
 def test_pagerank_matches_oracle(spark, name, mode, tmp_path):
+    from tiktok_whisper_spark.graph.scatter import prepare_edges
+
     triples = GRAPHS[name]
-    # force the salting path on the hub graph with a low threshold
-    hot = 50 if name == "hub_star" else None
-    run = pagerank(
-        _edges_df(spark, triples),
-        scatter_mode=mode,
-        hot_threshold=hot,
-        store=None,
-        checkpoint_every=25,
-    )
+    if (name, mode) == ("bidir_hub", "sql"):
+        # the salted path is really taken: the hub's edges split off as hot
+        pe = prepare_edges(_edges_df(spark, triples))
+        try:
+            assert pe.hot is not None and pe.hot_vids.count() == 1
+        finally:
+            pe.unpersist()
+    run = pagerank(_edges_df(spark, triples), scatter_mode=mode, store=None)
     got = {r["vid"]: r["rank"] for r in run.state.collect()}
     want = pagerank_oracle(triples)
     assert run.converged
@@ -426,7 +435,8 @@ def test_local_slots_parses_master_forms():
 
 
 @pytest.mark.parametrize("call,mode", [
-    (pagerank, "salted"), (connected_components, "csr"), (label_propagation, "sql"),
+    (pagerank, "salted"), (connected_components, "csr"),
+    (pagerank, "arrow"), (connected_components, "arrow"), (label_propagation, "arrow"),
 ])
 def test_unknown_scatter_mode_raises_before_any_job(spark, call, mode):
     sc = spark.sparkContext
@@ -467,7 +477,7 @@ def test_triangles_known_values(spark):
 def test_transcript_graph_all_kernels(spark, transcript_edges):
     """End-to-end: derived transcript graph matches every oracle."""
     df, rows = transcript_edges
-    pr = pagerank(df, checkpoint_every=25)
+    pr = pagerank(df)
     assert pr.converged
     got = {r["vid"]: r["rank"] for r in pr.state.collect()}
     want = pagerank_oracle(rows)
@@ -689,10 +699,10 @@ def test_modularity_matches_oracle_on_lpa_labels(spark, name):
     ("cycle_dangling", [5]),       # dangling-only seed: D·t feedback loop
     ("hub_star", [1000, 7]),       # hub + leaf seed mix
 ])
-@pytest.mark.parametrize("mode", ["csr", "arrow"])
+@pytest.mark.parametrize("mode", ["csr", "sql"])
 def test_ppr_matches_oracle(spark, name, seeds, mode):
     """Personalized PageRank (seed-uniform teleport + dangling mass) vs the
-    NumPy oracle, through both shuffle scatter paths."""
+    NumPy oracle, on the csr file engine and the sql DataFrame path."""
     triples = GRAPHS[name]
     # tol 1e-10 at damping .85 needs ~140 supersteps (geometric rate)
     run = pagerank(

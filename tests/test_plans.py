@@ -32,13 +32,24 @@ def test_small_dim_broadcasts(spark, sf_dir):
     assert explain.has_broadcast_join(j)
 
 
+def _combined_before_single_exchange(df, partial: str) -> None:
+    """The gather pays one Exchange, fed by Catalyst's map-side partial
+    aggregate (the plan string lists children below their parent)."""
+    assert explain.runtime_exchange_count(df) == 1
+    lines = explain.physical_plan(df).splitlines()
+    ex = next(i for i, ln in enumerate(lines) if "Exchange hashpartitioning(dst" in ln)
+    assert any(partial in ln for ln in lines[ex + 1:]), "\n".join(lines)
+    assert not any(partial in ln for ln in lines[:ex]), "\n".join(lines)
+
+
 def test_superstep_pays_single_exchange(spark):
     """The iterative hot loop: edges persisted by src, state localCheckpoint-ed
-    by vid → the only paid shuffle is the gather groupBy(dst). With AQE off
-    (as the runner sets it) localCheckpoint must preserve
-    hashpartitioning(vid, P) — under AQE the checkpointed plan reports
-    UnknownPartitioning and every superstep re-shuffles the WHOLE vertex
-    state (the round-1 scaling killer)."""
+    by vid → the only paid shuffle is the gather groupBy(dst), combined
+    map-side by Catalyst (partial_sum for PageRank, partial_min for CC) with
+    no Python stage. With AQE off (as the runner sets it) localCheckpoint
+    must preserve hashpartitioning(vid, P) — under AQE the checkpointed plan
+    reports UnknownPartitioning and every superstep re-shuffles the WHOLE
+    vertex state (the round-1 scaling killer)."""
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     old_aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -59,11 +70,20 @@ def test_superstep_pays_single_exchange(spark):
         )
         part = state._jdf.queryExecution().executedPlan().outputPartitioning().toString()
         assert "hashpartitioning" in part, part
-        sums = scatter_gather(pe, state, F.col("p") * F.col("rank"), mode="arrow")
+        sums = scatter_gather(pe, state, F.col("p") * F.col("rank"))
+        _combined_before_single_exchange(sums, "partial_sum")
         new = state.join(sums, state["vid"] == sums["dst"], "left_outer").select(
             state["vid"], F.coalesce(sums["c"], F.lit(0.0)).alias("rank")
         )
         assert explain.runtime_exchange_count(new) == 1
+        assert "MapInPandas" not in explain.physical_plan(new)
+        pe.unpersist()
+
+        # the CC gather: min-label over the same persisted, src-partitioned edges
+        pe = prepare_edges(e.select("src", "dst"))
+        labels = state.select("vid", F.col("vid").alias("label"))
+        mins = scatter_gather(pe, labels, F.col("label"), agg="min")
+        _combined_before_single_exchange(mins, "partial_min")
         pe.unpersist()
         state.unpersist()
     finally:
@@ -104,7 +124,7 @@ def test_hot_key_split_uses_broadcast_join_not_in_list(spark):
     state = edges.select(F.col("src").alias("vid")).distinct().select(
         "vid", F.lit(1.0).alias("rank")
     )
-    joined = scatter_gather(pe, state, F.col("weight") * F.col("rank"), mode="sql")
+    joined = scatter_gather(pe, state, F.col("weight") * F.col("rank"))
     assert "In(vid" not in explain.physical_plan(joined)
     pe.unpersist()
 

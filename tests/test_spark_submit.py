@@ -66,7 +66,7 @@ _JOB = textwrap.dedent(
 
     # tol=1e-8 converges in ~110 supersteps (rate=damping 0.85) and
     # leaves <1e-7 residual vs the fixpoint -- far inside the 1e-6 bar
-    pr = pagerank(df, tol=1e-8, max_iter=160, checkpoint_every=25)
+    pr = pagerank(df, tol=1e-8, max_iter=160)
     cc = connected_components(df, max_iter=30, checkpoint_every=10)
     result = {
         "ranks": {str(r["vid"]): r["rank"] for r in pr.state.collect()},

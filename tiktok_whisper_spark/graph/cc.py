@@ -175,21 +175,24 @@ def connected_components(
     store: CheckpointStore | None = None,
     run_id: str | None = None,
     resume: bool = True,
-    scatter_mode: str = "arrow",
-    num_salts: int = 8,
-    hot_threshold: int | None = None,
+    scatter_mode: str = "sql",
     checkpoint_every: int = 1,
 ) -> GraphRun:
     """Min-id connected components over ``edges(src, dst, ...)``.
 
+    ``scatter_mode="sql"`` (default) runs the salted DataFrame loop of
+    ``graph.runner`` with a Catalyst ``groupBy(dst).min`` gather;
+    ``"local"`` runs the file-superstep engine on home-keyed edges.
+    ``checkpoint_every`` sets the ``sql`` loop's durable-commit cadence.
+
     Returns a :class:`GraphRun` whose ``state`` has
-    ``(vid:long, label:long, prev_label:long)``; ``label`` is the minimum
-    vertex id of the component.
+    ``(vid:long, label:long, prev_label:long)`` (``vid, home, label`` in
+    ``scatter_mode="local"``); ``label`` is the minimum vertex id of the
+    component.
     """
-    if scatter_mode not in ("local", "arrow", "sql"):
+    if scatter_mode not in ("local", "sql"):
         raise ValueError(
-            f"connected_components: scatter_mode must be 'local', 'arrow' or 'sql', "
-            f"got {scatter_mode!r}"
+            f"connected_components: scatter_mode must be 'local' or 'sql', got {scatter_mode!r}"
         )
     spark: SparkSession = edges.sparkSession
     store = store or CheckpointStore(tempfile.mkdtemp(prefix="twspark_cc_"))
@@ -211,7 +214,7 @@ def connected_components(
         )
 
     sym = symmetrize(edges)
-    pe = prepare_edges(sym, payload=(), num_salts=num_salts, hot_threshold=hot_threshold)
+    pe = prepare_edges(sym)
     vertices = sym.select(F.col("src").alias("vid")).distinct().persist()
     n = vertices.count()
 
@@ -219,9 +222,7 @@ def connected_components(
         return vertices.select("vid", F.col("vid").alias("label"), F.col("vid").alias("prev_label")), {}
 
     def step_fn(state: DataFrame, carry: dict, k: int) -> DataFrame:
-        nbr_min = scatter_gather(
-            pe, state.select("vid", "label"), F.col("label"), agg="min", mode=scatter_mode
-        )
+        nbr_min = scatter_gather(pe, state.select("vid", "label"), F.col("label"), agg="min")
         return (
             state.join(nbr_min.hint("shuffle_hash"), state["vid"] == nbr_min["dst"], "left_outer")
             .select(

@@ -38,20 +38,24 @@ def label_propagation(
     store: CheckpointStore | None = None,
     run_id: str | None = None,
     resume: bool = True,
-    scatter_mode: str = "arrow",
-    num_salts: int = 8,
-    hot_threshold: int | None = None,
+    scatter_mode: str = "sql",
     checkpoint_every: int = 1,
 ) -> GraphRun:
     """Deterministic synchronous LPA over weighted ``edges(src, dst, weight)``.
+
+    ``scatter_mode="sql"`` (default) runs the salted DataFrame loop of
+    ``graph.runner``: votes are a Catalyst ``groupBy(dst, label).sum`` and
+    the winner a window rank. ``"local"`` runs the file-superstep engine on
+    home-keyed edges. ``checkpoint_every`` sets the ``sql`` loop's
+    durable-commit cadence.
 
     Returns a :class:`GraphRun` whose ``state`` has
     ``(vid:long, label:long, prev_label:long)`` (``vid, home, label`` in
     ``scatter_mode="local"``).
     """
-    if scatter_mode not in ("local", "arrow"):
+    if scatter_mode not in ("local", "sql"):
         raise ValueError(
-            f"label_propagation: scatter_mode must be 'local' or 'arrow', got {scatter_mode!r}"
+            f"label_propagation: scatter_mode must be 'local' or 'sql', got {scatter_mode!r}"
         )
     spark: SparkSession = edges.sparkSession
     store = store or CheckpointStore(tempfile.mkdtemp(prefix="twspark_lpa_"))
@@ -80,7 +84,7 @@ def label_propagation(
         .groupBy("src", "dst")
         .agg(F.sum("weight").alias("w"))
     )
-    pe = prepare_edges(sym, payload=("w",), num_salts=num_salts, hot_threshold=hot_threshold)
+    pe = prepare_edges(sym, payload=("w",))
     vertices = sym.select(F.col("src").alias("vid")).distinct().persist()
     n = vertices.count()
 

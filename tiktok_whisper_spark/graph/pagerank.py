@@ -35,9 +35,9 @@ Scatter modes, one recurrence:
   state is hash-partitioned by ``vid`` and an edge is local when both
   endpoints hash to one partition; every other edge's contribution is
   pre-reduced per destination and relayed through the driver dict.
-* ``arrow``/``sql`` — the salted scatter-join path (hub-key splitting via
-  broadcast joins) through ``graph.runner``, kept for plan comparison on
-  generic graphs.
+* ``sql`` — the plain DataFrame path through ``graph.runner``: salted
+  scatter join (hub-key splitting via broadcast joins) and a Catalyst
+  ``groupBy(dst).sum`` gather; the tests' oracle for the file engine.
 """
 
 from __future__ import annotations
@@ -73,9 +73,6 @@ def pagerank(
     run_id: str | None = None,
     resume: bool = True,
     scatter_mode: str = "csr",
-    num_salts: int = 8,
-    hot_threshold: int | None = None,
-    checkpoint_every: int = 1,
     teleport_seeds: Sequence[int] | None = None,
 ) -> GraphRun:
     """Run PageRank over ``edges(src, dst, weight, ...)`` to convergence.
@@ -88,11 +85,9 @@ def pagerank(
     Seeds must exist in the graph (raises otherwise — a silent miss would
     leak rank mass). All scatter modes support it; the seed set rides as a
     sorted array in the per-superstep params file (local/csr) or a
-    broadcast-sized codegen predicate (arrow/sql), never a per-row Python
-    call.
+    broadcast-sized codegen predicate (sql), never a per-row Python call.
 
-    ``num_salts``, ``hot_threshold`` and ``checkpoint_every`` apply to the
-    arrow/sql modes only: local and csr commit every superstep, because each
+    Every mode commits every superstep: under local and csr each
     superstep's output files are its checkpoint.
 
     Returns a :class:`GraphRun` whose ``state`` has
@@ -100,9 +95,9 @@ def pagerank(
     ``home`` in local and csr modes, where it is read back from the run's
     superstep files (``home`` = ``vid`` under csr).
     """
-    if scatter_mode not in ("local", "csr", "arrow", "sql"):
+    if scatter_mode not in ("local", "csr", "sql"):
         raise ValueError(
-            f"pagerank: scatter_mode must be 'local', 'csr', 'arrow' or 'sql', got {scatter_mode!r}"
+            f"pagerank: scatter_mode must be 'local', 'csr' or 'sql', got {scatter_mode!r}"
         )
     spark: SparkSession = edges.sparkSession
     store = store or CheckpointStore(tempfile.mkdtemp(prefix="twspark_pr_"))
@@ -138,7 +133,7 @@ def pagerank(
     e = edges.groupBy("src", "dst").agg(F.sum("weight").alias("w"))
     out_w = e.groupBy("src").agg(F.sum("w").alias("out_w"))
     enorm = e.join(out_w, "src").select("src", "dst", (F.col("w") / F.col("out_w")).alias("p"))
-    pe = prepare_edges(enorm, payload=("p",), num_salts=num_salts, hot_threshold=hot_threshold)
+    pe = prepare_edges(enorm, payload=("p",))
 
     vertices = (
         e.select(F.col("src").alias("vid"))
@@ -179,9 +174,7 @@ def pagerank(
 
     def step_fn(state: DataFrame, carry: dict, k: int) -> DataFrame:
         d = damping
-        sums = scatter_gather(
-            pe, state.select("vid", "rank"), F.col("p") * F.col("rank"), mode=scatter_mode
-        )
+        sums = scatter_gather(pe, state.select("vid", "rank"), F.col("p") * F.col("rank"))
         gathered = F.coalesce(sums["c"], F.lit(0.0))
         if seeds is not None:
             rank = (
@@ -272,7 +265,6 @@ def pagerank(
             combine_fn=combine_fn,
             max_iter=max_iter,
             resume=resume,
-            checkpoint_every=checkpoint_every,
             checkpoint_cols=["vid", "rank", "dangling"],
             restore_fn=restore_fn,
             resume_check_fn=resume_check_fn,

@@ -16,7 +16,8 @@ Execution design (what makes a superstep cheap at scale):
   preserved, so the next superstep's ``edges ⋈ state`` (edges persisted
   partitioned by ``src``) and the state-update join (``vid == dst`` against
   the gather output) both run **exchange-free** — the only per-superstep
-  shuffle of note is the gather ``groupBy(dst)``, pre-reduced Arrow-side.
+  shuffle of note is the gather ``groupBy(dst)``, combined map-side by
+  Catalyst's partial aggregate.
 * **Zero extra measurement jobs.** The kernel's convergence aggregates ride
   the materialization job itself via ``DataFrame.observe`` (Spark evaluates
   the ``CollectMetrics`` node while localCheckpoint materializes the state),

@@ -1,7 +1,6 @@
-"""Skew-aware scatter join + Arrow-vectorized partial aggregation.
+"""Skew-aware scatter join + Catalyst-combined gather.
 
-Every superstep of the salted (``arrow``/``sql``) kernels has the same hot
-loop:
+Every superstep of the salted (``sql``) kernels has the same hot loop:
 
     edges ⋈ vertex_state on (edges.src == state.vid)   -- "scatter"
     groupBy(edges.dst).agg(...)                        -- "gather"
@@ -19,22 +18,22 @@ At 100 TB the edge side dominates, so the design rules are:
    degree threshold, replicate the (tiny) hot vertex-state rows R times, and
    join hot edges on ``(src, salt)`` with ``salt = pmod(xxhash64(dst), R)``
    — deterministic spread of one hub's edges over R tasks.
-3. **Gather pre-reduces in Arrow batches.** The per-partition sparse
-   gather-scatter runs as a ``mapInPandas`` over the joined contributions:
-   NumPy ``factorize`` + ``bincount`` collapses each Arrow batch to one row
-   per distinct ``dst`` before the shuffle — the vectorized analog of
-   map-side combine, with zero per-row Python.
+3. **The gather combines map-side in codegen.** ``groupBy(dst).agg(sum|min)``
+   plans Catalyst's ``partial_sum``/``partial_min`` hash aggregate before its
+   single Exchange, so each task ships at most one row per distinct ``dst``
+   and no row crosses into Python.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
 from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..operators.edges import hot_keys
 
 __all__ = [
     "PartitionedEdges",
@@ -45,6 +44,9 @@ __all__ = [
     "shard_pid",
 ]
 
+# R: a hub's edges spread over this many (src, salt) join keys
+NUM_SALTS = 8
+
 
 @dataclass
 class PartitionedEdges:
@@ -53,9 +55,7 @@ class PartitionedEdges:
     cold: DataFrame  # (src, dst, <payload cols>)
     hot: DataFrame | None  # (src, dst, salt, <payload cols>)
     hot_vids: DataFrame | None  # (vid) — the salted hub keys, broadcast-joined
-    num_salts: int
     num_edges: int
-    payload: tuple[str, ...]
 
     def unpersist(self) -> None:
         self.cold.unpersist()
@@ -65,42 +65,26 @@ class PartitionedEdges:
             self.hot_vids.unpersist()
 
 
-def prepare_edges(
-    edges: DataFrame,
-    payload: tuple[str, ...] = (),
-    *,
-    num_salts: int = 8,
-    hot_threshold: int | None = None,
-    num_partitions: int | None = None,
-) -> PartitionedEdges:
+def prepare_edges(edges: DataFrame, payload: tuple[str, ...] = ()) -> PartitionedEdges:
     """Split, partition and persist ``edges(src, dst, *payload)`` for iteration.
 
-    ``hot_threshold=None`` derives the hub cutoff from the degree histogram
-    (10× mean out-degree, min 64) instead of a constant. Hub keys stay in a
+    The hub cutoff is :func:`~tiktok_whisper_spark.operators.edges.hot_keys`'
+    data-driven one (10× mean out-degree, min 64). Hub keys stay in a
     DataFrame and split the edges via broadcast semi/anti joins — on a Zipf
     graph at 100× there can be thousands of keys above the cutoff, so a
     collected list (giant ``In`` expression + driver round-trip) would not
     survive; a broadcast hash join does.
     """
-    spark = edges.sparkSession
-    P = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    cols = ["src", "dst", *payload]
-    e = edges.select(*cols)
-
-    deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    if hot_threshold is None:
-        mean_deg = deg.agg(F.avg("deg")).collect()[0][0] or 0.0
-        hot_threshold = max(int(10 * mean_deg), 64)
-    hot_vids = (
-        deg.where(F.col("deg") > hot_threshold).select(F.col("src").alias("vid")).persist()
-    )
+    P = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    e = edges.select("src", "dst", *payload)
+    hot_vids = hot_keys(e).persist()
     n_hot_keys = hot_vids.count()
 
     if n_hot_keys:
         cold = e.join(F.broadcast(hot_vids), e["src"] == hot_vids["vid"], "left_anti")
         hot = (
             e.join(F.broadcast(hot_vids), e["src"] == hot_vids["vid"], "left_semi")
-            .withColumn("salt", F.pmod(F.xxhash64("dst"), F.lit(num_salts)).cast("int"))
+            .withColumn("salt", F.pmod(F.xxhash64("dst"), F.lit(NUM_SALTS)).cast("int"))
             .repartition(P, "src", "salt")
             .persist()
         )
@@ -112,7 +96,7 @@ def prepare_edges(
     cold = cold.repartition(P, "src").persist()
     n_cold = cold.count()
     n_hot = hot.count() if hot is not None else 0
-    return PartitionedEdges(cold, hot, hot_vids, num_salts, n_cold + n_hot, payload)
+    return PartitionedEdges(cold, hot, hot_vids, n_cold + n_hot)
 
 
 def scatter_join(pe: PartitionedEdges, state: DataFrame, select: list[F.Column]) -> DataFrame:
@@ -128,35 +112,12 @@ def scatter_join(pe: PartitionedEdges, state: DataFrame, select: list[F.Column])
         return cold_part
     hot_state = (
         state.join(F.broadcast(pe.hot_vids.select("vid")), "vid", "left_semi")
-        .withColumn("vsalt", F.explode(F.sequence(F.lit(0), F.lit(pe.num_salts - 1))))
+        .withColumn("vsalt", F.explode(F.sequence(F.lit(0), F.lit(NUM_SALTS - 1))))
         .withColumn("vsalt", F.col("vsalt").cast("int"))
     )
     cond = (pe.hot["src"] == hot_state["vid"]) & (pe.hot["salt"] == hot_state["vsalt"])
     hot_part = pe.hot.join(hot_state, cond, "inner").select(*select)
     return cold_part.unionByName(hot_part)
-
-
-def _arrow_partial(agg: str):
-    """Per-Arrow-batch sparse gather: one output row per distinct dst.
-
-    Pure NumPy on int64/float64 arrays (factorize + bincount / minimum.at) —
-    this is the per-partition gather-scatter kernel the engine runs instead
-    of per-row Python. A vectorized analog of map-side combine: each Arrow
-    batch collapses to ≤ #distinct-dst rows before the shuffle.
-    """
-
-    def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            codes, uniq = pd.factorize(pdf["dst"], sort=False)
-            vals = pdf["c"].to_numpy()
-            if agg == "sum":
-                out = np.bincount(codes, weights=vals.astype(np.float64), minlength=len(uniq))
-            else:  # min
-                out = np.full(len(uniq), np.iinfo(np.int64).max, dtype=np.int64)
-                np.minimum.at(out, codes, vals.astype(np.int64))
-            yield pd.DataFrame({"dst": uniq, "c": out})
-
-    return partial
 
 
 # -----------------------------------------------------------------------------
@@ -334,12 +295,7 @@ def _compile_shard_split(path: str, cdir: str, filesystem=None) -> None:
 
 
 def scatter_gather(
-    pe: PartitionedEdges,
-    state: DataFrame,
-    contrib: F.Column,
-    *,
-    agg: str = "sum",
-    mode: str = "arrow",
+    pe: PartitionedEdges, state: DataFrame, contrib: F.Column, *, agg: str = "sum"
 ) -> DataFrame:
     """One superstep's ``edges ⋈ state → groupBy(dst).agg(contrib)``.
 
@@ -347,20 +303,12 @@ def scatter_gather(
     ``contrib`` is a Column over the joined (edge payload × state) row, e.g.
     ``F.col("p") * F.col("rank")`` for PageRank, ``F.col("label")`` for
     min-label propagation. Returns ``(dst, c)``.
-
-    ``mode="arrow"`` inserts the NumPy partial aggregation (``mapInPandas``)
-    before the shuffle; ``mode="sql"`` relies on Catalyst's hash-aggregate
-    alone — both produce identical results (float64 addition is
-    associative-enough at the 1e-6 bar; the oracle tolerance covers
-    reordering, and min is exactly associative).
     """
     if agg not in ("sum", "min"):
         raise ValueError(f"agg must be 'sum' or 'min', got {agg!r}")
-    scattered = scatter_join(pe, state, [F.col("dst"), contrib.alias("c")])
-    if mode == "arrow":
-        ctype = "double" if agg == "sum" else "long"
-        scattered = scattered.mapInPandas(_arrow_partial(agg), schema=f"dst long, c {ctype}")
-    elif mode != "sql":
-        raise ValueError(f"mode must be 'arrow' or 'sql', got {mode!r}")
     agg_col = F.sum("c") if agg == "sum" else F.min("c")
-    return scattered.groupBy("dst").agg(agg_col.alias("c"))
+    return (
+        scatter_join(pe, state, [F.col("dst"), contrib.alias("c")])
+        .groupBy("dst")
+        .agg(agg_col.alias("c"))
+    )

@@ -18,7 +18,7 @@ graph can be re-derived on any cluster size and match exactly.
 
 Skew is a first-class concern: tools are Zipf-distributed (one hub tool like
 the reference's dominant ``whisper_cpp`` provider), so this module also
-provides the degree histogram and hot-key salting used by the graph kernels.
+provides the degree histogram and the hub-key cutoff the graph kernels salt.
 """
 
 from __future__ import annotations
@@ -36,7 +36,6 @@ __all__ = [
     "turn_tool_edges",
     "degrees",
     "hot_keys",
-    "explode_salted",
 ]
 
 EDGE_SCHEMA_COLS = ("src", "dst", "weight", "etype")
@@ -226,8 +225,8 @@ def degrees(edges: DataFrame) -> DataFrame:
 def hot_keys(edges: DataFrame, key: str = "src", threshold: int | None = None) -> DataFrame:
     """Keys whose edge count exceeds ``threshold`` (hub vertices).
 
-    With ``threshold=None`` the cutoff is data-driven: 10× the mean degree,
-    computed from the degree histogram rather than a constant — Zipf hubs
+    With ``threshold=None`` the cutoff is data-driven: 10× the mean degree
+    (min 64), computed from the degree histogram rather than a constant — Zipf hubs
     (a whisper_cpp-like dominant tool) can hold >50% of edges.
     Returns a small DataFrame ``(vid)`` suitable for broadcasting.
     """
@@ -237,14 +236,3 @@ def hot_keys(edges: DataFrame, key: str = "src", threshold: int | None = None) -
         threshold = max(int(10 * mean_deg), 64)
     return counts.where(F.col("deg") > threshold).select("vid")
 
-
-def explode_salted(df: DataFrame, key: str, num_salts: int) -> DataFrame:
-    """Replicate each row ``num_salts`` times with a ``salt`` column 0..R-1.
-
-    Used on the *small* side of a skewed join (vertex-state rows): the big
-    side tags each row with ``pmod(xxhash64(<row-unique col>), R)`` and joins
-    on ``(key, salt)``, spreading one hub key over R partitions.
-    """
-    return df.withColumn(
-        "salt", F.explode(F.sequence(F.lit(0), F.lit(num_salts - 1)))
-    )

@@ -816,8 +816,8 @@ def _ranks(run, store: CheckpointStore) -> DataFrame:
 @_register("graph_pagerank_5iter", _pagerank5_sql())
 def graph_pagerank_5iter(spark, sf_dir):
     """PageRank, 5 fixed supersteps, over the event-adjacency graph — the
-    full engine path (salted scatter, Arrow gather, checkpoints), verified
-    by the chained-CTE SQL oracle."""
+    default csr mode on the file-superstep engine (hash homes, per-superstep
+    file checkpoints), verified by the chained-CTE SQL oracle."""
     named = _event_adjacency_named(spark, sf_dir)
     edges = named.select(
         vertex_id("role", "src_name").alias("src"),
