@@ -8,6 +8,8 @@ full synthetic transcript-derived graph cross-checked against the oracles.
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -164,6 +166,27 @@ def test_cc_local_mode_matches_dataframe_and_oracle(spark, tmp_path):
     assert all(m["n_vertices"] == len(got) for m in run_l.metrics)
 
 
+def _node_cache_env(spark, monkeypatch, root) -> None:
+    """Point ``TWSPARK_SHARD_CACHE`` at ``root`` for the driver AND the Python
+    workers: workers take their environment from the SparkContext, not from
+    the driver process's ``os.environ``."""
+    monkeypatch.setenv("TWSPARK_SHARD_CACHE", str(root))
+    monkeypatch.setitem(spark.sparkContext.environment, "TWSPARK_SHARD_CACHE", str(root))
+
+
+def _assert_one_compile_cache(spark, tmp_path, store, run_id):
+    """Kernels compile straight from the Parquet shards into the per-kernel
+    compile cache: nothing is compiled into a shard dir, nor into a
+    node-local cache entry keyed on one; the static dir's entry is there."""
+    from tiktok_whisper_spark.graph.filesteps import Layout, node_cache_root
+
+    P = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    lay = Layout(os.path.join(store.root, run_id), P)
+    assert not list(tmp_path.rglob("_compiled_v2"))
+    assert not os.path.exists(node_cache_root(lay.shard_dir))
+    assert os.path.isdir(node_cache_root(lay.static_dir))
+
+
 def test_cc_lpa_local_mode_via_file_uri(spark, tmp_path, monkeypatch):
     """CC and LPA local modes share PageRank's durable-IO helpers — a
     ``file://`` root drives their label segments, alignments (node-local
@@ -172,17 +195,15 @@ def test_cc_lpa_local_mode_via_file_uri(spark, tmp_path, monkeypatch):
     from tiktok_whisper_spark.operators.edges import turn_adjacency_edges, turn_tool_edges
     from tiktok_whisper_spark.sources.catalog import CheckpointStore
 
-    monkeypatch.setenv("TWSPARK_SHARD_CACHE", str(tmp_path / "nodelocal"))
+    _node_cache_env(spark, monkeypatch, tmp_path / "nodelocal")
     t = datagen.transcripts(spark, n_convs=40, seed=5)
     e = (
         turn_adjacency_edges(t, include_home=True)
         .unionByName(turn_tool_edges(t, include_home=True))
         .localCheckpoint()
     )
-    cc_uri = connected_components(
-        e, scatter_mode="local",
-        store=CheckpointStore(f"file://{tmp_path}/cc_uri"), resume=False,
-    )
+    cc_store = CheckpointStore(f"file://{tmp_path}/cc_uri")
+    cc_uri = connected_components(e, scatter_mode="local", store=cc_store, resume=False)
     cc_path = connected_components(
         e, scatter_mode="local",
         store=CheckpointStore(str(tmp_path / "cc_path")), resume=False,
@@ -190,10 +211,9 @@ def test_cc_lpa_local_mode_via_file_uri(spark, tmp_path, monkeypatch):
     assert cc_uri.converged and cc_path.converged
     gu = {r["vid"]: r["label"] for r in cc_uri.state.collect()}
     assert gu == {r["vid"]: r["label"] for r in cc_path.state.collect()}
-    lpa_uri = label_propagation(
-        e, scatter_mode="local", max_iter=3,
-        store=CheckpointStore(f"file://{tmp_path}/lpa_uri"), resume=False,
-    )
+    lpa_store = CheckpointStore(f"file://{tmp_path}/lpa_uri")
+    lpa_uri = label_propagation(e, scatter_mode="local", max_iter=3, store=lpa_store,
+                                resume=False)
     lpa_path = label_propagation(
         e, scatter_mode="local", max_iter=3,
         store=CheckpointStore(str(tmp_path / "lpa_path")), resume=False,
@@ -201,13 +221,15 @@ def test_cc_lpa_local_mode_via_file_uri(spark, tmp_path, monkeypatch):
     lu = {r["vid"]: r["label"] for r in lpa_uri.state.collect()}
     assert lu == {r["vid"]: r["label"] for r in lpa_path.state.collect()}
     assert list((tmp_path / "cc_uri").glob("*/superstep=*/state/rank-*.f64"))
+    _assert_one_compile_cache(spark, tmp_path, cc_store, cc_uri.run_id)
+    _assert_one_compile_cache(spark, tmp_path, lpa_store, lpa_uri.run_id)
 
 
 def test_lpa_local_mode_matches_dataframe_and_oracle(spark, tmp_path):
     """scatter_mode='local' LPA must reproduce the DataFrame path's labels
     EXACTLY — synchronous updates, weighted votes, max-then-min tie-break —
-    including hubs, whose winners are decided by an in-Spark vote
-    aggregation (the (hub × label) relation never reaches the driver)."""
+    including hubs, whose winners are decided from hub-sliced vote files by
+    a winner job (the (hub × label) relation never reaches the driver)."""
     from tiktok_whisper_spark.operators.edges import turn_adjacency_edges, turn_tool_edges
     from tiktok_whisper_spark.sources.catalog import CheckpointStore
 
@@ -282,17 +304,15 @@ def test_pagerank_local_mode_via_file_uri(spark, tmp_path, monkeypatch, mode):
     from tiktok_whisper_spark.operators.edges import turn_adjacency_edges, turn_tool_edges
     from tiktok_whisper_spark.sources.catalog import CheckpointStore
 
-    monkeypatch.setenv("TWSPARK_SHARD_CACHE", str(tmp_path / "nodelocal"))
+    _node_cache_env(spark, monkeypatch, tmp_path / "nodelocal")
     t = datagen.transcripts(spark, n_convs=60, seed=11)
     e = (
         turn_adjacency_edges(t, include_home=True)
         .unionByName(turn_tool_edges(t, include_home=True))
         .localCheckpoint()
     )
-    r_uri = pagerank(
-        e, scatter_mode=mode,
-        store=CheckpointStore(f"file://{tmp_path}/uri_store"), resume=False,
-    )
+    uri_store = CheckpointStore(f"file://{tmp_path}/uri_store")
+    r_uri = pagerank(e, scatter_mode=mode, store=uri_store, resume=False)
     r_path = pagerank(
         e, scatter_mode=mode,
         store=CheckpointStore(str(tmp_path / "path_store")), resume=False,
@@ -317,6 +337,7 @@ def test_pagerank_local_mode_via_file_uri(spark, tmp_path, monkeypatch, mode):
     last = r_uri.supersteps
     assert steps_with_ranks == {last - 1, last}
     assert len(r_uri.metrics) == last + 1
+    _assert_one_compile_cache(spark, tmp_path, uri_store, r_uri.run_id)
 
 
 def _home_edges(spark, n_convs, seed):
@@ -912,3 +933,127 @@ def test_padded_winners_all_negative_weights():
     out = _padded_winners(votes_lab, w, slots)
     assert out[0] == 9 and out[1] == 7
     assert _LAB_SENTINEL not in out
+
+
+_I64 = np.iinfo(np.int64)
+VOTE_CASES = ["xxhash_labels", "small_labels", "ties", "all_negative", "single_label"]
+
+
+def _vote_case(kind: str, seed: int, n_targets: int = 30, n: int = 400):
+    """``(to, lab, w)`` vote triples; weights are multiples of 0.5, so every
+    sum is exact in any association order."""
+    rng = np.random.default_rng(seed)
+    if kind == "small_labels":
+        pool = np.arange(6, dtype=np.int64)
+    elif kind == "single_label":
+        pool = rng.integers(_I64.min, _I64.max, 1, dtype=np.int64)
+    else:  # xxhash-like vertex ids: both signs, the int64 extremes included
+        pool = np.concatenate([
+            [_I64.min, _I64.max, -1, 0],
+            rng.integers(_I64.min, _I64.max, 8, dtype=np.int64, endpoint=True),
+        ]).astype(np.int64)
+    if kind == "ties":
+        # every target receives each of three labels twice with weight 1:
+        # all sums tie and the min label must win
+        labs = pool[[0, 2, 5]]
+        to = np.repeat(np.arange(n_targets), 6)
+        lab = np.tile(labs, 2 * n_targets)
+        w = np.ones(len(to))
+        perm = rng.permutation(len(to))
+        return to[perm], lab[perm], w[perm]
+    to = rng.integers(0, n_targets, n)
+    lab = pool[rng.integers(0, len(pool), n)]
+    w = rng.integers(1, 7, n) * 0.5
+    if kind == "all_negative":
+        w = -w
+    elif kind == "single_label":
+        w = w - 1.5  # mixed signs, zero sums included
+    return to, lab, w
+
+
+def _ref_winners(to, lab, w) -> dict:
+    """Brute force: per target, max Σw then min label → ``(label, Σw)``."""
+    sums: dict = {}
+    for t, l, x in zip(to.tolist(), lab.tolist(), w.tolist()):
+        per = sums.setdefault(t, {})
+        per[l] = per.get(l, 0.0) + x
+    return {t: min(per.items(), key=lambda kv: (-kv[1], kv[0])) for t, per in sums.items()}
+
+
+@pytest.mark.parametrize("kind", VOTE_CASES)
+def test_lpa_winners_match_bruteforce(kind):
+    """``_winners`` resolves per-target votes in ``lpa.py``'s total order
+    (max Σw, then min label), with and without the winners' sums, for
+    int32 positions and int64 codes alike."""
+    from tiktok_whisper_spark.graph.lpa_local import _winners
+
+    to, lab, w = _vote_case(kind, seed=3)
+    want = _ref_winners(to, lab, w)
+    for dtype in (np.int32, np.int64):
+        t = to.astype(dtype)
+        tg, tl = _winners(t, lab, w)
+        assert tg.dtype == dtype and list(tg) == sorted(want)
+        assert dict(zip(tg.tolist(), tl.tolist())) == {k: v[0] for k, v in want.items()}
+        tg, tl, ts = _winners(t, lab, w, return_sums=True)
+        assert {k: (a, b) for k, a, b in zip(tg.tolist(), tl.tolist(), ts.tolist())} == want
+    empty = np.empty(0, dtype=np.int64)
+    assert all(len(a) == 0 for a in _winners(empty, empty, np.empty(0), return_sums=True))
+
+
+@pytest.mark.parametrize("kind", VOTE_CASES)
+def test_lpa_vote_files_round_trip(kind, tmp_path):
+    """Vote segments written by several partitions and read back slot by
+    slot hold each writer's per-(hub, label) sums exactly once, in the slot
+    ``_vote_slot`` names; merging the per-slot winners (as the winner job
+    and the driver do) gives the brute-force winner of every hub."""
+    from tiktok_whisper_spark.graph.lpa_local import (
+        _read_vote_file, _vote_slot, _winners, _write_vote_files,
+    )
+
+    P, k, vdir = 4, 3, str(tmp_path / "votes")
+    rng = np.random.default_rng(11)
+    rvids = np.unique(rng.integers(_I64.min, _I64.max, 7, dtype=np.int64))
+    writers = []
+    for i, seed in enumerate((5, 6)):
+        hidx, lab, w = _vote_case(kind, seed, n_targets=len(rvids))
+        writers.append((hidx, rvids[hidx], lab, w))
+        _write_vote_files(vdir, i, P, k, hidx, rvids[hidx], lab, w)
+    _write_vote_files(vdir, 2, P, k, None, [], [], [])  # a partition without votes
+    n_writers = 3
+
+    for i in range(n_writers):
+        got: dict = {}
+        for j in range(P):
+            h, l, w = _read_vote_file(vdir, i, j, k)
+            hidx = np.searchsorted(rvids, h)
+            assert (_vote_slot(hidx, l, P) == j).all()
+            for key, x in zip(zip(h.tolist(), l.tolist()), w.tolist()):
+                assert key not in got  # reduced: one row per (hub, label)
+                got[key] = x
+        want: dict = {}
+        if i < len(writers):
+            _, h, lab, w = writers[i]
+            for key, x in zip(zip(h.tolist(), lab.tolist()), w.tolist()):
+                want[key] = want.get(key, 0.0) + x
+        assert got == want
+    with pytest.raises(RuntimeError, match="stale"):
+        _read_vote_file(vdir, 0, 0, k + 1)
+
+    best: dict = {}
+    for j in range(P):
+        parts = [_read_vote_file(vdir, i, j, k) for i in range(n_writers)]
+        h = np.concatenate([p[0] for p in parts])
+        if not len(h):
+            continue
+        h_uniq, hcode = np.unique(h, return_inverse=True)
+        wt, wl, ws = _winners(
+            hcode, np.concatenate([p[1] for p in parts]),
+            np.concatenate([p[2] for p in parts]), return_sums=True,
+        )
+        for hub, lab_, s in zip(h_uniq[wt].tolist(), wl.tolist(), ws.tolist()):
+            if hub not in best or (-s, lab_) < (-best[hub][1], best[hub][0]):
+                best[hub] = (lab_, s)
+    all_h = np.concatenate([wr[1] for wr in writers])
+    all_l = np.concatenate([wr[2] for wr in writers])
+    all_w = np.concatenate([wr[3] for wr in writers])
+    assert best == _ref_winners(all_h, all_l, all_w)

@@ -25,8 +25,11 @@ A kernel (:class:`Kernel`) supplies three things: a per-partition
 ``compile`` of superstep-invariant arrays, a per-partition ``init`` /
 ``update`` of its state vector, and a driver-side ``combine`` of the
 metrics and exchange rows (which may run extra jobs). The engine owns the
-rest: the warm-dir gate and cold prep, task packing, resume guards, the
-params file, coverage checks, commits, retention and the compile cache.
+rest: the edge-shard and static-file formats, the warm-dir gate and cold
+prep, task packing, resume guards, the params file, coverage checks,
+commits, retention and the one compile cache (:func:`load_compiled`): a
+kernel's compile reads its partition's static file and Parquet edge shard
+once per run dir, and supersteps read only the compiled arrays.
 """
 
 from __future__ import annotations
@@ -51,7 +54,6 @@ from ..session import local_slots
 from ..sources import fsio
 from ..sources.catalog import CheckpointStore
 from .runner import GraphRun
-from .scatter import _load_shard_split, purge_shard_dir, write_edge_shards_local
 
 __all__ = ["Kernel", "Layout", "committed_state", "run_local"]
 
@@ -176,6 +178,94 @@ def write_state_part(state_dir: str, pid: int, table) -> None:
     os.replace(tmp, _part_path(base, pid))
 
 
+# =============================================================================
+# Edge shards: conversation-local edges never cross partitions
+# =============================================================================
+#
+# Transcript graphs have massive *edge locality*: turn-adjacency edges (the
+# overwhelming majority) connect turns of the SAME conversation. When every
+# vertex carries a `home` locality key (turns: their conversation's hash;
+# tools: themselves) and state is hash-partitioned by `home`, an adjacency
+# edge's src and dst land in the same partition BY CONSTRUCTION — so its
+# contribution can be gathered AND applied entirely inside one Python worker,
+# never crossing an exchange. Only the remote edges (turn → tool hubs, a few
+# distinct dsts after per-shard pre-reduction) cross partitions. This is the
+# PowerGraph-style placement insight: the engine relays ~|tools| hub entries
+# per superstep through the driver instead of shuffling and hash-aggregating
+# an edge-sized (75M-row at bench scale) partial table. Graphs with no
+# locality hint (PageRank's csr mode) shard the same way with home = vid: an
+# edge is then local when both endpoints hash to one partition.
+
+
+def shard_pid(col: F.Column, num_partitions: int) -> F.Column:
+    """Spark's HashPartitioning function: pmod(murmur3(col), n) — F.hash IS
+    murmur3_32(seed=42), the same hash HashPartitioning evaluates."""
+    return F.pmod(F.hash(col), F.lit(num_partitions))
+
+
+def write_edge_shards_local(enorm: DataFrame, shard_dir: str, num_partitions: int) -> None:
+    """One-time shard write.
+
+    ``enorm`` must carry ``(src, dst, p, src_home, dst_home)``; shards are
+    keyed by ``pid = pmod(hash(src_home), P)`` with an ``is_local`` flag
+    marking edges whose dst lives in the same partition.
+    """
+    (
+        enorm.withColumn("pid", shard_pid(F.col("src_home"), num_partitions))
+        .withColumn(
+            "is_local",
+            shard_pid(F.col("dst_home"), num_partitions) == F.col("pid"),
+        )
+        .select("src", "dst", "p", "pid", "is_local")
+        .repartition("pid")
+        .write.mode("overwrite")
+        .partitionBy("pid")
+        .parquet(shard_dir)
+    )
+
+
+def purge_shard_dir(shard_dir: str) -> None:
+    """Delete a shard (or static) dir so it can be rewritten. The three
+    kernels share one ``_edge_shards_p{P}`` layout but put different values
+    in the ``p`` slot — PageRank normalized probabilities, CC constant 1.0,
+    LPA raw summed weights — so cold prep purges a dir whose ``_META.json``
+    does not match the kernel before it re-shards. Also drops the node-local
+    compile cache when the dir is an object-store URI; on a multi-node
+    cluster, rewriting a URI dir in place would still leave OTHER nodes'
+    caches stale — share run dirs across kernels only when the weight
+    semantics match, or use a fresh run_id."""
+    fsio.rmtree(shard_dir)
+    if fsio.is_uri(shard_dir):
+        shutil.rmtree(node_cache_root(shard_dir), ignore_errors=True)
+
+
+def _factorize_shard(tbl):
+    """Arrow table → factorized CSR-ish arrays (src/dst codes + uniques)."""
+    src_codes, src_uniq = pd.factorize(tbl.column("src").to_numpy(), sort=False)
+    dst_codes, dst_uniq = pd.factorize(tbl.column("dst").to_numpy(), sort=False)
+    p = tbl.column("p").to_numpy().astype(np.float64)
+    return (src_codes, src_uniq, dst_codes, dst_uniq, p)
+
+
+def read_shard(shard_dir: str, pid: int) -> dict | None:
+    """The factorized ``local``/``remote`` halves of edge shard ``pid``, each
+    ``(src_codes, src_uniq, dst_codes, dst_uniq, p)`` or None when empty
+    (None: no shard). Read straight from Parquet: only a compile miss of
+    :func:`load_compiled` calls it."""
+    import pyarrow.parquet as pq
+
+    path = os.path.join(shard_dir, f"pid={pid}")
+    if not fsio.exists(path):
+        return None
+    fs, base = fsio.fs_and_path(path)
+    tbl = pq.read_table(base, columns=["src", "dst", "p", "is_local"], filesystem=fs)
+    mask = tbl.column("is_local").to_numpy()
+    return {
+        half: _factorize_shard(sub) if sub.num_rows else None
+        for half, sub in (("local", tbl.filter(mask)), ("remote", tbl.filter(~mask)))
+    }
+
+
 def checksum(vids_crc: int, state: np.ndarray) -> int:
     """Lineage checksum of one partition: crc(vids) ^ crc(state bytes)."""
     return int(vids_crc ^ zlib.crc32(memoryview(np.ascontiguousarray(state)).cast("B")))
@@ -205,9 +295,12 @@ def positions(vids: np.ndarray, values, pid: int, what: str) -> np.ndarray:
 # the rebuild anti-scales with cores — fresh-page zeroing is a machine-wide
 # ~2 GB/s resource on the measured VM). Instead the arrays are COMPILED ONCE per
 # (run, kernel, pid) into mmap-able ``.npy`` files next to the static state
-# (a node-local cache for URI stores, like the shards): any worker's "miss"
-# is then a mmap open (microseconds) against pages every worker on the
-# machine shares.
+# (under the node-local ``TWSPARK_SHARD_CACHE`` root for URI stores): any
+# worker's "miss" is then a mmap open (microseconds) against pages every
+# worker on the machine shares. This is the only compile cache: a compile
+# miss reads the static part and the Parquet edge shard (:func:`read_shard`)
+# and keeps every array a superstep reads, so no superstep touches the
+# shard again.
 
 
 def node_cache_root(uri: str) -> str:
@@ -285,7 +378,7 @@ def load_compiled(kernel: Kernel, lay: Layout, pid: int) -> dict | None:
         if st is None:
             return None
         vids = st.column("vid").to_numpy()
-        arrays = kernel.compile(st, vids, _load_shard_split(lay.shard_dir, pid), pid)
+        arrays = kernel.compile(st, vids, read_shard(lay.shard_dir, pid), pid)
         crc = np.array([zlib.crc32(np.ascontiguousarray(vids).tobytes())], dtype=np.int64)
         publish(cdir, {"vids": vids, "crc": crc, **arrays})
     ent = {
@@ -351,7 +444,8 @@ class Kernel:
 
     # -- task side ----------------------------------------------------------
     def compile(self, st, vids: np.ndarray, shard, pid: int) -> dict[str, np.ndarray]:
-        """Superstep-invariant arrays of one partition (``st`` its static table)."""
+        """Superstep-invariant arrays of one partition: ``st`` is its static
+        table, ``shard`` its edge shard as :func:`read_shard` returns it."""
         return {}
 
     def loaded(self, ent: dict) -> None:
@@ -481,16 +575,16 @@ def _prepare(edges: DataFrame, kernel: Kernel, lay: Layout) -> tuple[int, int]:
     # meta["sorted"] gates warm reuse: static vid files from before the
     # sorted layout would break the searchsorted hub application.
     # meta["weights"] gates the shard p slot's semantics: PageRank needs
-    # normalized probabilities ("norm"), LPA raw summed weights ("raw",
-    # legacy marker raw_w), CC constant 1.0 ("unit") but accepts any —
-    # silently gathering or voting with the wrong ones would corrupt every
-    # result. Dirs without either marker predate CC/LPA sharing and are norm.
+    # normalized probabilities ("norm"), LPA raw summed weights ("raw"),
+    # CC constant 1.0 ("unit") but accepts any — silently gathering or
+    # voting with the wrong ones would corrupt every result. A dir without
+    # the marker is of unknown semantics and is re-prepped.
     # meta["homes"] ("vid" for hash homes) gates the partitioning: a dir
     # sharded on the other kind of home must not be reused either.
-    if meta is not None and meta.get("sorted") and meta.get("homes") == kernel.meta.get("homes"):
-        weights = meta.get("weights", "raw" if meta.get("raw_w") else "norm")
-        if kernel.any_weights or weights == kernel.meta["weights"]:
-            return int(meta["n"]), int(meta["num_edges"])
+    if (meta is not None and meta.get("sorted") and "weights" in meta
+            and meta.get("homes") == kernel.meta.get("homes")
+            and (kernel.any_weights or meta["weights"] == kernel.meta["weights"])):
+        return int(meta["n"]), int(meta["num_edges"])
     # shards of unknown provenance or other weight semantics: purge rather
     # than trust — a stale _DONE must never gate out the rewrite
     purge_shard_dir(lay.shard_dir)

@@ -12,7 +12,7 @@ EXACTLY — synchronous, weighted, max-votes-then-min-label):
   resolves it so each vertex's winner sees ALL its votes in one summation:
   small-degree targets (almost all of a transcript graph) through the
   compile-time padded slot table (fixed-width K² vectorized pass, no sort,
-  no hash), big targets through the packed radix-key sort path;
+  no hash), big targets through the packed-key sort path;
 * votes ON a hub aggregate across partitions — and UNLIKE PageRank/CC's
   per-hub scalar exchange, hub votes are ``(hub × label)``-cardinality
   (≈ one triple per remote edge while labels are still distinct), so they
@@ -22,7 +22,7 @@ EXACTLY — synchronous, weighted, max-votes-then-min-label):
   (hub, LABEL) pair mod P, superstep-stamped, atomic publish — so a Zipf
   hub's votes spread across all P slices while every pair's sum stays
   complete within one slice. A second tiny job's task j reads slice j of
-  every partition's segment, reduces per-pair sums in NumPy (radix-key
+  every partition's segment, reduces per-pair sums in NumPy (packed-key
   sort + reduceat), and returns its per-hub BEST (label, Σw) candidates;
   the driver merges the ≤ P×#hubs candidates with the exact total order
   (max Σw, then min label — per-slice bests are sufficient because the
@@ -66,87 +66,68 @@ __all__ = ["LPAFiles"]
 _PAD_K = 8
 
 
+def _packed_key(hi: np.ndarray, lab: np.ndarray):
+    """``(key, lab_uniq, nl)``: ``(hi, label)`` packed into one int64 key,
+    ``hi·nl + lcode``, with ``lcode`` the label's dense code. ``np.unique``
+    is order-preserving, so ascending keys order labels ascending within
+    each ``hi``. Vertex-id labels are ``xxhash64`` values spanning almost
+    all of int64, so raw labels never pack; the dense codes do whenever the
+    ``hi`` count times the distinct-label count fits — both are far below
+    2³¹ in one call (int32 positions or hub codes; labels in one pool)."""
+    lab_uniq, lcode = np.unique(lab, return_inverse=True)
+    nl = np.int64(len(lab_uniq))
+    if (int(hi.max()) + 1) * len(lab_uniq) - 1 > np.iinfo(np.int64).max:
+        raise OverflowError(
+            f"lpa vote key overflows int64: {int(hi.max()) + 1} targets × "
+            f"{len(lab_uniq)} distinct labels"
+        )
+    return hi.astype(np.int64) * nl + lcode, lab_uniq, nl
+
+
+def _run_heads(ks: np.ndarray) -> np.ndarray:
+    """Mask of the first element of each run of equal values in sorted ``ks``."""
+    first = np.empty(len(ks), dtype=bool)
+    first[0] = True
+    np.not_equal(ks[1:], ks[:-1], out=first[1:])
+    return first
+
+
 def _winners(to: np.ndarray, lab: np.ndarray, w: np.ndarray, return_sums: bool = False):
     """(targets, labels) of per-target vote winners: max Σw, then min label
     — the exact total order of ``lpa.py``'s row_number window.
 
     Pure NumPy (no pandas hash-groupby, no full three-column sort — the
-    measured dominant cost of a superstep at 233M edges): dense-code the
-    label values (``np.unique`` — order-preserving, so code order == label
-    order), pack ``(target, lcode)`` into ONE int64 key, radix-sort it
-    (``kind="stable"`` on ints), segment-sum with ``add.reduceat``, then
-    pick each target's winner with ``maximum.reduceat`` + a vectorized
-    first-hit scan. Ascending keys put label codes ascending within each
-    target, so the FIRST max-sum hit IS the min-label tie-break. Float
-    caveat unchanged (module docstring): sums are float64 in a different
-    association order than Spark's partial aggregation.
+    measured dominant cost of a superstep at 233M edges): pack ``(target,
+    label code)`` into ONE int64 key (:func:`_packed_key`), sort it,
+    segment-sum with ``add.reduceat``, then pick each target's winner with
+    ``maximum.reduceat`` + a vectorized first-hit scan. Ascending keys put
+    label codes ascending within each target, so the FIRST max-sum hit IS
+    the min-label tie-break. Float caveat unchanged (module docstring): sums
+    are float64 in a different association order than Spark's partial
+    aggregation.
     """
     if not len(to):
         return (to, lab, w) if return_sums else (to, lab)
-    tmax = int(to.max())
-    lmin, lmax = int(lab.min()), int(lab.max())
-    span = lmax - lmin + 1
-    lab_uniq = None
-    if (tmax + 1) * span < 2**62:  # python ints: no overflow in the guard
-        # tier 1 (the transcript graphs: vertex-id labels, bounded span):
-        # pack raw values, no label coding pass at all
-        key = to.astype(np.int64) * np.int64(span) + (lab.astype(np.int64) - lmin)
-        nl = np.int64(span)
-    else:
-        lab_uniq, lcode = np.unique(lab, return_inverse=True)
-        nl = np.int64(len(lab_uniq))
-        if (tmax + 1) * len(lab_uniq) >= 2**62:
-            return _winners_lexsort(to, lab, w, return_sums)  # tier 3
-        key = to.astype(np.int64) * nl + lcode
+    key, lab_uniq, nl = _packed_key(to, lab)
     # quicksort, not stable: equal keys are SUMMED, so their relative order
     # is irrelevant (float association caveat already documented above)
     order = np.argsort(key)
     ks = key[order]
-    first = np.empty(len(ks), dtype=bool)
-    first[0] = True
-    np.not_equal(ks[1:], ks[:-1], out=first[1:])
-    starts = np.flatnonzero(first)
+    starts = np.flatnonzero(_run_heads(ks))
     sums = np.add.reduceat(w[order], starts)
     gk = ks[starts]
     gt = gk // nl
-    gl = gk % nl
-    tfirst = np.empty(len(gt), dtype=bool)
-    tfirst[0] = True
-    np.not_equal(gt[1:], gt[:-1], out=tfirst[1:])
+    tfirst = _run_heads(gt)
     tstarts = np.flatnonzero(tfirst)
     smax = np.maximum.reduceat(sums, tstarts)
     seg = np.cumsum(tfirst) - 1
     idx = np.where(sums == smax[seg], np.arange(len(sums)), len(sums))
     win_idx = np.minimum.reduceat(idx, tstarts)
-    wl = gl[win_idx]
-    labels_out = (wl + lmin) if lab_uniq is None else lab_uniq[wl]
+    labels_out = lab_uniq[gk[win_idx] % nl]
     targets_out = gt[tstarts].astype(to.dtype, copy=False)
     if return_sums:
         return targets_out, labels_out, smax  # winner's sum == segment max
     return targets_out, labels_out
-
-
-def _winners_lexsort(to: np.ndarray, lab: np.ndarray, w: np.ndarray, return_sums: bool = False):
-    """Tier-3 fallback when (target, label) can't pack into one int64."""
-    order = np.lexsort((lab, to))
-    ts, ls = to[order], lab[order]
-    first = np.empty(len(ts), dtype=bool)
-    first[0] = True
-    first[1:] = (ts[1:] != ts[:-1]) | (ls[1:] != ls[:-1])
-    starts = np.flatnonzero(first)
-    sums = np.add.reduceat(w[order], starts)
-    gt, gl = ts[starts], ls[starts]
-    tfirst = np.empty(len(gt), dtype=bool)
-    tfirst[0] = True
-    np.not_equal(gt[1:], gt[:-1], out=tfirst[1:])
-    tstarts = np.flatnonzero(tfirst)
-    smax = np.maximum.reduceat(sums, tstarts)
-    seg = np.cumsum(tfirst) - 1
-    idx = np.where(sums == smax[seg], np.arange(len(sums)), len(sums))
-    win_idx = np.minimum.reduceat(idx, tstarts)
-    if return_sums:
-        return gt[tstarts].astype(to.dtype, copy=False), gl[win_idx], smax
-    return gt[tstarts].astype(to.dtype, copy=False), gl[win_idx]
 
 
 def _votes_on_hubs(lab_now, al, rvids, hub_lab_now):
@@ -256,86 +237,22 @@ def _reduce_votes(hidx, h, l, w):
     writer (≤ P rows globally). Partial-then-total float summation matches
     the documented association-order caveat; integer weights exact."""
     hidx = np.asarray(hidx, dtype=np.int64)
-    l = np.asarray(l, dtype=np.int64)
-    w = np.asarray(w, dtype=np.float64)
-    # tier 1 (same tiering as _winners): when (hub, raw-label-span) packs
-    # into int64, sort the packed key directly — the previous unconditional
-    # np.unique(l) was itself a full sort of the raw vote labels, i.e. the
-    # reduce paid TWO O(n log n) passes where one suffices
-    lmin = int(l.min())
-    span = int(l.max()) - lmin + 1
-    if (int(hidx.max()) + 1) * span < 2**62:
-        key = hidx * np.int64(span) + (l - lmin)
-        order = np.argsort(key, kind="stable")  # radix for ints — O(n), no random access
-        ks = key[order]
-        first = np.empty(len(ks), dtype=bool)
-        first[0] = True
-        np.not_equal(ks[1:], ks[:-1], out=first[1:])
-        starts = np.flatnonzero(first)
-        sums = np.add.reduceat(w[order], starts)
-        return (
-            hidx[order][starts],
-            np.asarray(h)[order][starts],
-            l[order][starts],
-            sums,
-        )
-    lu, lc = np.unique(l, return_inverse=True)
-    if (int(hidx.max()) + 1) * len(lu) >= 2**62:
-        order = np.lexsort((lc, hidx))
-        hs_, ls_ = hidx[order], lc[order]
-        first = np.empty(len(hs_), dtype=bool)
-        first[0] = True
-        first[1:] = (hs_[1:] != hs_[:-1]) | (ls_[1:] != ls_[:-1])
-        starts = np.flatnonzero(first)
-        sums = np.add.reduceat(w[order], starts)
-        return hidx[order][starts], h[order][starts], lu[ls_[starts]], sums
-    key = hidx * np.int64(len(lu)) + lc
+    key, lu, nl = _packed_key(hidx, np.asarray(l, dtype=np.int64))
     order = np.argsort(key)
     ks = key[order]
-    first = np.empty(len(ks), dtype=bool)
-    first[0] = True
-    np.not_equal(ks[1:], ks[:-1], out=first[1:])
-    starts = np.flatnonzero(first)
-    sums = np.add.reduceat(w[order], starts)
+    starts = np.flatnonzero(_run_heads(ks))
+    sums = np.add.reduceat(np.asarray(w, dtype=np.float64)[order], starts)
     gk = ks[starts]
-    return gk // len(lu), np.asarray(h)[order][starts], lu[gk % len(lu)], sums
+    return gk // nl, np.asarray(h)[order][starts], lu[gk % nl], sums
 
 
 def _write_vote_files(vdir: str, pid: int, P: int, k: int, hidx, h, l, w) -> None:
     if len(h):
-        hidx = np.asarray(hidx, dtype=np.int64)
-        l = np.asarray(l, dtype=np.int64)
-        w = np.asarray(w, dtype=np.float64)
-        lmin = int(l.min())
-        span = int(l.max()) - lmin + 1
-        m_span = (int(hidx.max()) + 1) * span
-        if m_span < 2**62 // max(P, 1):
-            # fused path: ONE radix argsort of slot·M + (hub·span + label)
-            # groups by winner slot AND orders (hub, label) within it — the
-            # separate reduce-sort + slot-sort each re-sorted ~|raw votes|
-            # rows in the diverse-label regime (no reduction to amortize
-            # the second pass). Same per-(hub,label) partial sums: stable
-            # order keeps duplicate rows in original sequence, as before.
-            j_raw = _vote_slot(hidx, l, P)
-            key = j_raw * np.int64(m_span) + hidx * np.int64(span) + (l - lmin)
-            order = np.argsort(key, kind="stable")
-            ks = key[order]
-            first = np.empty(len(ks), dtype=bool)
-            first[0] = True
-            np.not_equal(ks[1:], ks[:-1], out=first[1:])
-            starts = np.flatnonzero(first)
-            wsum = np.add.reduceat(w[order], starts)
-            h = np.asarray(h)[order][starts]
-            l = l[order][starts]
-            w = wsum
-            bounds = np.searchsorted(ks[starts] // np.int64(m_span), np.arange(P + 1))
-        else:
-            hidx, h, l, w = _reduce_votes(hidx, h, l, w)
-            j_all = _vote_slot(hidx, l, P)
-            order = np.argsort(j_all, kind="stable")
-            j_sorted = j_all[order]
-            h, l, w = h[order], l[order], np.asarray(w, dtype=np.float64)[order]
-            bounds = np.searchsorted(j_sorted, np.arange(P + 1))
+        hidx, h, l, w = _reduce_votes(hidx, h, l, w)
+        j_all = _vote_slot(hidx, l, P)
+        order = np.argsort(j_all, kind="stable")
+        h, l, w = h[order], l[order], w[order]
+        bounds = np.searchsorted(j_all[order], np.arange(P + 1))
     else:
         h = l = np.empty(0, dtype=np.int64)
         w = np.empty(0, dtype=np.float64)
@@ -476,8 +393,8 @@ def _apply_lpa_kernel(labels, al, rvids, hub_prev, hub_new, mk=None):
     if lab_parts:
         votes_lab = np.concatenate(lab_parts) if len(lab_parts) > 1 else lab_parts[0]
         w_all = np.asarray(al["all_w"])
-        if al.get("p_classes"):
-            # degree-class sub-tables (see _load_lpa_aligned): same winners,
+        if al["p_classes"]:
+            # degree-class sub-tables (see LPAFiles.loaded): same winners,
             # K²-pass cost proportional to each class's true vote width
             t0 = _t.perf_counter()
             for ctg, cslots in al["p_classes"]:
@@ -485,12 +402,6 @@ def _apply_lpa_kernel(labels, al, rvids, hub_prev, hub_new, mk=None):
                     out[ctg] = _padded_winners_pair(votes_lab, w_all, cslots)
                 else:
                     out[ctg] = _padded_winners(votes_lab, w_all, cslots)
-            _mk("k_padded", t0)
-        elif al["p_targets"] is not None and len(al["p_targets"]):
-            t0 = _t.perf_counter()
-            out[np.asarray(al["p_targets"])] = _padded_winners(
-                votes_lab, w_all, np.asarray(al["p_slots"])
-            )
             _mk("k_padded", t0)
         if al["b_to"] is not None and len(al["b_to"]):
             t0 = _t.perf_counter()
@@ -577,9 +488,7 @@ def _collect_winners(run: Run, hubs: list[int]) -> dict[int, int]:
     sm = np.fromiter((r["s"] for r in rows), dtype=np.float64, count=len(rows))
     order = np.lexsort((l, -sm, h))  # by hub, then sum desc, then label asc
     hs_, ls_ = h[order], l[order]
-    first = np.empty(len(hs_), dtype=bool)
-    first[0] = True
-    np.not_equal(hs_[1:], hs_[:-1], out=first[1:])
+    first = _run_heads(hs_)
     return {int(a): int(b) for a, b in zip(hs_[first], ls_[first])}
 
 
@@ -590,7 +499,7 @@ class LPAFiles(Kernel):
     Each superstep: the update job applies the kernel, writes label segments
     and publishes hub-sliced vote segments (only P metrics rows come back);
     ``combine`` then runs the winner job — per slot, read every partition's
-    slice, one radix sort, return ≤ #hubs winner rows. Superstep 0 is
+    slice, one packed-key sort, return ≤ #hubs winner rows. Superstep 0 is
     two-phase: the update job writes labels_0 and surfaces the hub universe
     (remote dst ids), then ``combine`` replays the vote report from labels_0
     with that universe known, so superstep 1's winners include owner-local
@@ -616,7 +525,7 @@ class LPAFiles(Kernel):
     # the warm gate needs RAW summed weights in the shard p slot — a dir
     # warmed by PageRank holds normalized probabilities and CC constant
     # 1.0, and silently voting with those would mislabel every community
-    meta = {"raw_w": True, "weights": "raw"}
+    meta = {"weights": "raw"}
     transient = "_lpa_votes"  # the exchange; superstep state is the checkpoint
 
     def shard_edges(self, edges: DataFrame) -> DataFrame:
@@ -809,9 +718,9 @@ class LPAFiles(Kernel):
 
 def _make_winner_task(lay: Layout):
     """Winner job: task j reads slice j of every partition's vote segment,
-    resolves winners with one pandas groupby + the exact total order of
-    ``lpa.py``'s window (max Σw, then min label), and returns only winner
-    rows — the (hub × label) relation never reaches the driver."""
+    resolves winners with one NumPy :func:`_winners` call in the exact total
+    order of ``lpa.py``'s window (max Σw, then min label), and returns only
+    winner rows — the (hub × label) relation never reaches the driver."""
 
     def task(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import time as _t
@@ -837,7 +746,7 @@ def _make_winner_task(lay: Layout):
                 t0 = _t.perf_counter()
                 h = np.concatenate(hs)
                 # dense-code the hub ids so _winners can pack (hub, label)
-                # into one radix-sortable int64 key; every (hub, label)
+                # into one sortable int64 key; every (hub, label)
                 # pair's votes land WHOLLY in this slice (slot = hash of the
                 # pair), so the per-pair sums here are complete and this
                 # slice's per-hub best is an exact candidate for the global

@@ -56,9 +56,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.catalog import CheckpointStore
-from .filesteps import Kernel, Run, positions, read_state_part, run_local
+from .filesteps import Kernel, Run, load_compiled, positions, read_state_part, run_local
 from .runner import GraphRun, run_supersteps
-from .scatter import _load_shard_split, prepare_edges, scatter_gather
+from .scatter import prepare_edges, scatter_gather
 
 __all__ = ["pagerank"]
 
@@ -286,8 +286,8 @@ def pagerank(
 _METRICS_CHUNK = 1 << 20
 
 
-def _part_metrics(vids, ranks, prev, dangling, tol, vids_crc: int | None = None) -> dict[str, Any]:
-    n_rows = int(len(vids))
+def _part_metrics(ranks, prev, dangling, tol: float, vids_crc: int) -> dict[str, Any]:
+    n_rows = int(len(ranks))
     delta_max, active, dangling_sum, total_mass = 0.0, 0, 0.0, 0.0
     crc = 0
     if n_rows:
@@ -307,8 +307,6 @@ def _part_metrics(vids, ranks, prev, dangling, tol, vids_crc: int | None = None)
             dangling_sum += float(np.sum(r, where=dang[lo : lo + _METRICS_CHUNK]))
             total_mass += float(r.sum())
             crc = zlib.crc32(memoryview(r).cast("B"), crc)
-    if vids_crc is None:
-        vids_crc = zlib.crc32(np.ascontiguousarray(vids).tobytes())
     return {
         "n_rows": n_rows,
         "checksum": int(vids_crc ^ crc),
@@ -319,39 +317,33 @@ def _part_metrics(vids, ranks, prev, dangling, tol, vids_crc: int | None = None)
     }
 
 
-def _remote_partials(sd: str, pid: int, vids, ranks) -> pd.DataFrame | None:
-    """Pre-reduced contributions ``(dst, c)`` along this shard's REMOTE edges."""
-    shard = _load_shard_split(sd, pid)
-    if shard is None or shard["remote"] is None:
-        return None
-    src_codes, src_uniq, dst_codes, dst_uniq, p = shard["remote"]
-    aligned = ranks[positions(vids, src_uniq, pid, "remote gather")]
-    sums = np.bincount(dst_codes, weights=p * aligned[src_codes], minlength=len(dst_uniq))
-    return pd.DataFrame({"dst": np.asarray(dst_uniq), "c": sums})
-
-
 class _PageRankFiles(Kernel):
     """Home-keyed PageRank on the file-superstep engine (conversation homes
     in local mode, ``home = vid`` in csr mode).
 
-    Each task loads its shard's LOCAL edges and the previous rank segment,
-    computes the full gather + rank update in NumPy, and reports the
-    contributions along its REMOTE edges (turn→tool under conversation
-    homes) pre-reduced to one row per destination; the driver merges them
-    into the dict the next superstep applies.
+    Each task reads its partition's compiled arrays and the previous rank
+    segment, computes the full local gather + rank update in NumPy, and
+    reports the contributions along its REMOTE edges (turn→tool under
+    conversation homes) pre-reduced to one row per destination; the driver
+    merges them into the dict the next superstep applies.
 
-    Compiled per partition: the static dangling flags and the per-edge
-    positions of each edge's endpoints, composed down to edge granularity
+    Compiled per partition, once, from the static file and the edge shard:
+    the dangling flags, each edge's transition probability, and the
+    positions of each edge's endpoints composed down to edge granularity
     (``pos[codes]``) — a superstep's gather is one rank fancy-index +
     in-place multiply + one bincount straight into the vid-indexed vector,
-    with no vertex-sized aligned temp and no scatter pass.
+    with no vertex-sized aligned temp and no scatter pass. Remote edges keep
+    their destination codes and ids for the pre-reduction.
     """
 
     name = "pagerank"
     tag = "aligned"
-    version = "v2"
+    version = "v3"
     dtype = np.float64
-    arrays = ("dang", "epos_src_local", "epos_dst_local", "epos_src_remote")
+    arrays = (
+        "dang", "epos_src_local", "epos_dst_local", "p_local",
+        "epos_src_remote", "p_remote", "dst_codes_remote", "dst_uniq_remote",
+    )
     metrics_schema = (
         "n_rows long, checksum long, delta_max double, dangling_sum double, "
         "total_mass double, active long"
@@ -452,12 +444,16 @@ class _PageRankFiles(Kernel):
             h = None if shard is None else shard[half]
             if h is None:
                 continue
-            src_codes, src_uniq, dst_codes, dst_uniq, _p = h
+            src_codes, src_uniq, dst_codes, dst_uniq, p = h
             epos = positions(vids, src_uniq, pid, f"{half} gather")
-            out[f"epos_src_{half}"] = epos[np.asarray(src_codes)]
+            out[f"epos_src_{half}"] = epos[src_codes]
+            out[f"p_{half}"] = p
             if half == "local":
                 epos = positions(vids, dst_uniq, pid, "local gather")
-                out["epos_dst_local"] = epos[np.asarray(dst_codes)]
+                out["epos_dst_local"] = epos[dst_codes]
+            else:
+                out["dst_codes_remote"] = dst_codes.astype(np.int32)
+                out["dst_uniq_remote"] = dst_uniq
         return out
 
     def decode(self, prm: dict) -> dict:
@@ -477,23 +473,19 @@ class _PageRankFiles(Kernel):
         }
 
     def init(self, lay, pid, st, prm):
-        vids = st.column("vid").to_numpy()
-        ranks = np.full(len(vids), 1.0 / prm["n"])
-        m = _part_metrics(vids, ranks, ranks, st.column("dangling").to_numpy(), self.tol)
+        al = load_compiled(self, lay, pid)
+        ranks = np.full(len(al["vids"]), 1.0 / prm["n"])
+        m = _part_metrics(ranks, ranks, al["dang"], self.tol, al["crc"])
         m["delta_max"] = 0.0
         m["active"] = 0
-        return ranks, m, _remote_partials(lay.shard_dir, pid, vids, ranks)
+        return ranks, m, self.remote_sums(al, ranks)
 
     def update(self, lay, pid, al, ranks, prm, mk):
         d, vids = self.damping, al["vids"]
         t0 = time.perf_counter()
-        shard = _load_shard_split(lay.shard_dir, pid)
-        mk("shard", t0)
-        t0 = time.perf_counter()
         if al["epos_src_local"] is not None:
-            p = shard["local"][4]
             g = ranks[al["epos_src_local"]]
-            np.multiply(g, p, out=g)
+            np.multiply(g, al["p_local"], out=g)
             local_c = np.bincount(al["epos_dst_local"], weights=g, minlength=len(vids))
         else:
             local_c = np.zeros(len(vids))
@@ -516,18 +508,23 @@ class _PageRankFiles(Kernel):
                 new_rank[pos[hit]] += d * rvals[hit]
         mk("remote_align", t0)
         t0 = time.perf_counter()
-        m = _part_metrics(vids, new_rank, ranks, al["dang"], self.tol, vids_crc=al["crc"])
+        m = _part_metrics(new_rank, ranks, al["dang"], self.tol, al["crc"])
         mk("metrics", t0)
         t0 = time.perf_counter()
-        exch = None
-        if al["epos_src_remote"] is not None:
-            dst_codes, dst_uniq = shard["remote"][2], shard["remote"][3]
-            g = new_rank[al["epos_src_remote"]]
-            np.multiply(g, shard["remote"][4], out=g)
-            sums = np.bincount(dst_codes, weights=g, minlength=len(dst_uniq))
-            exch = pd.DataFrame({"dst": np.asarray(dst_uniq), "c": sums})
+        exch = self.remote_sums(al, new_rank)
         mk("rpartials", t0)
         return new_rank, m, exch
+
+    @staticmethod
+    def remote_sums(al: dict, ranks: np.ndarray) -> pd.DataFrame | None:
+        """Pre-reduced contributions ``(dst, c)`` along the REMOTE edges."""
+        if al["epos_src_remote"] is None:
+            return None
+        g = ranks[al["epos_src_remote"]]
+        np.multiply(g, al["p_remote"], out=g)
+        dst_uniq = al["dst_uniq_remote"]
+        sums = np.bincount(al["dst_codes_remote"], weights=g, minlength=len(dst_uniq))
+        return pd.DataFrame({"dst": np.asarray(dst_uniq), "c": sums})
 
     def merge(self, parts: list[pd.DataFrame], k: int) -> pd.DataFrame:
         out = pd.concat(parts, ignore_index=True)
