@@ -3,85 +3,43 @@
 The min-label kernel of the file-superstep engine (``graph/filesteps.py``):
 vertex labels live in raw int64 segments hash-partitioned by home, each
 superstep's tasks run the min-label kernel in NumPy against mmap-compiled
-per-edge alignments, and only O(#hubs) label entries cross partitions
-through a driver-merged dict.
+per-edge alignments, and only O(#hubs) label entries per partition cross
+partitions, as exchange segments.
 
 Undirected semantics WITHOUT a symmetrize/distinct shuffle: the directed
 shards are symmetrized at alignment-compile time (both directions of every
-partition-local edge enter the sorted gather), and the remote (turn→tool)
-edges are used bidirectionally —
+partition-local edge enter the sorted gather), and each remote edge a→b
+(a owned here, b by another partition) is used in both directions —
 
-* gather: per-shard segmented min of local labels per remote dst (hub),
-  reported to the driver (≤ #hubs rows per task);
-* scatter: the driver's merged per-hub labels come back through the params
-  file and each partition applies them to its local sources through the
-  same edge list sorted by source position;
-* ownership: the partition holding a hub vertex updates the hub's own
-  segment entry AND reports its current label every superstep, so the
-  driver's hub view can never go stale (a hub min arriving through a
-  partition-local edge still reaches every other partition next superstep).
+* a→b: a message ``(b, min label of the a's)`` per b goes to owner(b),
+  which takes the min into b's label;
+* b→a: owner(b) replies with its label of b to every partition that sent
+  it a message about b; the reply is the sender's *mirror label* of b, and
+  each a takes the min over its mirrors through the remote edge list
+  sorted by source position. Before the first reply arrives (superstep 1)
+  the mirror label of b is b itself — label₀ — so superstep 1 already
+  sees every remote edge in both directions.
+
+A message sent at superstep k carries labels_k and is applied at k+1, and
+so is a reply, so every superstep computes labels_k from labels_{k-1}
+alone (Jacobi): no label changing means the fixpoint, and a label needs
+two supersteps to cross a hub (u → owner(hub) → u′).
 
 Duplicate edges are harmless under min-semantics, so — unlike the DataFrame
-path (``cc.symmetrize``) — no ``distinct`` is needed anywhere.
-
-Fixpoint equality: min-label propagation converges to the unique per-vertex
-component minimum under ANY update order (the labels form a meet
-semilattice), so the final labels match the DataFrame path and the
-union-find oracle exactly even though the hub relay makes intermediate
-supersteps Gauss-Seidel-fresh rather than strictly Jacobi.
+path (``cc.symmetrize``) — no ``distinct`` is needed anywhere. Min-label
+propagation converges to the unique per-vertex component minimum, so the
+final labels match the DataFrame path and the union-find oracle exactly.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .filesteps import Kernel, Run, checksum, load_compiled, positions
+from .filesteps import Kernel, checksum, mirror_labels, positions, replies
 
 __all__ = ["CCFiles"]
-
-
-def _apply_min_kernel(labels: np.ndarray, al: dict, rvids: np.ndarray, rvals: np.ndarray):
-    """One Jacobi-with-hub-relay min step for one partition.
-
-    Returns ``(out, changed, hub_reports)`` where ``hub_reports`` is a list
-    of ``(hub_vid_array, label_array)`` pre-reduced contributions.
-    """
-    vids = al["vids"]
-    out = labels.copy()
-    if al["l_from"] is not None:
-        m = np.minimum.reduceat(labels[al["l_from"]], al["l_off"])
-        to = al["l_to"]
-        out[to] = np.minimum(out[to], m)
-    own_pos = own_hit = None
-    if len(rvids):
-        # hub labels scattered onto local sources through remote edges
-        if al["r_s_hubcode"] is not None:
-            hub_idx = np.searchsorted(rvids, al["r_dst_uniq"])
-            hub_idx = np.minimum(hub_idx, len(rvids) - 1)
-            ok = np.asarray(rvids[hub_idx] == al["r_dst_uniq"])
-            hub_label = np.where(ok, rvals[hub_idx], np.iinfo(np.int64).max)
-            m2 = np.minimum.reduceat(hub_label[al["r_s_hubcode"]], al["r_soff"])
-            to = al["r_sto"]
-            out[to] = np.minimum(out[to], m2)
-        # hub vertices owned by this partition take the merged min directly
-        own_pos = np.searchsorted(vids, rvids)
-        own_pos = np.minimum(own_pos, len(vids) - 1)
-        own_hit = np.asarray(vids[own_pos] == rvids)
-        if own_hit.any():
-            p = own_pos[own_hit]
-            out[p] = np.minimum(out[p], rvals[own_hit])
-    changed = int(np.count_nonzero(out != labels))
-    reports: list[tuple[np.ndarray, np.ndarray]] = []
-    if al["r_gfrom"] is not None:
-        mins = np.minimum.reduceat(out[al["r_gfrom"]], al["r_goff"])
-        reports.append((np.asarray(al["r_gdst_vid"]), mins))
-    if own_hit is not None and own_hit.any():
-        p = own_pos[own_hit]
-        reports.append((np.asarray(rvids)[own_hit], out[p]))
-    return out, changed, reports
 
 
 class CCFiles(Kernel):
@@ -91,20 +49,22 @@ class CCFiles(Kernel):
     Compiled per partition: the compile-time-SYMMETRIZED local edge list
     sorted by destination position (segment offsets for one
     ``minimum.reduceat`` per superstep), and the remote edge list in both
-    sort orders (by hub for the gather, by local source for the scatter).
+    sort orders (by dst for the messages, by local source for the mirror
+    labels). Exchange segment: messages ``(b, min label)`` then replies
+    ``(b, label)``.
     """
 
     name = "connected_components"
     tag = "ccalign"
-    version = "v1"
+    version = "v2"
     dtype = np.int64
     arrays = (
         "l_from", "l_off", "l_to",
-        "r_gfrom", "r_goff", "r_gdst_vid",
+        "r_gfrom", "r_goff", "r_gdst_vid", "r_gowner",
         "r_s_hubcode", "r_soff", "r_sto", "r_dst_uniq",
     )
     metrics_schema = "n_rows long, checksum long, changed long"
-    exchange_schema = "dst long, c long"
+    segment = ((np.int64, np.int64), (np.int64, np.int64))
     state_schema = "vid long, home long, label long"
     meta = {"weights": "unit"}
     # min-label ignores the shard p slot, so ANY kernel's warm shards are
@@ -116,25 +76,9 @@ class CCFiles(Kernel):
         # under min, so shards are written straight from the edge table
         return edges.select("src", "dst", F.lit(1.0).alias("p"), "src_home", "dst_home")
 
-    def params(self, carry: dict, k: int) -> dict:
-        if k == 0:
-            return {}
-        rv = sorted((int(h), int(v)) for h, v in carry["hub"].items())
-        return {"rvids": [h for h, _ in rv], "rvals": [v for _, v in rv]}
-
-    def combine(self, run: Run, rows: list[dict], exchange: list[dict], carry: dict,
-                k: int) -> tuple[dict, dict, bool]:
-        hub: dict[int, int] = {}
-        for r in exchange:
-            h, v = int(r["dst"]), int(r["c"])
-            if h not in hub or v < hub[h]:
-                hub[h] = v
-        if k == 0:
-            # hub's own init label is its vid — fold the identity into the merge
-            hub = {h: min(v, h) for h, v in hub.items()}
+    def combine(self, rows: list[dict], carry: dict, k: int) -> tuple[dict, dict, bool]:
         changed = sum(r["changed"] for r in rows)
-        metrics = {"changed": changed, "active_vertices": changed}
-        return metrics, {"hub": {str(h): v for h, v in hub.items()}}, changed == 0
+        return {"changed": changed, "active_vertices": changed}, {}, changed == 0
 
     def compile(self, st, vids, shard, pid: int) -> dict[str, np.ndarray]:
         out: dict[str, np.ndarray] = {}
@@ -162,6 +106,7 @@ class CCFiles(Kernel):
             out["r_gfrom"] = sp_e[og]
             out["r_goff"] = g_off.astype(np.int64)
             out["r_gdst_vid"] = dst_uniq[g_dstc]
+            out["r_gowner"] = shard["owner"][g_dstc]
             osrt = np.argsort(sp_e, kind="stable")
             s_upos, s_off = np.unique(sp_e[osrt], return_index=True)
             out["r_s_hubcode"] = dst_codes[osrt].astype(np.int32)
@@ -170,33 +115,42 @@ class CCFiles(Kernel):
             out["r_dst_uniq"] = dst_uniq
         return out
 
-    def decode(self, prm: dict) -> dict:
-        return {
-            "rvids": np.asarray(prm["rvids"], dtype=np.int64),
-            "rvals": np.asarray(prm["rvals"], dtype=np.int64),
-        }
+    def messages(self, al: dict, labels: np.ndarray):
+        """``(to_pid, (b, min label))``: per remote dst b, the min label of
+        its local sources, routed to owner(b)."""
+        if al["r_gfrom"] is None:
+            return None
+        mins = np.minimum.reduceat(labels[al["r_gfrom"]], al["r_goff"])
+        return al["r_gowner"], (al["r_gdst_vid"], mins)
 
-    def init(self, lay, pid, st, prm):
-        al = load_compiled(self, lay, pid)
+    def init(self, pid, al, prm):
         labels = np.array(al["vids"])  # own id
         row = {"n_rows": len(labels), "checksum": checksum(al["crc"], labels), "changed": 0}
-        exch = None
-        if al["r_gfrom"] is not None:
-            mins = np.minimum.reduceat(labels[al["r_gfrom"]], al["r_goff"])
-            exch = pd.DataFrame({"dst": np.asarray(al["r_gdst_vid"]), "c": mins})
-        return labels, row, exch
+        return labels, row, [self.messages(al, labels), None]
 
-    def update(self, lay, pid, al, labels, prm, mk):
-        out, changed, reports = _apply_min_kernel(labels, al, prm["rvids"], prm["rvals"])
+    def update(self, pid, al, labels, prm, incoming, mk):
+        vids = al["vids"]
+        out = labels.copy()
+        if al["l_from"] is not None:
+            m = np.minimum.reduceat(labels[al["l_from"]], al["l_off"])
+            to = al["l_to"]
+            out[to] = np.minimum(out[to], m)
+        if al["r_s_hubcode"] is not None:
+            # b→a: every remote edge's mirror label of b onto its local source
+            mirror = mirror_labels(al, pid, incoming)
+            m2 = np.minimum.reduceat(mirror[al["r_s_hubcode"]], al["r_soff"])
+            to = al["r_sto"]
+            out[to] = np.minimum(out[to], m2)
+        # a→b: the senders' per-b mins onto the owned b's
+        asked = []
+        for (b, lab), _ in incoming:
+            asked.append(b)
+            if len(b):
+                pos = positions(vids, b, pid, "cc exchange")
+                out[pos] = np.minimum(out[pos], lab)
+        changed = int(np.count_nonzero(out != labels))
         row = {"n_rows": len(out), "checksum": checksum(al["crc"], out), "changed": changed}
-        exch = None
-        if reports:
-            exch = pd.concat([pd.DataFrame({"dst": hv, "c": hl}) for hv, hl in reports],
-                             ignore_index=True)
-        return out, row, exch
-
-    def merge(self, parts: list[pd.DataFrame], k: int) -> pd.DataFrame:
-        return pd.concat(parts, ignore_index=True).groupby("dst", as_index=False)["c"].min()
+        return out, row, [self.messages(al, out), replies(vids, pid, out, asked)]
 
     @staticmethod
     def state_frame(st, state: np.ndarray) -> dict:

@@ -7,14 +7,23 @@ graphs without them. The vertex state lives in raw fixed-width segments
 (``superstep=NNNNNN/state/rank-PPPPP.f64``) hash-partitioned by home, next to
 sorted static vertex files (``_static_p{P}``) and locality-split edge shards
 (``_edge_shards_p{P}``). Every superstep is ONE analyzed DataFrame job over a
-P-row ``pids`` frame: each task reads its partitions' previous segments,
-runs the kernel in NumPy against mmap-compiled per-partition arrays, writes
-the next segments and returns one metrics frame plus one pre-merged
-exchange frame (the few hub entries that cross partitions). The driver
-merges the exchange, writes the manifest (the commit point) and passes the
-next superstep's parameters through a small params file, so the update
-DataFrame is analyzed once per call and only re-collected. The superstep
-output IS the checkpoint; a killed run resumes from its last manifest.
+P-row ``pids`` frame: each task reads its partitions' previous segments and
+the messages addressed to them, runs the kernel in NumPy against
+mmap-compiled per-partition arrays, writes the next segments plus one
+exchange segment per destination partition, and returns one metrics row
+per partition. The driver sums the metrics, writes the manifest (the commit
+point) and passes the next superstep's scalars through a small params file,
+so the update DataFrame is analyzed once per call and only re-collected.
+The superstep output IS the checkpoint; a killed run resumes from its last
+manifest.
+
+Everything that crosses partitions travels through one file exchange:
+partition i's superstep-k messages for partition j are the segment
+``superstep=k/exchange/x-i-j.bin``, and task j reads ``(0..P-1, j)`` at the
+start of superstep k+1. The owner partition of a vertex applies the
+messages about it and decides its state, so no kernel merges anything on
+the driver: the manifest ``carry`` and the params file hold only scalars,
+whatever the graph's size.
 
 (Why files instead of streaming the state through mapInPandas: Spark 4.1's
 JVM→Python Arrow writer walks the vector tree per row to enforce
@@ -23,13 +32,14 @@ move at memory speed.)
 
 A kernel (:class:`Kernel`) supplies three things: a per-partition
 ``compile`` of superstep-invariant arrays, a per-partition ``init`` /
-``update`` of its state vector, and a driver-side ``combine`` of the
-metrics and exchange rows (which may run extra jobs). The engine owns the
-rest: the edge-shard and static-file formats, the warm-dir gate and cold
-prep, task packing, resume guards, the params file, coverage checks,
-commits, retention and the one compile cache (:func:`load_compiled`): a
-kernel's compile reads its partition's static file and Parquet edge shard
-once per run dir, and supersteps read only the compiled arrays.
+``update`` of its state vector that also returns its outgoing messages, and
+a driver-side ``combine`` of the metrics rows. The engine owns the rest:
+the edge-shard and static-file formats, the warm-dir gate and cold prep,
+task packing, resume guards, the params file, the exchange, coverage
+checks, commits, retention and the one compile cache
+(:func:`load_compiled`): a kernel's compile reads its partition's static
+file and Parquet edge shard once per prep, and supersteps read only the
+compiled arrays.
 """
 
 from __future__ import annotations
@@ -40,9 +50,10 @@ import os
 import shutil
 import tempfile
 import time
+import uuid
 import zlib
 from collections.abc import Iterator
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Any
 
 import numpy as np
@@ -84,6 +95,9 @@ class Layout:
 
     def state_dir(self, k: int) -> str:
         return os.path.join(self.run_dir, f"superstep={k:06d}", "state")
+
+    def exchange_dir(self, k: int) -> str:
+        return os.path.join(self.run_dir, f"superstep={k:06d}", "exchange")
 
 
 def _part_path(state_dir: str, pid: int) -> str:
@@ -190,11 +204,11 @@ def write_state_part(state_dir: str, pid: int, table) -> None:
 # contribution can be gathered AND applied entirely inside one Python worker,
 # never crossing an exchange. Only the remote edges (turn → tool hubs, a few
 # distinct dsts after per-shard pre-reduction) cross partitions. This is the
-# PowerGraph-style placement insight: the engine relays ~|tools| hub entries
-# per superstep through the driver instead of shuffling and hash-aggregating
-# an edge-sized (75M-row at bench scale) partial table. Graphs with no
-# locality hint (PageRank's csr mode) shard the same way with home = vid: an
-# edge is then local when both endpoints hash to one partition.
+# PowerGraph-style placement insight: the engine exchanges ~|tools| hub
+# entries per superstep instead of shuffling and hash-aggregating an
+# edge-sized (75M-row at bench scale) partial table. Graphs with no locality
+# hint (PageRank's csr mode) shard the same way with home = vid: an edge is
+# then local when both endpoints hash to one partition.
 
 
 def shard_pid(col: F.Column, num_partitions: int) -> F.Column:
@@ -207,16 +221,14 @@ def write_edge_shards_local(enorm: DataFrame, shard_dir: str, num_partitions: in
     """One-time shard write.
 
     ``enorm`` must carry ``(src, dst, p, src_home, dst_home)``; shards are
-    keyed by ``pid = pmod(hash(src_home), P)`` with an ``is_local`` flag
-    marking edges whose dst lives in the same partition.
+    keyed by ``pid = pmod(hash(src_home), P)`` and every edge records the
+    partition owning its dst, ``dst_pid = pmod(hash(dst_home), P)`` (the
+    edge is local when ``dst_pid == pid``).
     """
     (
         enorm.withColumn("pid", shard_pid(F.col("src_home"), num_partitions))
-        .withColumn(
-            "is_local",
-            shard_pid(F.col("dst_home"), num_partitions) == F.col("pid"),
-        )
-        .select("src", "dst", "p", "pid", "is_local")
+        .withColumn("dst_pid", shard_pid(F.col("dst_home"), num_partitions))
+        .select("src", "dst", "p", "pid", "dst_pid")
         .repartition("pid")
         .write.mode("overwrite")
         .partitionBy("pid")
@@ -224,33 +236,21 @@ def write_edge_shards_local(enorm: DataFrame, shard_dir: str, num_partitions: in
     )
 
 
-def purge_shard_dir(shard_dir: str) -> None:
-    """Delete a shard (or static) dir so it can be rewritten. The three
-    kernels share one ``_edge_shards_p{P}`` layout but put different values
-    in the ``p`` slot — PageRank normalized probabilities, CC constant 1.0,
-    LPA raw summed weights — so cold prep purges a dir whose ``_META.json``
-    does not match the kernel before it re-shards. Also drops the node-local
-    compile cache when the dir is an object-store URI; on a multi-node
-    cluster, rewriting a URI dir in place would still leave OTHER nodes'
-    caches stale — share run dirs across kernels only when the weight
-    semantics match, or use a fresh run_id."""
-    fsio.rmtree(shard_dir)
-    if fsio.is_uri(shard_dir):
-        shutil.rmtree(node_cache_root(shard_dir), ignore_errors=True)
-
-
 def _factorize_shard(tbl):
-    """Arrow table → factorized CSR-ish arrays (src/dst codes + uniques)."""
+    """Arrow table → factorized CSR-ish arrays (src/dst codes + uniques;
+    the dst uniques sorted, so a message about a dst finds its code with
+    one searchsorted)."""
     src_codes, src_uniq = pd.factorize(tbl.column("src").to_numpy(), sort=False)
-    dst_codes, dst_uniq = pd.factorize(tbl.column("dst").to_numpy(), sort=False)
+    dst_codes, dst_uniq = pd.factorize(tbl.column("dst").to_numpy(), sort=True)
     p = tbl.column("p").to_numpy().astype(np.float64)
     return (src_codes, src_uniq, dst_codes, dst_uniq, p)
 
 
 def read_shard(shard_dir: str, pid: int) -> dict | None:
     """The factorized ``local``/``remote`` halves of edge shard ``pid``, each
-    ``(src_codes, src_uniq, dst_codes, dst_uniq, p)`` or None when empty
-    (None: no shard). Read straight from Parquet: only a compile miss of
+    ``(src_codes, src_uniq, dst_codes, dst_uniq, p)`` or None when empty,
+    and ``owner``: the partition owning each remote ``dst_uniq`` (None: no
+    shard). Read straight from Parquet: only a compile miss of
     :func:`load_compiled` calls it."""
     import pyarrow.parquet as pq
 
@@ -258,12 +258,18 @@ def read_shard(shard_dir: str, pid: int) -> dict | None:
     if not fsio.exists(path):
         return None
     fs, base = fsio.fs_and_path(path)
-    tbl = pq.read_table(base, columns=["src", "dst", "p", "is_local"], filesystem=fs)
-    mask = tbl.column("is_local").to_numpy()
-    return {
+    tbl = pq.read_table(base, columns=["src", "dst", "p", "dst_pid"], filesystem=fs)
+    mask = tbl.column("dst_pid").to_numpy() == pid
+    out = {
         half: _factorize_shard(sub) if sub.num_rows else None
         for half, sub in (("local", tbl.filter(mask)), ("remote", tbl.filter(~mask)))
     }
+    out["owner"] = None
+    if out["remote"] is not None:
+        dst_codes, dst_uniq = out["remote"][2], out["remote"][3]
+        out["owner"] = np.empty(len(dst_uniq), dtype=np.int32)
+        out["owner"][dst_codes] = tbl.column("dst_pid").to_numpy()[~mask]
+    return out
 
 
 def checksum(vids_crc: int, state: np.ndarray) -> int:
@@ -284,6 +290,112 @@ def positions(vids: np.ndarray, values, pid: int, what: str) -> np.ndarray:
 
 
 # =============================================================================
+# The exchange: one segment per (writer i, reader j) per superstep
+# =============================================================================
+#
+# Segment (i, j) of superstep k holds partition i's superstep-k messages for
+# partition j: an int64 header [k, #arrays, len_0, …] then the raw 8-byte
+# arrays, one message group after another in the kernel's ``segment``
+# layout. Every partition publishes all P of its segments every superstep
+# (empty ones included, and a partition without vertices too), so a
+# segment's existence proves it is complete and its stamp that it is
+# fresh. Local roots write a tmp file and rename it; URI roots use one PUT.
+# On tmpfs the exchange runs at memcpy speed; nothing crosses Arrow, the
+# JVM, a shuffle or the driver.
+
+
+def _segment_path(xdir: str, i: int, j: int) -> str:
+    return os.path.join(xdir, f"x-{i:05d}-{j:05d}.bin")
+
+
+def write_segments(xdir: str, pid: int, k: int, P: int, layout: tuple, outgoing) -> None:
+    """Publish partition ``pid``'s P superstep-``k`` segments.
+
+    ``outgoing`` holds one ``(to_pid, arrays)`` per message group of
+    ``layout`` (None: no messages in that group): row r of the group goes
+    to partition ``to_pid[r]``, in its original order."""
+    per_j: list[list[np.ndarray]] = [[] for _ in range(P)]
+    for dtypes, group in zip(layout, outgoing or [None] * len(layout)):
+        if group is None:
+            for arrs in per_j:
+                arrs.extend(np.empty(0, dtype=dt) for dt in dtypes)
+            continue
+        to_pid, arrays = group
+        order = np.argsort(to_pid, kind="stable")
+        bounds = np.searchsorted(np.asarray(to_pid)[order], np.arange(P + 1))
+        arrays = [np.asarray(a, dtype=dt)[order] for a, dt in zip(arrays, dtypes)]
+        for j, arrs in enumerate(per_j):
+            arrs.extend(a[bounds[j]:bounds[j + 1]] for a in arrays)
+    uri = fsio.is_uri(xdir)
+    if not uri:
+        os.makedirs(xdir, exist_ok=True)
+    for j, arrs in enumerate(per_j):
+        head = np.asarray([k, len(arrs), *(len(a) for a in arrs)], dtype=np.int64)
+        path = _segment_path(xdir, pid, j)
+        if uri:
+            fsio.write_bytes(path, b"".join([head.tobytes(), *(a.tobytes() for a in arrs)]))
+            continue
+        tmp = path + f".tmp-{os.getpid()}"
+        with open(tmp, "wb") as f:
+            head.tofile(f)
+            for a in arrs:
+                np.ascontiguousarray(a).tofile(f)
+        os.replace(tmp, path)
+
+
+def read_segment(xdir: str, i: int, j: int, k: int, layout: tuple) -> list[tuple]:
+    """Segment ``(i, j)`` of superstep ``k``: one tuple of arrays per
+    message group of ``layout``. A missing segment, one stamped with another
+    superstep or one of another layout raises."""
+    path = _segment_path(xdir, i, j)
+    data = fsio.read_bytes(path)
+    if data is None:
+        raise RuntimeError(f"exchange segment {path} is missing (superstep {k})")
+    dtypes = [dt for group in layout for dt in group]
+    head = np.frombuffer(data, dtype=np.int64, count=2)
+    if int(head[0]) != k or int(head[1]) != len(dtypes):
+        raise RuntimeError(
+            f"exchange segment {path} is stale: superstep {int(head[0])} with "
+            f"{int(head[1])} arrays, expected superstep {k} with {len(dtypes)}"
+        )
+    lens = np.frombuffer(data, dtype=np.int64, count=len(dtypes), offset=16)
+    off = 16 + 8 * len(dtypes)
+    arrays = []
+    for dt, n in zip(dtypes, lens.tolist()):
+        arrays.append(np.frombuffer(data, dtype=dt, count=n, offset=off))
+        off += 8 * n
+    out, a = [], 0
+    for group in layout:
+        out.append(tuple(arrays[a:a + len(group)]))
+        a += len(group)
+    return out
+
+
+def mirror_labels(al: dict, pid: int, incoming: list) -> np.ndarray:
+    """Mirror labels: the labels of this partition's remote dsts
+    (``al["r_dst_uniq"]``, sorted) as their owners last replied them (the
+    last message group of each incoming segment); a dst not replied yet
+    (superstep 1) keeps its own id, its label₀."""
+    mirror = np.array(al["r_dst_uniq"])
+    for groups in incoming:
+        b, lab = groups[-1]
+        if len(b):
+            mirror[positions(al["r_dst_uniq"], b, pid, "mirror reply")] = lab
+    return mirror
+
+
+def replies(vids: np.ndarray, pid: int, labels: np.ndarray, asked: list) -> tuple | None:
+    """``(to_pid, (b, label))``: the current label of each vertex b to every
+    sender ``i`` that asked about it (``asked[i]``, ids of owned vertices)."""
+    parts = [(i, np.unique(b)) for i, b in enumerate(asked) if len(b)]
+    if not parts:
+        return None
+    b = np.concatenate([u for _, u in parts])
+    to = np.concatenate([np.full(len(u), i, dtype=np.int32) for i, u in parts])
+    return to, (b, labels[positions(vids, b, pid, "reply")])
+
+
+# =============================================================================
 # Compiled per-partition arrays (mmap, machine-shared)
 # =============================================================================
 #
@@ -294,7 +406,7 @@ def positions(vids: np.ndarray, values, pid: int, what: str) -> np.ndarray:
 # and rebuild a vertex-sized alignment in freshly-faulted pages (measured:
 # the rebuild anti-scales with cores — fresh-page zeroing is a machine-wide
 # ~2 GB/s resource on the measured VM). Instead the arrays are COMPILED ONCE per
-# (run, kernel, pid) into mmap-able ``.npy`` files next to the static state
+# (prep, kernel, pid) into mmap-able ``.npy`` files next to the static state
 # (under the node-local ``TWSPARK_SHARD_CACHE`` root for URI stores): any
 # worker's "miss" is then a mmap open (microseconds) against pages every
 # worker on the machine shares. This is the only compile cache: a compile
@@ -313,31 +425,16 @@ def node_cache_root(uri: str) -> str:
     )
 
 
-def compiled_generation(cdir: str):
-    """Identity token of one compiled-cache publish: the ``_OK`` marker's
-    (inode, mtime). ``os.replace`` of a fresh tmp dir gives every publish a
-    new inode, so worker-process caches keyed on the compile dir can detect
-    a re-publish (a cold re-prep's purge+recompile under the same path)
-    instead of serving a stale mmap. ``None`` = not compiled."""
-    try:
-        st = os.stat(os.path.join(cdir, "_OK"))
-        return (st.st_ino, st.st_mtime_ns)
-    except OSError:
-        return None
-
-
-def publish(cdir: str, arrays: dict[str, np.ndarray]) -> None:
+def publish(cdir: str, stem: str, arrays: dict[str, np.ndarray]) -> None:
     """Atomic compile publish: ``.npy`` files and an ``_OK`` marker into a
     tmp dir, then one rename (concurrent compilers race benignly).
 
-    Superseded versions of the same dir (``<stem>-v*``) are dropped first: a
-    version bump would otherwise leave the old arrays resident in the store
-    forever (6.7 GB of orphaned v1 dirs once contributed to a tmpfs
-    OOM)."""
+    Superseded dirs of the same ``stem`` (another version or prep) are
+    dropped first: they would otherwise stay resident in the store forever
+    (6.7 GB of orphaned dirs once contributed to a tmpfs OOM)."""
     parent = os.path.dirname(cdir)
     os.makedirs(parent, exist_ok=True)
-    stem = os.path.basename(cdir).rsplit("-", 1)[0]
-    for old in glob.glob(os.path.join(parent, f"{stem}-v*")):
+    for old in glob.glob(os.path.join(parent, f"{stem}-*")):
         if old != cdir:
             shutil.rmtree(old, ignore_errors=True)
     tmp = tempfile.mkdtemp(dir=parent, prefix="_compile_")
@@ -350,26 +447,27 @@ def publish(cdir: str, arrays: dict[str, np.ndarray]) -> None:
         shutil.rmtree(tmp, ignore_errors=True)
 
 
-# (kernel tag, static_dir, pid) -> (generation, arrays). One static_dir per
+# (kernel tag, static_dir, pid) -> (compile dir, arrays). One static_dir per
 # kernel kind: a worker alternates kernels over different run dirs (e.g.
 # PageRank on one, LPA on another), and evicting on ANY static_dir change
 # would re-derive LPA's load-time tables on every call.
 _COMPILED: dict = {}
 
 
-def load_compiled(kernel: Kernel, lay: Layout, pid: int) -> dict | None:
+def load_compiled(kernel: Kernel, lay: Layout, pid: int, prep: str) -> dict | None:
     """mmap-loaded compiled arrays of one partition (None: no static file).
 
-    Entries carry the compile dir's publish generation and re-validate it on
-    every hit, so a long-lived worker never serves a stale mmap after a
-    purge+recompile under the same static_dir."""
+    The compile dir is keyed by the run dir's prep id (``_META.json``), so
+    a cold re-prep under the same static_dir compiles afresh, and neither a
+    worker's in-process entry nor a node-local dir left by an earlier prep
+    can serve stale arrays — whatever cache root the driver sees."""
     static_dir = lay.static_dir
-    name = f"{kernel.tag}-{pid:05d}-{kernel.version}"
+    stem = f"{kernel.tag}-{pid:05d}"
     root = node_cache_root(static_dir) if fsio.is_uri(static_dir) else static_dir
-    cdir = os.path.join(root, name)
+    cdir = os.path.join(root, f"{stem}-{kernel.version}-{prep}")
     key = (kernel.tag, static_dir, pid)
     cached = _COMPILED.get(key)
-    if cached is not None and cached[0] == compiled_generation(cdir):
+    if cached is not None and cached[0] == cdir:
         return cached[1]
     for stale in [k for k in _COMPILED if k[0] == kernel.tag and k[1] != static_dir]:
         del _COMPILED[stale]
@@ -380,7 +478,7 @@ def load_compiled(kernel: Kernel, lay: Layout, pid: int) -> dict | None:
         vids = st.column("vid").to_numpy()
         arrays = kernel.compile(st, vids, read_shard(lay.shard_dir, pid), pid)
         crc = np.array([zlib.crc32(np.ascontiguousarray(vids).tobytes())], dtype=np.int64)
-        publish(cdir, {"vids": vids, "crc": crc, **arrays})
+        publish(cdir, stem, {"vids": vids, "crc": crc, **arrays})
     ent = {
         "vids": np.load(os.path.join(cdir, "vids.npy"), mmap_mode="r"),
         "crc": int(np.load(os.path.join(cdir, "crc.npy"))[0]),
@@ -389,7 +487,7 @@ def load_compiled(kernel: Kernel, lay: Layout, pid: int) -> dict | None:
         path = os.path.join(cdir, f"{arr}.npy")
         ent[arr] = np.load(path, mmap_mode="r") if os.path.exists(path) else None
     kernel.loaded(ent)
-    _COMPILED[key] = (compiled_generation(cdir), ent)
+    _COMPILED[key] = (cdir, ent)
     return ent
 
 
@@ -398,15 +496,18 @@ def load_compiled(kernel: Kernel, lay: Layout, pid: int) -> dict | None:
 # =============================================================================
 
 
-def _cols(schema: str) -> list[str]:
-    return [f.split()[0] for f in schema.split(",")]
-
-
 class Kernel:
     """What a local-mode kernel supplies to :func:`run_local`.
 
     Instances are pickled into the superstep tasks, so they hold only
     per-call constants; driver-only state lives in :class:`Run`.
+
+    Cross-partition data moves only as messages: ``init``/``update`` return
+    ``outgoing``, one ``(to_pid, arrays)`` (or None) per message group of
+    ``segment``, and ``update`` receives ``incoming``, the groups of
+    segments ``(i, pid)`` of the previous superstep for i = 0..P-1 in
+    ascending i. The owner of a vertex applies the messages about it, so
+    ``combine`` only sums metrics and returns scalars.
     """
 
     name: str  # the "kernel" metric; prefixes errors
@@ -415,11 +516,10 @@ class Kernel:
     dtype: Any  # state segment dtype
     arrays: tuple[str, ...] = ()  # compiled arrays loaded besides vids/crc
     metrics_schema: str  # per-partition metrics row (must include n_rows, checksum)
-    exchange_schema: str  # per-task exchange rows (pid NULL)
+    segment: tuple  # dtypes of each message group of an exchange segment
     state_schema: str  # columns of the returned state DataFrame
     meta: dict  # shard weight semantics recorded in _META.json
     any_weights = False  # warm dirs of any weight semantics are reusable
-    transient: str | None = None  # per-run exchange dir dropped at the end on URI roots
 
     # -- driver side --------------------------------------------------------
     def shard_edges(self, edges: DataFrame) -> DataFrame:
@@ -434,12 +534,12 @@ class Kernel:
         """Validate inputs, and a committed ``carry`` before a resume."""
 
     def params(self, carry: dict, k: int) -> dict:
-        """Superstep-``k`` parameters for the params file (from ``carry``)."""
+        """Superstep-``k`` scalars for the params file (from ``carry``)."""
         return {}
 
-    def combine(self, run: Run, rows: list[dict], exchange: list[dict], carry: dict,
-                k: int) -> tuple[dict, dict, bool]:
-        """Merge one superstep: returns ``(metrics, carry, converged)``."""
+    def combine(self, rows: list[dict], carry: dict, k: int) -> tuple[dict, dict, bool]:
+        """Sum one superstep's metrics rows: returns ``(metrics, carry,
+        converged)``, ``carry`` holding scalars only."""
         raise NotImplementedError
 
     # -- task side ----------------------------------------------------------
@@ -455,20 +555,14 @@ class Kernel:
         """Parse the params file once per task (supersteps ≥ 1)."""
         return prm
 
-    def init(self, lay: Layout, pid: int, st, prm: dict):
-        """Superstep 0 of one partition: ``(state, metrics_row, exchange)``."""
+    def init(self, pid: int, al: dict, prm: dict):
+        """Superstep 0 of one partition (``al`` its compiled arrays):
+        ``(state, metrics_row, outgoing)``."""
         raise NotImplementedError
 
-    def update(self, lay: Layout, pid: int, al: dict, prev: np.ndarray, prm: dict, mk):
-        """Superstep ≥ 1 of one partition: ``(state, metrics_row, exchange)``."""
+    def update(self, pid: int, al: dict, prev: np.ndarray, prm: dict, incoming: list, mk):
+        """Superstep ≥ 1 of one partition: ``(state, metrics_row, outgoing)``."""
         raise NotImplementedError
-
-    def skip(self, lay: Layout, pid: int, prm: dict) -> None:
-        """A partition without vertices in superstep ≥ 1."""
-
-    def merge(self, parts: list[pd.DataFrame], k: int) -> pd.DataFrame:
-        """Pre-merge one task's exchange frames."""
-        return pd.concat(parts, ignore_index=True)
 
     @staticmethod
     def state_frame(st, state: np.ndarray) -> dict:
@@ -484,7 +578,7 @@ class Kernel:
 
 
 def _make_task(kernel: Kernel, lay: Layout):
-    m_cols, x_cols = _cols(kernel.metrics_schema), _cols(kernel.exchange_schema)
+    P, layout = lay.P, kernel.segment
 
     def task(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         prm = fsio.read_json(lay.params_path)
@@ -497,40 +591,38 @@ def _make_task(kernel: Kernel, lay: Layout):
             if instr:
                 marks.append((name, time.perf_counter() - t0))
 
-        # metrics AND exchange rows accumulate across ALL pids of this task
-        # and flush as ONE frame each: every yielded frame is a separate
-        # Arrow batch over the worker socket, and 64 one-row batches
-        # measured ~100 ms/superstep of pure serialization overhead
+        # metrics rows accumulate across ALL pids of this task and flush as
+        # ONE frame: every yielded frame is a separate Arrow batch over the
+        # worker socket, and 64 one-row batches measured ~100 ms/superstep
+        # of pure serialization overhead
         macc: list[dict] = []
-        xacc: list[pd.DataFrame] = []
         for pdf in batches:
             for pid in pdf["pid"].to_numpy():
                 pid = int(pid)
                 t0 = time.perf_counter()
+                al = load_compiled(kernel, lay, pid, prm["prep"])
+                prev = read_rank_part(prm["prev_dir"], pid, dtype=kernel.dtype) if k else None
+                mk("read", t0)
+                if al is None or (k and prev is None):
+                    # no vertices (or a lost segment, which the coverage
+                    # check reports): publish empty segments all the same
+                    write_segments(lay.exchange_dir(k), pid, k, P, layout, None)
+                    continue
                 if k == 0:
-                    st = read_state_part(lay.static_dir, pid)
-                    mk("read", t0)
-                    if st is None:
-                        continue
-                    out, row, exch = kernel.init(lay, pid, st, ctx)
+                    out, row, outgoing = kernel.init(pid, al, ctx)
                 else:
-                    al = load_compiled(kernel, lay, pid)
-                    prev = read_rank_part(prm["prev_dir"], pid, dtype=kernel.dtype)
-                    mk("read", t0)
-                    if al is None or prev is None:
-                        kernel.skip(lay, pid, ctx)
-                        continue
-                    out, row, exch = kernel.update(lay, pid, al, prev, ctx, mk)
+                    t0 = time.perf_counter()
+                    incoming = [read_segment(lay.exchange_dir(k - 1), i, pid, k - 1, layout)
+                                for i in range(P)]
+                    mk("exchange_read", t0)
+                    out, row, outgoing = kernel.update(pid, al, prev, ctx, incoming, mk)
                 t0 = time.perf_counter()
                 write_rank_part(prm["next_dir"], pid, out, prm["recycle_dir"])
+                write_segments(lay.exchange_dir(k), pid, k, P, layout, outgoing)
                 mk("write", t0)
                 macc.append({"pid": pid, **row})
-                if exch is not None:
-                    xacc.append(exch)
         if macc:
-            yield pd.DataFrame(macc).assign(**{c: None for c in x_cols})
-        if xacc:
-            yield kernel.merge(xacc, k).assign(pid=None, **{c: None for c in m_cols})
+            yield pd.DataFrame(macc)
         if instr and marks:
             with open(f"{instr}/{os.getpid()}.log", "a") as f:
                 for name, dt in marks:
@@ -550,45 +642,42 @@ class Run:
 
     lay: Layout
     pids: DataFrame  # one row per partition id, packed into min(P, slots) tasks
-    jobs: dict = field(default_factory=dict)
-
-    def job(self, name: str, fn, schema: str) -> DataFrame:
-        """A per-partition job over ``pids``, analyzed once per call."""
-        if name not in self.jobs:
-            self.jobs[name] = self.pids.mapInPandas(fn, schema=schema)
-        return self.jobs[name]
 
 
-def _prepare(edges: DataFrame, kernel: Kernel, lay: Layout) -> tuple[int, int]:
-    """``(n, num_edges)`` of the run dir, from its ``_META.json`` when warm.
+# shard layout marker of _META.json: edges record their dst's owner pid
+_SHARDS = "dst_pid"
+
+
+def _prepare(edges: DataFrame, kernel: Kernel, lay: Layout) -> dict:
+    """The run dir's ``_META.json`` (``n``, ``num_edges``, ``prep``, …),
+    prepared first when the dir is cold.
 
     Shards, static vertex files and graph meta are deterministic
     re-derivations of the edge table — a warm run dir (resume, another
     parallelism level, a fresh run under the same run_id) skips the whole
     shard/vertex pipeline. A cold prep writes only the shards, the sorted
-    static files and the meta; superstep 0 then starts from them like any
-    warm run.
+    static files and the meta, with a fresh prep id that keys the compile
+    cache; superstep 0 then starts from them like any warm run.
     """
     done = os.path.join(lay.shard_dir, "_DONE")
     meta_path = os.path.join(lay.static_dir, "_META.json")
     meta = fsio.read_json(meta_path) if fsio.exists(done) else None
-    # meta["sorted"] gates warm reuse: static vid files from before the
-    # sorted layout would break the searchsorted hub application.
+    # meta["shards"] gates the shard layout (and meta["sorted"] the static
+    # vid files' order); a dir of an older layout is re-prepped.
     # meta["weights"] gates the shard p slot's semantics: PageRank needs
     # normalized probabilities ("norm"), LPA raw summed weights ("raw"),
     # CC constant 1.0 ("unit") but accepts any — silently gathering or
-    # voting with the wrong ones would corrupt every result. A dir without
-    # the marker is of unknown semantics and is re-prepped.
+    # voting with the wrong ones would corrupt every result.
     # meta["homes"] ("vid" for hash homes) gates the partitioning: a dir
     # sharded on the other kind of home must not be reused either.
-    if (meta is not None and meta.get("sorted") and "weights" in meta
+    if (meta is not None and meta.get("sorted") and meta.get("shards") == _SHARDS
             and meta.get("homes") == kernel.meta.get("homes")
             and (kernel.any_weights or meta["weights"] == kernel.meta["weights"])):
-        return int(meta["n"]), int(meta["num_edges"])
+        return meta
     # shards of unknown provenance or other weight semantics: purge rather
     # than trust — a stale _DONE must never gate out the rewrite
-    purge_shard_dir(lay.shard_dir)
-    purge_shard_dir(lay.static_dir)
+    fsio.rmtree(lay.shard_dir)
+    fsio.rmtree(lay.static_dir)
     e = kernel.shard_edges(edges)
     write_edge_shards_local(e, lay.shard_dir, lay.P)
     fsio.touch(done)
@@ -602,10 +691,10 @@ def _prepare(edges: DataFrame, kernel: Kernel, lay: Layout) -> tuple[int, int]:
     n = _write_static(kernel.vertices(v, e), lay)
     if n == 0:
         raise ValueError(f"{kernel.name}: empty edge set")
-    fsio.write_json_atomic(
-        meta_path, {"n": n, "num_edges": num_edges, "P": lay.P, "sorted": True, **kernel.meta}
-    )
-    return n, num_edges
+    meta = {"n": n, "num_edges": num_edges, "P": lay.P, "sorted": True, "shards": _SHARDS,
+            "prep": uuid.uuid4().hex[:12], **kernel.meta}
+    fsio.write_json_atomic(meta_path, meta)
+    return meta
 
 
 def _write_static(vertices: DataFrame, lay: Layout) -> int:
@@ -728,7 +817,8 @@ def _run_local(edges, kernel, *, max_iter, store, run_id, resume) -> GraphRun:
     spark = edges.sparkSession
     P = int(spark.conf.get("spark.sql.shuffle.partitions"))
     lay = Layout(os.path.join(store.root, run_id), P)
-    n, num_edges = _prepare(edges, kernel, lay)
+    meta = _prepare(edges, kernel, lay)
+    n, num_edges = int(meta["n"]), int(meta["num_edges"])
     run = Run(lay, _pids(spark, P))
 
     history: list[dict[str, Any]] = []
@@ -761,9 +851,8 @@ def _run_local(edges, kernel, *, max_iter, store, run_id, resume) -> GraphRun:
         if not resume:
             store.clear_run(run_id)
 
-    update_df = run.job(
-        "update", _make_task(kernel, lay),
-        f"pid int, {kernel.metrics_schema}, {kernel.exchange_schema}",
+    update_df = run.pids.mapInPandas(
+        _make_task(kernel, lay), schema=f"pid int, {kernel.metrics_schema}"
     )
     instr = os.environ.get("TWSPARK_INSTR")
     converged = False
@@ -773,6 +862,7 @@ def _run_local(edges, kernel, *, max_iter, store, run_id, resume) -> GraphRun:
         fsio.write_json_atomic(lay.params_path, {
             "superstep": k,
             "n": n,
+            "prep": meta["prep"],
             "prev_dir": lay.state_dir(k - 1) if k else None,
             "next_dir": lay.state_dir(k),
             # retention window 2: writing superstep k recycles k-2's
@@ -781,12 +871,8 @@ def _run_local(edges, kernel, *, max_iter, store, run_id, resume) -> GraphRun:
             **kernel.params(carry, k),
         })
         t_params = time.monotonic()
-        rows = update_df.collect()
+        metrics_rows = [r.asDict() for r in update_df.collect()]
         t_collect = time.monotonic()
-        metrics_rows, exchange = [], []
-        for r in rows:
-            d = r.asDict()
-            (metrics_rows if d["pid"] is not None else exchange).append(d)
         # an empty metrics set is NEVER convergence — it means every task
         # skipped (missing state/static files, e.g. a foreign run dir), and
         # treating it as no change would silently commit an empty
@@ -802,7 +888,7 @@ def _run_local(edges, kernel, *, max_iter, store, run_id, resume) -> GraphRun:
                 f"{kernel.name} superstep {k}: tasks covered {covered} of {n} "
                 "vertices — state/shard partitioning mismatch"
             )
-        kmetrics, kcarry, done = kernel.combine(run, metrics_rows, exchange, carry, k)
+        kmetrics, kcarry, done = kernel.combine(metrics_rows, carry, k)
         converged = k > 0 and done
         metrics = {
             "kernel": kernel.name,
@@ -824,18 +910,18 @@ def _run_local(edges, kernel, *, max_iter, store, run_id, resume) -> GraphRun:
                     f"post {time.monotonic() - t_collect:.4f}\n"
                 )
         store.finalize(run_id, k, lineage, metrics, carry)
-        if k >= 2 and fsio.is_uri(store.root):
-            # local roots enforce the retention window implicitly (the k-2
-            # segment is renamed into k's slot by the recycle path); URI
-            # stores skip recycling, so delete k-2 explicitly or an
-            # object-store run accumulates one full state vector per
-            # partition per superstep (retention window stays: k, k-1)
-            fsio.rmtree(lay.state_dir(k - 2))
+        if k >= 2:
+            # retention window 2, as for the state: k+1 reads k's exchange
+            fsio.rmtree(lay.exchange_dir(k - 2))
+            if fsio.is_uri(store.root):
+                # local roots recycle the k-2 state segment into k's slot;
+                # URI stores skip recycling, so delete it explicitly or an
+                # object-store run accumulates one full state vector per
+                # partition per superstep
+                fsio.rmtree(lay.state_dir(k - 2))
         history.append(metrics)
         last = k
         if converged:
             break
 
-    if kernel.transient and fsio.is_uri(store.root):
-        fsio.rmtree(os.path.join(lay.run_dir, kernel.transient))
     return GraphRun(_state_df(kernel, run, last), run_id, last, converged, history, resumed_from)

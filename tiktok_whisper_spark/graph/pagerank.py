@@ -27,14 +27,15 @@ Scatter modes, one recurrence:
   is ONE small DataFrame job whose tasks gather + update their rank
   segments in NumPy and emit one metrics row per partition; only the
   tool-hub (remote) contributions — a handful of rows per shard after
-  pre-reduction — cross partitions, via a driver-merged dict. Durable
-  per-superstep checkpoints are *inherent*: the superstep output IS the
-  checkpoint.
+  pre-reduction — cross partitions, as exchange segments addressed to the
+  partition owning each hub. Durable per-superstep checkpoints are
+  *inherent*: the superstep output IS the checkpoint.
 * ``csr`` (default) — the same engine for graphs with no locality hint
   (similarity/duplicate graphs): every vertex is its own home, so the
   state is hash-partitioned by ``vid`` and an edge is local when both
   endpoints hash to one partition; every other edge's contribution is
-  pre-reduced per destination and relayed through the driver dict.
+  pre-reduced per destination and sent to its owner through the same
+  exchange.
 * ``sql`` — the plain DataFrame path through ``graph.runner``: salted
   scatter join (hub-key splitting via broadcast joins) and a Catalyst
   ``groupBy(dst).sum`` gather; the tests' oracle for the file engine.
@@ -56,7 +57,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.catalog import CheckpointStore
-from .filesteps import Kernel, Run, load_compiled, positions, read_state_part, run_local
+from .filesteps import Kernel, Run, positions, read_state_part, run_local
 from .runner import GraphRun, run_supersteps
 from .scatter import prepare_edges, scatter_gather
 
@@ -84,7 +85,7 @@ def pagerank(
     init-independent; fixed-iteration oracles replay the same trajectory).
     Seeds must exist in the graph (raises otherwise — a silent miss would
     leak rank mass). All scatter modes support it; the seed set rides as a
-    sorted array in the per-superstep params file (local/csr) or a
+    sorted array in the kernel the superstep tasks receive (local/csr) or a
     broadcast-sized codegen predicate (sql), never a per-row Python call.
 
     Every mode commits every superstep: under local and csr each
@@ -321,11 +322,13 @@ class _PageRankFiles(Kernel):
     """Home-keyed PageRank on the file-superstep engine (conversation homes
     in local mode, ``home = vid`` in csr mode).
 
-    Each task reads its partition's compiled arrays and the previous rank
-    segment, computes the full local gather + rank update in NumPy, and
-    reports the contributions along its REMOTE edges (turn→tool under
-    conversation homes) pre-reduced to one row per destination; the driver
-    merges them into the dict the next superstep applies.
+    Each task reads its partition's compiled arrays, the previous rank
+    segment and the partials other partitions sent it, computes the full
+    local gather + rank update in NumPy, and sends the contributions along
+    its REMOTE edges (turn→tool under conversation homes), pre-reduced to
+    one ``(dst, c)`` row per destination, to the partition owning ``dst``.
+    The owner adds each sender's partials in ascending sender order, so the
+    float summation order does not depend on task packing.
 
     Compiled per partition, once, from the static file and the edge shard:
     the dangling flags, each edge's transition probability, and the
@@ -333,22 +336,22 @@ class _PageRankFiles(Kernel):
     (``pos[codes]``) — a superstep's gather is one rank fancy-index +
     in-place multiply + one bincount straight into the vid-indexed vector,
     with no vertex-sized aligned temp and no scatter pass. Remote edges keep
-    their destination codes and ids for the pre-reduction.
+    their destination codes, ids and owner partitions for the pre-reduction.
     """
 
     name = "pagerank"
     tag = "aligned"
-    version = "v3"
+    version = "v4"
     dtype = np.float64
     arrays = (
         "dang", "epos_src_local", "epos_dst_local", "p_local",
-        "epos_src_remote", "p_remote", "dst_codes_remote", "dst_uniq_remote",
+        "epos_src_remote", "p_remote", "dst_codes_remote", "dst_uniq_remote", "owner_remote",
     )
     metrics_schema = (
         "n_rows long, checksum long, delta_max double, dangling_sum double, "
         "total_mass double, active long"
     )
-    exchange_schema = "dst long, c double"
+    segment = ((np.int64, np.float64),)  # (dst, c) partials
     state_schema = "vid long, home long, rank double, prev_rank double, dangling boolean"
     meta = {"weights": "norm"}
 
@@ -411,31 +414,16 @@ class _PageRankFiles(Kernel):
             )
 
     def params(self, carry: dict, k: int) -> dict:
-        if k == 0:
-            return {}
-        rv = sorted((int(h), float(c)) for h, c in carry["remote"].items())
-        return {
-            "dangling_sum": carry["dangling_sum"],
-            "rvids": [h for h, _ in rv],
-            "rvals": [c for _, c in rv],
-        }
+        return {"dangling_sum": carry["dangling_sum"]} if k else {}
 
-    def combine(self, run: Run, rows: list[dict], exchange: list[dict], carry: dict,
-                k: int) -> tuple[dict, dict, bool]:
-        remote: dict[int, float] = {}
-        for r in exchange:
-            remote[int(r["dst"])] = remote.get(int(r["dst"]), 0.0) + float(r["c"])
+    def combine(self, rows: list[dict], carry: dict, k: int) -> tuple[dict, dict, bool]:
         delta_max = max(r["delta_max"] for r in rows)
         metrics = {
             "delta_max": delta_max,
             "total_mass": sum(r["total_mass"] for r in rows),
             "active_vertices": sum(r["active"] for r in rows),
         }
-        carry = {
-            "dangling_sum": sum(r["dangling_sum"] for r in rows),
-            "remote": {str(h): c for h, c in remote.items()},
-            "ppr_crc": self.seed_crc,
-        }
+        carry = {"dangling_sum": sum(r["dangling_sum"] for r in rows), "ppr_crc": self.seed_crc}
         return metrics, carry, delta_max < self.tol
 
     def compile(self, st, vids, shard, pid: int) -> dict[str, np.ndarray]:
@@ -454,6 +442,7 @@ class _PageRankFiles(Kernel):
             else:
                 out["dst_codes_remote"] = dst_codes.astype(np.int32)
                 out["dst_uniq_remote"] = dst_uniq
+                out["owner_remote"] = shard["owner"]
         return out
 
     def decode(self, prm: dict) -> dict:
@@ -465,22 +454,16 @@ class _PageRankFiles(Kernel):
             # vertices — seed_add pre-folds (1-d)+d·D over |S|
             "seeds": None if self.seeds is None else np.asarray(self.seeds, dtype=np.int64),
             "seed_add": ((1.0 - d) + d * dsum) / len(self.seeds) if self.seeds else 0.0,
-            # hub contributions as sorted parallel arrays: applied per
-            # partition with ONE np.searchsorted against the (sorted) static
-            # vids — no per-hub Python loop, no vertex-sized hash reindex
-            "rvids": np.asarray(prm["rvids"], dtype=np.int64),
-            "rvals": np.asarray(prm["rvals"], dtype=np.float64),
         }
 
-    def init(self, lay, pid, st, prm):
-        al = load_compiled(self, lay, pid)
+    def init(self, pid, al, prm):
         ranks = np.full(len(al["vids"]), 1.0 / prm["n"])
         m = _part_metrics(ranks, ranks, al["dang"], self.tol, al["crc"])
         m["delta_max"] = 0.0
         m["active"] = 0
-        return ranks, m, self.remote_sums(al, ranks)
+        return ranks, m, [self.remote_sums(al, ranks)]
 
-    def update(self, lay, pid, al, ranks, prm, mk):
+    def update(self, pid, al, ranks, prm, incoming, mk):
         d, vids = self.damping, al["vids"]
         t0 = time.perf_counter()
         if al["epos_src_local"] is not None:
@@ -500,40 +483,31 @@ class _PageRankFiles(Kernel):
             hit = np.asarray(vids[pos] == seeds_np)
             if hit.any():
                 new_rank[pos[hit]] += prm["seed_add"]
-        rvids, rvals = prm["rvids"], prm["rvals"]
-        if len(rvids):
-            pos = np.minimum(np.searchsorted(vids, rvids), len(vids) - 1)
-            hit = np.asarray(vids[pos] == rvids)
-            if hit.any():
-                new_rank[pos[hit]] += d * rvals[hit]
+        # remote partials, one pre-reduced (dst, c) set per sender, added in
+        # ascending sender order against the (sorted) static vids
+        for (dst, c), in incoming:
+            if len(dst):
+                new_rank[positions(vids, dst, pid, "pagerank exchange")] += d * c
         mk("remote_align", t0)
         t0 = time.perf_counter()
         m = _part_metrics(new_rank, ranks, al["dang"], self.tol, al["crc"])
         mk("metrics", t0)
         t0 = time.perf_counter()
-        exch = self.remote_sums(al, new_rank)
+        outgoing = [self.remote_sums(al, new_rank)]
         mk("rpartials", t0)
-        return new_rank, m, exch
+        return new_rank, m, outgoing
 
     @staticmethod
-    def remote_sums(al: dict, ranks: np.ndarray) -> pd.DataFrame | None:
-        """Pre-reduced contributions ``(dst, c)`` along the REMOTE edges."""
+    def remote_sums(al: dict, ranks: np.ndarray):
+        """Pre-reduced contributions ``(dst, c)`` along the REMOTE edges,
+        routed to the owner of ``dst``."""
         if al["epos_src_remote"] is None:
             return None
         g = ranks[al["epos_src_remote"]]
         np.multiply(g, al["p_remote"], out=g)
         dst_uniq = al["dst_uniq_remote"]
         sums = np.bincount(al["dst_codes_remote"], weights=g, minlength=len(dst_uniq))
-        return pd.DataFrame({"dst": np.asarray(dst_uniq), "c": sums})
-
-    def merge(self, parts: list[pd.DataFrame], k: int) -> pd.DataFrame:
-        out = pd.concat(parts, ignore_index=True)
-        if k == 0:
-            # superstep 0 keeps one row per (partition, hub), so the driver
-            # adds the initial hub sums in pid order whatever the task
-            # packing — the float order the lineage checksums pin
-            return out
-        return out.groupby("dst", as_index=False)["c"].sum()
+        return al["owner_remote"], (dst_uniq, sums)
 
     @staticmethod
     def state_frame(st, state: np.ndarray) -> dict:
