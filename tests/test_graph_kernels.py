@@ -649,13 +649,12 @@ def test_transcript_graph_all_kernels(spark, transcript_edges):
     assert {r["vid"]: r["triangles"] for r in tri.per_vertex.collect()} == want_pv
 
 
-@pytest.mark.parametrize("leaves_to_hub", [True, False])
-def test_cc_local_star_with_minimum_hub_matches_oracle(spark, tmp_path, leaves_to_hub):
+def test_cc_local_star_with_minimum_hub_matches_oracle(spark, tmp_path):
     """A star whose hub holds the component minimum, every leaf in its own
-    home on another partition than the hub: every edge is remote. With
-    leaf→hub edges the leaves learn the hub's label only from its mirror
-    label, which is the hub's label₀ until the first reply arrives — without
-    that default superstep 1 changes nothing and the run would stop there."""
+    home on another partition than the hub, every edge leaf→hub: the leaves
+    learn the hub's label only from its mirror label, which is the hub's
+    label₀ until the first reply arrives — without that default superstep 1
+    changes nothing and the run would stop there."""
     from tiktok_whisper_spark.sources.catalog import CheckpointStore
 
     P = int(spark.conf.get("spark.sql.shuffle.partitions"))
@@ -666,7 +665,7 @@ def test_cc_local_star_with_minimum_hub_matches_oracle(spark, tmp_path, leaves_t
     }
     hub = 1
     leaves = [v for v in sorted(pids) if pids[v] != pids[hub]][:30]
-    triples = [(v, hub, 1.0) if leaves_to_hub else (hub, v, 1.0) for v in leaves]
+    triples = [(v, hub, 1.0) for v in leaves]
     run = connected_components(
         _homed_df(spark, triples, lambda v: v), scatter_mode="local",
         store=CheckpointStore(str(tmp_path / "star")), resume=False,
