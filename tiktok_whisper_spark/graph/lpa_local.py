@@ -26,7 +26,7 @@ per-superstep checkpoints. What differs is the vote semantics (must match
   of b is b itself, its label₀;
 * strict synchrony is preserved: votes and replies sent at superstep k
   carry labels_k and are used at k+1, so labels_k are computed from
-  labels_{k-1} everywhere and init is a single phase.
+  labels_{k-1} everywhere, starting from labels_0 = the vertex ids.
 
 Float caveat: a vote sum on b is the owner's partial plus per-sender
 pre-reduced partials, summed in NumPy, while the DataFrame path reduces
